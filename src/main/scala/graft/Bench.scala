@@ -192,34 +192,33 @@ object Bench {
     // phantom on exactly this shape, and the round-17 record re-ran its 15
     // load-struck segments ONCE, stayed loaded, and the official numbers
     // came out unprovable. Suspects now re-run until every query owns at
-    // least one measurement from a quiet segment (probe ≤ 1.5× the run's
-    // median across ALL passes so far) or the retry cap is spent; if the
+    // least one measurement from a quiet segment (probe ≤ 1.5× the median
+    // of the first two passes' probes) or the retry cap is spent; if the
     // box stays loaded to the cap, the per-query calibration (qcal, item
     // 1b below) still prices each surviving number and `rerun_n` says how
     // much re-measuring happened.
     val rerunCap = sys.env.getOrElse("SPARK_GRAFT_RERUN_CAP", "4").toInt
     var rerunN = 0
     locally {
+      // The quiet bar is fixed before any rerun: a median over the reruns
+      // too would drift up with the very load the reruns are dodging.
+      val probes = passes.flatten.map(_.segCal).filter(_ > 0)
+      val med = if (probes.isEmpty) -1.0 else probes.sorted.apply(probes.size / 2)
       var attempts = 0
-      var more = true
+      var more = med > 0
       while (more && attempts < rerunCap) {
-        val probes = passes.flatten.map(_.segCal).filter(_ > 0)
-        if (probes.isEmpty) more = false
+        val suspect = names.filter { n =>
+          val cals = passes.flatMap(_.find(_.name == n)).map(_.segCal)
+          cals.nonEmpty && cals.forall(c => c > 0 && c > med * 1.5)
+        }
+        if (suspect.isEmpty) more = false
         else {
-          val med = probes.sorted.apply(probes.size / 2)
-          val suspect = names.filter { n =>
-            val cals = passes.flatMap(_.find(_.name == n)).map(_.segCal)
-            cals.nonEmpty && cals.forall(c => c > 0 && c > med * 1.5)
-          }
-          if (suspect.isEmpty) more = false
-          else {
-            attempts += 1
-            rerunN += suspect.size
-            System.err.println(s"[bench] ${suspect.size} queries measured " +
-              s"only under load (probe > 1.5× median, n_jvms=$ambientJvms) " +
-              s"- re-running those segments (attempt $attempts/$rerunCap)")
-            passes :+= runPassOver(suspect)
-          }
+          attempts += 1
+          rerunN += suspect.size
+          System.err.println(s"[bench] ${suspect.size} queries measured " +
+            s"only under load (probe > 1.5× median, n_jvms=$ambientJvms) " +
+            s"- re-running those segments (attempt $attempts/$rerunCap)")
+          passes :+= runPassOver(suspect)
         }
       }
     }

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, ExprId, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo, ExprId, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Max, Min}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.graft.GraftBridge
 import org.apache.spark.sql.types.{DateType, MetadataBuilder, TimestampNTZType, TimestampType}
 
@@ -11,11 +14,17 @@ import org.apache.spark.sql.types.{DateType, MetadataBuilder, TimestampNTZType, 
   *
   * Spark-first design: tables live in the session temp-view catalog (an
   * analyzed LogicalPlan each — nothing is materialized at registration), and
-  * `query` is a Dialect pre-pass followed by `spark.sql`, so every statement
-  * gets Catalyst analysis/optimization (predicate pushdown, column pruning,
-  * join selection, AQE) and Tungsten codegen for free. The returned DataFrame
-  * is lazy; callers choose the action/sink — unlike the reference, which
-  * eagerly materializes a pandas frame per query.
+  * `query` is a Dialect pre-pass, `spark.sql`, then one pass of plan
+  * rewrites over the analyzed plan (reference output naming, the opt-in
+  * symmetric EXCEPT, and the single-partition path for small in-memory
+  * frames), so every statement gets Catalyst analysis/optimization
+  * (predicate pushdown, column pruning, join selection, AQE) and Tungsten
+  * codegen for free. The single-partition path runs a plan whose leaves
+  * are all `LocalRelation`s, together at most
+  * `spark.sql.autoBroadcastJoinThreshold`, as one job with no Exchange
+  * (see [[singlePartition]]). The returned DataFrame is lazy; callers
+  * choose the action/sink — unlike the reference, which eagerly
+  * materializes a pandas frame per query.
   */
 object Engine {
 
@@ -36,9 +45,16 @@ object Engine {
   val SymmetricExceptKey = "spark.graft.compat.symmetricExcept"
 
   /** Parse + plan a SELECT against the registered tables; lazy result.
-    * Reference: `query` (`sql_select_query.py:64-96`). */
-  def query(spark: SparkSession, sql: String): DataFrame =
-    namingParity(symmetricExceptCompat(spark.sql(Dialect.rewrite(sql))))
+    * Reference: `query` (`sql_select_query.py:64-96`). The three plan
+    * rewrites below each map the analyzed plan to a plan; the result is
+    * wrapped in one Dataset, and only when something changed. */
+  def query(spark: SparkSession, sql: String): DataFrame = {
+    val df = spark.sql(Dialect.rewrite(sql))
+    val analyzed = df.queryExecution.analyzed
+    val plan = namingParity(singlePartition(spark,
+      symmetricExceptCompat(spark, analyzed)))
+    if (plan eq analyzed) df else GraftBridge.ofRows(spark, plan)
+  }
 
   /** Opt-in porting compat: the reference's `EXCEPT [DISTINCT]` is a
     * SYMMETRIC difference (rows in exactly one side —
@@ -50,18 +66,89 @@ object Engine {
     * — the branches are each distinct and mutually disjoint, so the union
     * needs no extra dedup shuffle. `EXCEPT ALL` (no reference semantics to
     * mirror) stays ANSI either way. */
-  private def symmetricExceptCompat(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.conf.getOption(SymmetricExceptKey).exists(_.toBoolean)) return df
-    import org.apache.spark.sql.catalyst.plans.logical.{Except, Union}
-    val plan = df.queryExecution.analyzed
+  private def symmetricExceptCompat(spark: SparkSession,
+      plan: LogicalPlan): LogicalPlan =
+    if (!spark.conf.getOption(SymmetricExceptKey).exists(_.toBoolean)) plan
     // transformUp: freshly built Except nodes must not be re-rewritten.
-    val rewritten = plan.transformUp {
+    else plan.transformUp {
       case Except(l, r, false) =>
         Union(Seq(Except(l, r, isAll = false), Except(r, l, isAll = false)),
           byName = false, allowMissingCol = false)
     }
-    if (rewritten eq plan) df else GraftBridge.ofRows(spark, rewritten)
+
+  /** Small in-memory plans run as one job, one stage, one task. The
+    * reference's workload is `query` over registered frames of a few
+    * hundred rows, where Spark's fixed costs dominate: a group-by plans a
+    * shuffle (two jobs and an AQE re-plan between them) and a join plans a
+    * broadcast (a job of its own). The path applies when every leaf,
+    * subqueries included, is a `LocalRelation`, their summed size is at
+    * most `spark.sql.autoBroadcastJoinThreshold` (Spark's own "small
+    * enough to ship whole" bound; `-1` turns the path off along with
+    * broadcasting), and some operator requires a data distribution:
+    *
+    *   - each leaf is wrapped in `Repartition(1, shuffle = false)`; the
+    *     resulting `SinglePartition` satisfies every clustered, all-tuples
+    *     and ordered distribution, so `EnsureRequirements` plans no
+    *     Exchange;
+    *   - each equi-join's inputs get a `SHUFFLE_HASH` hint, so the hash
+    *     table is built inside the one task instead of by a broadcast job;
+    *   - a distinct `EXCEPT`/`INTERSECT` becomes one aggregation over the
+    *     union of its side-tagged inputs. Spark plans them as anti/semi
+    *     joins, which the optimizer pushes below the left leaf's
+    *     `Repartition`, so they would still broadcast.
+    *
+    * Everything else keeps Spark's plan: pure project/filter/limit plans
+    * (which `ConvertToLocalRelation` already runs with zero jobs), top-k
+    * `ORDER BY … LIMIT` (one job already), file-backed, cached, streaming
+    * and mixed plans, and plans that carry their own hints. */
+  private def singlePartition(spark: SparkSession,
+      plan: LogicalPlan): LogicalPlan = {
+    val nodes = plan.collectWithSubqueries { case p => p }
+    val leaves = nodes.filter(_.children.isEmpty)
+    // ORDER BY + LIMIT plans as TakeOrderedAndProject, which needs no
+    // distribution: one job either way, so the rewrite would only add cost.
+    val topK = nodes.collect {
+      case LocalLimit(_, s: Sort) => s
+      case LocalLimit(_, Project(_, s: Sort)) => s
+    }
+    val needsDistribution = nodes.exists {
+      case _: Aggregate | _: Window | _: Join | _: Distinct | _: Deduplicate |
+          _: Union | _: Except | _: Intersect => true
+      case s: Sort => !topK.exists(_ eq s)
+      case _ => false
+    }
+    val small = leaves.forall(_.isInstanceOf[LocalRelation]) &&
+      leaves.map(_.stats.sizeInBytes).sum <=
+        GraftBridge.conf(spark).autoBroadcastJoinThreshold
+    if (!small || !needsDistribution || nodes.exists(_.isInstanceOf[ResolvedHint]))
+      return plan
+    def hint(p: LogicalPlan) = ResolvedHint(p, HintInfo(Some(SHUFFLE_HASH)))
+    plan.transformUpWithSubqueries {
+      case l: LocalRelation => Repartition(1, shuffle = false, l)
+      case j: Join if ExtractEquiJoinKeys.unapply(j).isDefined =>
+        j.copy(left = hint(j.left), right = hint(j.right))
+      case Except(l, r, false) => setAggregate(l, r, intersect = false)
+      case Intersect(l, r, false) => setAggregate(l, r, intersect = true)
+    }
+  }
+
+  /** Distinct `l EXCEPT r` / `l INTERSECT r` as `Aggregate` over
+    * `l UNION ALL r` with each row tagged by its side (1 or 2): a key
+    * whose tags are all 1 is only in `l`; min 1 and max 2 is in both.
+    * Grouping treats nulls as equal, as the set operators do, and the
+    * result keeps `l`'s attributes. */
+  private def setAggregate(l: LogicalPlan, r: LogicalPlan,
+      intersect: Boolean): LogicalPlan = {
+    def tagged(p: LogicalPlan, side: Int) =
+      Project(p.output :+ Alias(Literal(side), "side")(), p)
+    val u = Union(tagged(l, 1), tagged(r, 2))
+    val (keys, side) = (u.output.init, u.output.last)
+    val lo = Alias(Min(side).toAggregateExpression(), "lo")()
+    val hi = Alias(Max(side).toAggregateExpression(), "hi")()
+    val keep =
+      if (intersect) And(EqualTo(lo.toAttribute, Literal(1)), EqualTo(hi.toAttribute, Literal(2)))
+      else EqualTo(hi.toAttribute, Literal(1))
+    Project(l.output, Filter(keep, Aggregate(keys, keys ++ Seq(lo, hi), u)))
   }
 
   /** Reference output-naming conventions, applied as one projection over
@@ -91,16 +178,15 @@ object Engine {
     * marker that survived into a registered result would make a later
     * `select _col0 as x from t` silently clobber `x` back to `_colN` on the
     * chained query→register→query path. */
-  private def namingParity(df: DataFrame): DataFrame = {
-    val analyzed = df.queryExecution.analyzed
-    val out = analyzed.output
+  private def namingParity(plan: LogicalPlan): LogicalPlan = {
+    val out = plan.output
     val names = out.map(_.name)
     // Alias children by exprId, to classify what an auto-generated alias is
     // actually naming (time function vs temporal literal vs other). Collected
     // from EVERY plan node, not just the root: a trailing LIMIT/ORDER BY/set
     // op roots the plan at a non-Project node and the select-list aliases
     // live below it.
-    val aliasChild: Map[ExprId, Expression] = analyzed.collect {
+    val aliasChild: Map[ExprId, Expression] = plan.collect {
       case node => node.expressions.flatMap {
         _.collect { case a: Alias => a.exprId -> a.child }
       }
@@ -133,11 +219,11 @@ object Engine {
       } else a.name
     }
     val marked = out.exists(_.metadata.contains("__autoGeneratedAlias"))
-    if (renamed == names && !marked) df
-    else df.select(out.zip(renamed).map { case (a, nm) =>
+    if (renamed == names && !marked) plan
+    else Project(out.zip(renamed).map { case (a, nm) =>
       val meta = new MetadataBuilder().withMetadata(a.metadata)
         .remove("__autoGeneratedAlias").build()
-      GraftBridge.column(a).as(nm, meta)
-    }: _*)
+      Alias(a, nm)(explicitMetadata = Some(meta))
+    }, plan)
   }
 }

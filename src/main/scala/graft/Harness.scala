@@ -73,7 +73,9 @@ object Harness {
       .withPattern("%d{HH:mm:ss} %-5p %c{1}: %m%n%ex").build()
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(path).toAbsolutePath.getParent)
-    val out = new java.io.PrintWriter(new java.io.FileWriter(path, true))
+    // Truncate: the record's count and benign verdict speak for this run
+    // only, so events from earlier runs must not linger in the file.
+    val out = new java.io.PrintWriter(new java.io.FileWriter(path, false))
     val sink = new AbstractAppender("graft-task-errors", null, layout,
         true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
       override def append(event: LogEvent): Unit = {

@@ -163,12 +163,16 @@ object TextOps {
     * the corpus tokenized THREE times per run; here the token-array frame
     * is computed once and persisted (the [[Dedup.persistSketch]] /
     * releaseSketchCaches contract), and uni/bigram/context counts all read
-    * the cache. Every arithmetic step — count aggregation, the
+    * the cache. The steps follow the SQL form — count aggregation, the
     * (0.8·bg/ctx + 0.2·uni/total) interpolation, the position-sorted
-    * sequential fold, the 4-digit round — is the SQL form's expression
-    * tree verbatim, so the emitted doubles are bit-identical and the
-    * DuckDB oracle hash-match is unchanged. Single-token docs carry no
-    * bigram and drop out, exactly as in the SQL. */
+    * sequential fold, the 4-digit round — but the arithmetic is not the
+    * same: SQL parses 0.8/0.2 as DECIMAL, so `0.8 * bg.cnt` is exact there
+    * and rounds only when it meets the double division, while `lit(0.8)`
+    * here is a double and rounds first. The two can differ in the last
+    * bit before `ln`; the 4-digit round absorbs that, which is why the
+    * DuckDB oracle hash still matches, but the match is measured (Verify
+    * + check_oracle), not guaranteed. Single-token docs carry no bigram
+    * and drop out, exactly as in the SQL. */
   def bigramLogprob(docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String): org.apache.spark.sql.DataFrame = {
     val toksarr = Dedup.persistSketch(docs.select(
@@ -186,18 +190,17 @@ object TextOps {
     val uni = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
     val bg = big.groupBy("prev", "tok").agg(count(lit(1)).as("cnt"))
     val ctx = bg.groupBy("prev").agg(sum("cnt").as("cnt"))
-    // `(select total from n)` in the SQL — a 1-row frame; broadcast join
-    // attaches the identical bigint to every row.
-    val n = uni.agg(sum("cnt").as("total"))
+    // `(select total from n)` in the SQL: a scalar subquery, evaluated once
+    // and inlined as a value, so no join attaches it.
+    val total = uni.agg(sum("cnt")).scalar()
     val scored = big.as("b")
       .join(uni.as("uni"), col("b.tok") === col("uni.tok"))
       .join(ctx.as("ctx"), col("b.prev") === col("ctx.prev"))
       .join(bg.as("bg"),
         col("b.prev") === col("bg.prev") && col("b.tok") === col("bg.tok"))
-      .crossJoin(broadcast(n))
       .select(col("b.doc_id").as("doc_id"), col("b.pos").as("pos"),
         log(lit(0.8) * col("bg.cnt") / col("ctx.cnt") +
-          lit(0.2) * col("uni.cnt") / col("total")).as("lp"))
+          lit(0.2) * col("uni.cnt") / total).as("lp"))
     scored.groupBy("doc_id")
       .agg(transform(
         array_sort(collect_list(struct(col("pos"), col("lp")))),

@@ -368,6 +368,11 @@ object GraftBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The session's SQL conf (`sessionState` is not on the API session). */
+  def conf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
   /** The value beneath a sort Column (`col.desc` → `col`); identity for
     * plain value Columns. Spark 4 models sort order at the ColumnNode
     * level, so this unwrap must happen here, inside the sql package. */
