@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver benchmark contract: run every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
   *
@@ -20,43 +18,10 @@ object Bench {
     val (ambientLoad, stillLoaded) =
       Harness.awaitQuietBox(threshold = 1.0, maxWaitMs = 90000L)
     val ambientJvms = Harness.javaProcessCount
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // 120 queries × several codegen units overflow the default 100-entry
-      // compile cache; evictions turn mid-suite queries cold again and
-      // inject multi-second recompile noise (BENCH_NOTES.md).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // File-split open cost (round 17): the 4 MB default models slow-disk
-      // per-file open overhead and packs every small parquet table into
-      // 1-3 splits — 500 ImageIO decodes measured running on THREE tasks
-      // of a 32-core box, tokenize-heavy SQL at sub-10% core use (QProf,
-      // OPTIMIZATION_r17.md). 128 KB is the fast-storage (NVMe page-cached
-      // / parallel object-store reader) figure; at scale it is inert —
-      // large files split by maxPartitionBytes, and split-packing of many
-      // small files still amortizes opens within a split. Env-overridable
-      // per box like the other scale knobs.
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
-      .config("spark.ui.enabled", "false")
-      // Saturation-guard policy passthrough for scale lanes: the native-sf1
-      // fixture is vocabulary-saturated, where the exact-pair family now
-      // FAILS FAST by default (operators/Dedup.routeOnSaturation). The sf1
-      // recipe sets route so the full map runs on the capped shapes instead
-      // of being excluded (SPARK_GRAFT_SKIP, the round-11 workaround). The
-      // official sf0.1 bench leaves this unset (healthy corpus, guard silent).
-      .config("spark.graft.dedup.saturation.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SATURATION_MODE", "fail"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Known-benign warning spam (WindowExec sub-cutoff global ranks) once
-    // filled 90% of the driver's ~2KB log tail — the JSON line survived
-    // round 8 with little headroom. Same failure family as round 7's
-    // undiagnosable tail: the one parseable line must own the tail.
-    Harness.quietNoisyLoggers()
+    // filled 90% of the driver's ~2KB log tail; the session quiets it
+    // ([[Harness.quietNoisyLoggers]]).
+    val spark = Harness.session(cpus)
     // Task-level error traces route to a FILE and a counter (round 17):
     // the round-16 record opened mid-stack-trace from an expected-poison
     // executor error (the i-series plant corrupt files by design) and the
@@ -74,17 +39,21 @@ object Bench {
     // final tail line can NAME the queries that errored and say whether
     // they are all i-series expected-poison fixtures.
     val taskErrQueries = scala.collection.mutable.LinkedHashMap[String, Int]()
-    def materialize(name: String): Double = {
+    // Each materialization releases the dedup sketch caches it persisted
+    // once its clock has stopped, so pass 2 measures the same cold-sketch
+    // work as pass 1 and MEMORY_AND_DISK does not pile up across passes.
+    def materialize(name: String): Double = operators.Dedup.withSketchCache {
       val e0 = taskErrs.get
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      try {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case _: Throwable => -1.0 }
       finally {
         val d = taskErrs.get - e0
         if (d > 0) taskErrQueries(name) = taskErrQueries.getOrElse(name, 0) + d
       }
-      (System.nanoTime() - t0) / 1e9
     }
 
     // Registration failure must still produce a parseable one-line JSON for
@@ -144,7 +113,7 @@ object Bench {
 
     // SPARK_GRAFT_SKIP: comma-separated query names to exclude — for
     // scale probes on saturated fixtures. Round 12: the saturation guard's
-    // route mode (SPARK_GRAFT_SATURATION_MODE above) replaces the round-11
+    // route mode (SPARK_GRAFT_SATURATION_MODE, [[Harness.session]]) replaces the round-11
     // exclusions; SKIP remains as a debugging escape hatch only, and a
     // non-empty set is LOGGED and recorded in the JSON so a truncated run
     // is self-describing (ADVICE r11).

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -18,96 +18,20 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     branch parenthesization) in front of Spark's ANTLR parser. Only
   *     `parsePlan`/`parseQuery` — the query entry points — rewrite;
   *     identifier/schema/type parsing delegates untouched.
-  *   - Function injection: `graft_dot`, `graft_bitset_common`,
-  *     `graft_sorted_common` become catalog functions (codegen'd native
-  *     expressions, usable from SQL without any registration call).
+  *   - Function injection: every `GraftFunctions.sqlFunctions` entry
+  *     (`graft_dot`, `graft_minhash`, `graft_redact_pii`, …) becomes a
+  *     catalog function, usable from SQL without any registration call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectParser { case (_, delegate) => new DialectParser(delegate) }
 
-    def info(name: String, usage: String) =
-      new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
-
-    e.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - dot product of two array<double>"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.graft.DotProduct(args.head, args(1))))
-    e.injectFunction((FunctionIdentifier("graft_bitset_common"),
-      info("graft_bitset_common",
-        "graft_bitset_common(a, b) - popcount of ANDed array<bigint> bitsets"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.graft.BitsetIntersectCount(args.head, args(1))))
-    e.injectFunction((FunctionIdentifier("graft_sorted_common"),
-      info("graft_sorted_common",
-        "graft_sorted_common(a, b) - intersection size of sorted array<bigint>"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.graft.SortedIntersectCount(args.head, args(1))))
-    // Sketch kernels whose tuning arguments are plan-time constants: the
-    // SQL argument must be a foldable literal (same contract as Spark's
-    // own approx_percentile accuracy argument).
-    def litInt(e: Expression, fn: String, arg: String): Int = {
-      require(e.foldable, s"$fn: $arg must be a literal integer")
-      e.eval().asInstanceOf[Number].intValue()
+    graft.functions.GraftFunctions.sqlFunctions.foreach {
+      case (name, usage, builder) =>
+        e.injectFunction((FunctionIdentifier(name),
+          graft.functions.GraftFunctions.info(name, usage), builder))
     }
-    e.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes",
-        "graft_shingle_hashes(tokens, n) - sorted distinct 64-bit hashes of n-grams of array<string>"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.graft.ShingleHashSet(args.head,
-          litInt(args(1), "graft_shingle_hashes", "n"))))
-    e.injectFunction((FunctionIdentifier("graft_minhash"),
-      info("graft_minhash",
-        "graft_minhash(hashes, k) - k-long MinHash signature of array<bigint>"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.graft.MinHashSig(args.head,
-          litInt(args(1), "graft_minhash", "k"))))
-    e.injectFunction((FunctionIdentifier("graft_simhash"),
-      info("graft_simhash",
-        "graft_simhash(hashes) - 64-bit SimHash of array<bigint> element hashes"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.graft.SimHash64(args.head)))
-    e.injectFunction((FunctionIdentifier("graft_winnow"),
-      info("graft_winnow",
-        "graft_winnow(text, k, w) - winnowing fingerprints (k-gram, window w)"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.graft.WinnowFingerprints(args.head,
-          litInt(args(1), "graft_winnow", "k"),
-          litInt(args(2), "graft_winnow", "w"))))
-    e.injectFunction((FunctionIdentifier("graft_byte_block_hash"),
-      info("graft_byte_block_hash",
-        "graft_byte_block_hash(content) - 64-bit byte-block average-hash of binary"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.graft.ByteBlockHash(args.head)))
-    // Composed-from-built-ins functions inject as catalyst trees built from
-    // the SAME pattern list the Column API uses (a bridged Column
-    // composition would arrive as unresolved ColumnNodes and never
-    // re-resolve mid-analysis).
-    import org.apache.spark.sql.catalyst.expressions.{Add, Cast, Literal, RegExpExtractAll, RegExpReplace, Size}
-    import org.apache.spark.sql.types.LongType
-    def redactExpr(arg: Expression): Expression =
-      graft.operators.TextOps.piiPatterns.foldLeft(arg) {
-        case (acc, (re, tag)) =>
-          RegExpReplace(acc, Literal(re), Literal(tag))
-      }
-    def piiCountExpr(arg: Expression): Expression = {
-      val (_, n) = graft.operators.TextOps.piiPatterns
-        .foldLeft((arg, Literal(0): Expression)) {
-          case ((acc, cnt), (re, tag)) =>
-            (RegExpReplace(acc, Literal(re), Literal(tag)),
-              Add(cnt, Size(RegExpExtractAll(acc, Literal(re), Literal(0)))))
-        }
-      Cast(n, LongType)
-    }
-    e.injectFunction((FunctionIdentifier("graft_redact_pii"),
-      info("graft_redact_pii",
-        "graft_redact_pii(text) - text with email/IP/card/phone matches tagged"),
-      (args: Seq[Expression]) => redactExpr(args.head)))
-    e.injectFunction((FunctionIdentifier("graft_pii_count"),
-      info("graft_pii_count",
-        "graft_pii_count(text) - count of PII matches graft_redact_pii removes"),
-      (args: Seq[Expression]) => piiCountExpr(args.head)))
   }
 }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,24 +10,10 @@ object Verify {
     // driver always calls with exactly two args → full dump).
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE + the fast-storage open cost, matching Bench's session (round
-      // 17; the open-cost rationale lives there) — Verify runs the same
-      // queries and was paying the same 1-3-split under-parallelism.
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The driver reads this run's log tail too — keep by-design warning
-    // spam (WindowExec sub-cutoff ranks) out of it ([[Harness]] doc).
-    Harness.quietNoisyLoggers()
+    // Bench's session, so Verify checks the conf the bench measures; the
+    // driver reads this run's log tail too, and the session keeps
+    // by-design warning spam out of it ([[Harness]] doc).
+    val spark = Harness.session(cpus)
     // Expected-poison task errors (the i-series plant corrupt files by
     // design; i5 probes the engine's OWN gate layers) route to a counted
     // file here too, so the driver's tail stays adjudicable — the same
@@ -58,9 +43,13 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      // Each dump releases the dedup sketch caches it persisted, so
+      // MEMORY_AND_DISK does not pile up across the map.
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        operators.Dedup.withSketchCache {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        }
         ok += 1
       } catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)

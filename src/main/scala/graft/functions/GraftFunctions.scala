@@ -1,23 +1,87 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Add, Cast, Expression, ExpressionInfo, Literal, RegExpExtractAll, RegExpReplace, Size}
 import org.apache.spark.sql.graft.{BitsetIntersectCount, ByteBlockHash, DotProduct, GraftBridge, MinHashSig, RollingHashes, ShingleHashSet, SimHash64, SortedIntersectCount, WinnowFingerprints}
+import org.apache.spark.sql.types.LongType
 
 /** Public registration + Column-API access for graft's native Catalyst
   * expressions (see org.apache.spark.sql.graft for the implementations). */
 object GraftFunctions {
 
-  /** Make the graft expressions callable from SQL in this session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bitset_common",
-      exprs => BitsetIntersectCount(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_common",
-      exprs => SortedIntersectCount(exprs.head, exprs(1)), "built-in")
+  /** Every graft SQL function as (name, usage, builder). [[register]] and
+    * [[graft.GraftExtensions]] both iterate this one table, so a
+    * `Tables.ensure` session and an extensions session expose the same
+    * functions. */
+  val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = {
+    // Sketch kernels whose tuning arguments are plan-time constants: the
+    // SQL argument must be a foldable literal (same contract as Spark's
+    // own approx_percentile accuracy argument).
+    def litInt(e: Expression, fn: String, arg: String): Int = {
+      require(e.foldable, s"$fn: $arg must be a literal integer")
+      e.eval().asInstanceOf[Number].intValue()
+    }
+    // Composed-from-built-ins functions build catalyst trees from the SAME
+    // pattern list the Column API uses (a bridged Column composition would
+    // arrive as unresolved ColumnNodes and never re-resolve mid-analysis).
+    val pii = graft.operators.TextOps.piiPatterns
+    def redactExpr(arg: Expression): Expression =
+      pii.foldLeft(arg) { case (acc, (re, tag)) =>
+        RegExpReplace(acc, Literal(re), Literal(tag))
+      }
+    def piiCountExpr(arg: Expression): Expression = {
+      val (_, n) = pii.foldLeft((arg, Literal(0): Expression)) {
+        case ((acc, cnt), (re, tag)) =>
+          (RegExpReplace(acc, Literal(re), Literal(tag)),
+            Add(cnt, Size(RegExpExtractAll(acc, Literal(re), Literal(0)))))
+      }
+      Cast(n, LongType)
+    }
+    Seq(
+      ("graft_dot", "graft_dot(a, b) - dot product of two array<double>",
+        a => DotProduct(a.head, a(1))),
+      ("graft_bitset_common",
+        "graft_bitset_common(a, b) - popcount of ANDed array<bigint> bitsets",
+        a => BitsetIntersectCount(a.head, a(1))),
+      ("graft_sorted_common",
+        "graft_sorted_common(a, b) - intersection size of sorted array<bigint>",
+        a => SortedIntersectCount(a.head, a(1))),
+      ("graft_shingle_hashes",
+        "graft_shingle_hashes(tokens, n) - sorted distinct 64-bit hashes of n-grams of array<string>",
+        a => ShingleHashSet(a.head, litInt(a(1), "graft_shingle_hashes", "n"))),
+      ("graft_minhash",
+        "graft_minhash(hashes, k) - k-long MinHash signature of array<bigint>",
+        a => MinHashSig(a.head, litInt(a(1), "graft_minhash", "k"))),
+      ("graft_simhash",
+        "graft_simhash(hashes) - 64-bit SimHash of array<bigint> element hashes",
+        a => SimHash64(a.head)),
+      ("graft_winnow",
+        "graft_winnow(text, k, w) - winnowing fingerprints (k-gram, window w)",
+        a => WinnowFingerprints(a.head, litInt(a(1), "graft_winnow", "k"),
+          litInt(a(2), "graft_winnow", "w"))),
+      ("graft_byte_block_hash",
+        "graft_byte_block_hash(content) - 64-bit byte-block average-hash of binary",
+        a => ByteBlockHash(a.head)),
+      ("graft_redact_pii",
+        "graft_redact_pii(text) - text with email/IP/card/phone matches tagged",
+        a => redactExpr(a.head)),
+      ("graft_pii_count",
+        "graft_pii_count(text) - count of PII matches graft_redact_pii removes",
+        a => piiCountExpr(a.head)))
   }
+
+  /** Catalog entry of a [[sqlFunctions]] row. */
+  def info(name: String, usage: String): ExpressionInfo =
+    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "",
+      "built-in")
+
+  /** Make the graft SQL functions callable in this session. */
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, usage, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(
+        FunctionIdentifier(name), info(name, usage), builder)
+    }
 
   /** Codegen'd dot product over two array<double> columns. */
   def dot(a: Column, b: Column): Column =

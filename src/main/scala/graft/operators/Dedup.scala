@@ -369,7 +369,7 @@ object Dedup {
     // run anyway ([[SaturationModeKey]] = off).
     if (routeOnSaturation(prefix, nDocs, "Dedup.exactJaccard"))
       jaccardVerify(bandedCandidates(docsets, bands = 16, rowsPerBand = 4,
-        maxBucket = saturationMaxBucket(docsets.sparkSession)), docsets)
+        maxBucket = SaturationMaxBucket), docsets)
     else {
       val cands = prefix.as("a").join(prefix.as("b"),
           col("a.h") === col("b.h") && col("a.id") < col("b.id"))
@@ -1110,8 +1110,8 @@ object Dedup {
   val SaturationMaxPostingsKey = "spark.graft.dedup.saturation.maxPostings"
 
   /** `route` mode, [[exactJaccard]]: the banded-candidate bucket cap
-    * (default 10000 — [[minhashLsh]]'s default). */
-  val SaturationMaxBucketKey = "spark.graft.dedup.saturation.maxBucket"
+    * ([[minhashLsh]]'s default). */
+  val SaturationMaxBucket = 10000
 
   /** [[simhashFold]]'s auto-route chunk-bucket cap (default 512). Tighter
     * than the banded-minhash cap because the fold's cost is the COMPONENTS
@@ -1135,9 +1135,6 @@ object Dedup {
     * `2147483647` (Int.MaxValue) disables the split AND the bucket
     * census, restoring the plain one-key-per-bucket self-join. */
   val HammingBlockRowsKey = "spark.graft.dedup.hammingBlockRows"
-
-  private def saturationMaxBucket(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.get(SaturationMaxBucketKey, "10000").toInt
 
   /** Evaluate the pre-flight guard over a derived prefix frame: false when
     * the mode is `off` or the corpus is healthy (run the exact join), true
@@ -1654,7 +1651,7 @@ object Dedup {
     *      [[hammingSaturation]] probe over the rep signatures decides the
     *      regime, and past the bar ([[SaturationBarKey]], default
     *      [[NdPrefixSaturationWarnThreshold]]) the chunk-bucket join runs
-    *      CAPPED ([[SaturationMaxBucketKey]]) — on saturated all-distinct
+    *      CAPPED ([[SaturationFoldMaxBucketKey]]) — on saturated all-distinct
     *      content the collapse removes nothing and the true Hamming pair
     *      list is ~all-pairs, so components would resolve a quadratic edge
     *      set for a kept-set answer that capping approximates at bounded

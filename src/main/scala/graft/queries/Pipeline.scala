@@ -1632,8 +1632,8 @@ object Pipeline {
       Some("select cast(0 as bigint) as parity_violations")) { (s, dir) =>
       val emb = s.table("embeddings")
       val idx = pqIndexFor(s, dir, emb.where(col("vec_id") >= 10))
-      // The symmetric exceptAll reads `probed` twice; measured (S6bProbe,
-      // sf0.1): the double scan (~2.7 s warm) still beats both a
+      // The symmetric exceptAll reads `probed` twice; measured at sf0.1
+      // (BENCH_NOTES "Retired probes", S6bProbe): the double scan (~2.7 s warm) still beats both a
       // localCheckpoint of the probe (~2.9) and a single-scan full-outer
       // count-diff (~3.9) — at top-k-sized frames the wrapper's JIT/AQE
       // overhead dominates, so the straightforward shape stays.

@@ -1315,25 +1315,23 @@ object Sink {
     // within-file order, not tight boxes.
     if (format == "parquet" &&
         readClusterSpec(fs, root).exists(_.kind == "z")) {
-      val bar = spark.conf.get(ReclusterBarKey, "4.0").toDouble
       val decay = clusterDecay(spark, path)
-      if (decay > bar) log.warn(
-        f"Sink.compact: cluster decay $decay%.1f exceeds $bar%.1f at " +
+      if (decay > ReclusterBar) log.warn(
+        f"Sink.compact: cluster decay $decay%.1f exceeds $ReclusterBar%.1f at " +
           s"$path — the z-curve has decayed beyond what per-leaf " +
           "rewrites restore; run Sink.recluster (flat layouts) or " +
           "Sink.reclusterPartitioned (partitioned layouts, or any " +
           "layout on a copy-rename store)")
       else log.info(f"Sink.compact: cluster decay $decay%.1f " +
-        f"(recluster bar $bar%.1f) at $path")
+        f"(recluster bar $ReclusterBar%.1f) at $path")
     }
     CompactStats(seen.get, rewritten.get, before.get, after.get,
       abortedN.get)
   }
 
-  /** Conf key for the [[clusterDecay]] warning bar [[compact]] logs
-    * against on z layouts (default 4.0 ≈ three full-range unclustered
-    * appends' worth of decay). */
-  val ReclusterBarKey = "spark.graft.recluster.bar"
+  /** The [[clusterDecay]] warning bar [[compact]] logs against on z
+    * layouts (≈ three full-range unclustered appends' worth of decay). */
+  val ReclusterBar = 4.0
 
   /** Finish or roll back [[compact]] swaps a crash interrupted, in BOTH
     * commit modes. Rename-mode states: a complete copy

@@ -15,15 +15,12 @@ import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Native Catalyst expression for the vector hot path: dot product over
-  * `array<double>`. A codegen'd tight loop over `ArrayData` — stays inside
-  * whole-stage codegen, no per-element Catalyst HOF dispatch, no boxing.
-  * Replacing the equivalent `aggregate(zip_with(...))` higher-order
-  * expression cut brute-force all-pairs cosine from ~168 s to seconds at
-  * sf0.1 (2 M pairs × 64 dims).
-  *
-  * Accumulation is sequential in index order — bit-identical to the naive
-  * loop (and to DuckDB's `list_cosine_similarity` numerator), which the
-  * oracle hash-compare relies on.
+  * `array<double>`. A tight loop over `ArrayData` ([[VectorKernels.dot]],
+  * called from whole-stage codegen) — no per-element Catalyst HOF
+  * dispatch, no boxing. Replacing the equivalent `aggregate(zip_with(...))`
+  * higher-order expression cut brute-force all-pairs cosine from ~168 s to
+  * seconds at sf0.1 (2 M pairs × 64 dims). Accumulation order is pinned in
+  * the kernel: the oracle hash-compare relies on it.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -37,30 +34,12 @@ case class DotProduct(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_dot"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $x.getDouble($i) * $y.getDouble($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (x, y) =>
+      s"org.apache.spark.sql.graft.VectorKernels.dot($x, $y)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -68,7 +47,8 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 /** Popcount of the intersection of two bitsets stored as `array<bigint>`
-  * word vectors: Σ bit_count(a[w] & b[w]). Codegen'd loop — the per-pair
+  * word vectors: Σ bit_count(a[w] & b[w]) ([[VectorKernels.bitsetCommon]])
+  * — the per-pair
   * kernel of bitset-encoded exact set intersection (Dedup.exactJaccard's
   * small-dictionary path). */
 case class BitsetIntersectCount(left: Expression, right: Expression)
@@ -83,33 +63,13 @@ case class BitsetIntersectCount(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_bitset_common"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      s += java.lang.Long.bitCount(x.getLong(i) & y.getLong(i))
-      i += 1
-    }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.bitsetCommon(
+      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += java.lang.Long.bitCount($x.getLong($i) & $y.getLong($i));
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (x, y) =>
+      s"org.apache.spark.sql.graft.VectorKernels.bitsetCommon($x, $y)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -117,7 +77,7 @@ case class BitsetIntersectCount(left: Expression, right: Expression)
 }
 
 /** Intersection size of two ASCENDING-sorted `array<bigint>` sets via a
-  * codegen'd linear merge: O(|a|+|b|), no allocation. Verification kernel
+  * linear merge ([[VectorKernels.sortedCommon]]): O(|a|+|b|), no allocation. Verification kernel
   * for set-similarity candidates (Dedup.exactJaccard) where the sets are
   * 64-bit shingle hashes. Inputs MUST be duplicate-free and sorted. */
 case class SortedIntersectCount(left: Expression, right: Expression)
@@ -132,14 +92,61 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_sorted_common"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (nx, ny) = (x.numElements(), y.numElements())
-    var (i, j) = (0, 0)
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.sortedCommon(
+      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) =>
+      s"org.apache.spark.sql.graft.VectorKernels.sortedCommon($x, $y)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** The one JVM implementation of every vector expression in this file —
+  * static methods, so the interpreted `nullSafeEval` and the codegen
+  * template call the same compiled loop (the NearestCentroid/SketchKernels
+  * pattern). PQ: `cb(j)(c)` is centroid `c` of contiguous subspace `j`;
+  * subspace widths come from the centroids themselves, so a dimension that
+  * doesn't divide evenly just gives the last subspace the remainder. */
+object VectorKernels {
+
+  /** Σ x(i)·y(i) over the shorter operand's length. Accumulation is
+    * sequential in index order — bit-identical to the naive loop (and to
+    * DuckDB's `list_cosine_similarity` numerator), which the oracle
+    * hash-compare relies on; do not reassociate or unroll it. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
+    s
+  }
+
+  /** Σ bit_count(x(w) & y(w)) over the shorter operand's word count. */
+  def bitsetCommon(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0L
+    var i = 0
+    while (i < n) {
+      s += java.lang.Long.bitCount(x.getLong(i) & y.getLong(i))
+      i += 1
+    }
+    s
+  }
+
+  /** |x ∩ y| of two ascending, duplicate-free sets by linear merge. */
+  def sortedCommon(x: ArrayData, y: ArrayData): Long = {
+    val nx = x.numElements()
+    val ny = y.numElements()
+    var i = 0
+    var j = 0
     var s = 0L
     while (i < nx && j < ny) {
-      val (u, v) = (x.getLong(i), y.getLong(j))
+      val u = x.getLong(i)
+      val v = y.getLong(j)
       if (u == v) { s += 1; i += 1; j += 1 }
       else if (u < v) i += 1
       else j += 1
@@ -147,39 +154,15 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val u = ctx.freshName("u")
-      val v = ctx.freshName("v")
-      val s = ctx.freshName("s")
-      s"""
-         |int $nx = $x.numElements(); int $ny = $y.numElements();
-         |int $i = 0; int $j = 0; long $s = 0L;
-         |while ($i < $nx && $j < $ny) {
-         |  long $u = $x.getLong($i); long $v = $y.getLong($j);
-         |  if ($u == $v) { $s++; $i++; $j++; }
-         |  else if ($u < $v) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Shared JVM kernels for the product-quantization expressions below —
-  * static methods so the codegen templates call straight into compiled
-  * code (the NearestCentroid/SketchKernels pattern). `cb(j)(c)` is centroid
-  * `c` of contiguous subspace `j`; subspace widths come from the centroids
-  * themselves, so a dimension that doesn't divide evenly just gives the
-  * last subspace the remainder. */
-object VectorKernels {
+  /** Σ_j lut(j·ksub + codes(j)), ksub = |lut| / |codes|. */
+  def pqScore(codes: ArrayData, lut: ArrayData): Double = {
+    val m = codes.numElements()
+    val ksub = lut.numElements() / m
+    var s = 0.0
+    var j = 0
+    while (j < m) { s += lut.getDouble(j * ksub + codes.getInt(j)); j += 1 }
+    s
+  }
 
   /** PQ encode: per subspace, the index of the L2-nearest centroid of the
     * corresponding contiguous subvector. */
@@ -307,8 +290,8 @@ case class PqLut(child: Expression, cb: Seq[Seq[Seq[Double]]])
 }
 
 /** PQ asymmetric score: Σ_j lut(j·ksub + codes(j)) ≈ q·x, the per-pair hot
-  * loop of the compressed-corpus scan — m lookups per pair, codegen'd
-  * inline (no subvector arithmetic at scan time). ksub is recovered from
+  * loop of the compressed-corpus scan — m lookups per pair
+  * ([[VectorKernels.pqScore]]; no subvector arithmetic at scan time). ksub is recovered from
   * the operand shapes, so one expression serves any codebook geometry. */
 case class PqScore(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -320,33 +303,12 @@ case class PqScore(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_pq_score"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val codes = a.asInstanceOf[ArrayData]
-    val lut = b.asInstanceOf[ArrayData]
-    val m = codes.numElements()
-    val ksub = lut.numElements() / m
-    var s = 0.0
-    var j = 0
-    while (j < m) { s += lut.getDouble(j * ksub + codes.getInt(j)); j += 1 }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.pqScore(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (codes, lut) => {
-      val j = ctx.freshName("j")
-      val m = ctx.freshName("m")
-      val ks = ctx.freshName("ks")
-      val s = ctx.freshName("s")
-      s"""
-         |int $m = $codes.numElements();
-         |int $ks = $lut.numElements() / $m;
-         |double $s = 0.0;
-         |for (int $j = 0; $j < $m; $j++) {
-         |  $s += $lut.getDouble($j * $ks + $codes.getInt($j));
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (codes, lut) =>
+      s"org.apache.spark.sql.graft.VectorKernels.pqScore($codes, $lut)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan evidence for the IVF pair-scoring stage (round 18, VERDICT r17
   * item 7): the d11/d15/d15b committed query plans hide the pair stage
   * behind the component-resolution RDD boundary, so the round-17 d15b
@@ -18,19 +16,7 @@ object PairPlanProbe {
     val plansDir = args.headOption.getOrElse("plans/r18")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Harness.quietNoisyLoggers()
+    val spark = graft.Harness.session(cpus, graft.Harness.extraConf)
     graft.Tables.ensure(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(plansDir))
 

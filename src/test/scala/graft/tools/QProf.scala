@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Per-query profiler for the optimization rounds: for each named query,
@@ -10,6 +9,9 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * `.explain("formatted")` to a file. Test-tree only — not shipped.
   *
   *   sbt "Test/runMain graft.tools.QProf <name[,name...]|all> [plansDir]"
+  *
+  * `SPARK_GRAFT_EXTRA_CONF="k=v;k=v"` overlays the session conf
+  * ([[graft.Harness.extraConf]]), as in every dev tool.
   */
 object QProf {
   def main(args: Array[String]): Unit = {
@@ -17,29 +19,7 @@ object QProf {
     val plansDir = args.drop(1).headOption
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.dedup.saturation.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SATURATION_MODE", "fail"))
-    // Conf A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overlays session conf
-    // so config experiments don't need a recompile per trial.
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").map(_.trim).filter(_.contains("="))
-        .foldLeft(builder0) { (b, kv) =>
-          val Array(k, v) = kv.split("=", 2); b.config(k, v)
-        })
-      .getOrElse(builder0)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Harness.quietNoisyLoggers()
+    val spark = graft.Harness.session(cpus, graft.Harness.extraConf)
     graft.Tables.ensure(spark, sfDir)
 
     val jobs = new AtomicInteger(0)

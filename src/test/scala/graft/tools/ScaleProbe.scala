@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev scale-up probe: replicate sf0.1 tables REP× with distinct ids and
@@ -20,23 +20,7 @@ object ScaleProbe {
       only.isEmpty || only.exists(name.contains)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-    // Conf A/B hook (QProf's): SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overlays
-    // session conf so shape experiments don't need a recompile per trial.
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").map(_.trim).filter(_.contains("="))
-        .foldLeft(builder0) { (b, kv) =>
-          val Array(k, v) = kv.split("=", 2); b.config(k, v)
-        })
-      .getOrElse(builder0)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(cpus, graft.Harness.extraConf)
     graft.Tables.ensure(spark, sfDir)
 
     def replicate(table: String, idCols: Seq[String]): DataFrame = {
@@ -984,7 +968,8 @@ object ScaleProbe {
         // probe scans) stays flat while raw rows pile up: the self-heal
         // signature, with flat per-batch cost and zero retrains. The
         // distinct-vector drift sawtooth (rebuild fires, imbalance drops,
-        // nlist grows) is SemLoopRebuildProbe + QuantizerDriftSpec.
+        // nlist grows) is QuantizerDriftSpec (and the retired
+        // SemLoopRebuildProbe, BENCH_NOTES "Retired probes").
         val imb = graft.operators.Similarity.listImbalance(st.index.assigned)
         val repImb = graft.operators.Similarity.listImbalance(
           st.index.assigned.where(col("rep")))

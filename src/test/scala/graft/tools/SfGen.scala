@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Native-cardinality dbgen-style synthesizer (round-11 punch list item 8):
@@ -40,13 +40,7 @@ object SfGen {
     val sf = args.headOption.map(_.toDouble).getOrElse(1.0)
     val out = args.drop(1).headOption.getOrElse(s"/tmp/graft_sf$sf")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(cpus, graft.Harness.extraConf)
     import spark.implicits._
 
     val nCust = (150000 * sf).toLong max 1
