@@ -113,10 +113,10 @@ object Bench {
 
     // SPARK_GRAFT_SKIP: comma-separated query names to exclude — for
     // scale probes on saturated fixtures. Round 12: the saturation guard's
-    // route mode (SPARK_GRAFT_SATURATION_MODE, [[Harness.session]]) replaces the round-11
-    // exclusions; SKIP remains as a debugging escape hatch only, and a
-    // non-empty set is LOGGED and recorded in the JSON so a truncated run
-    // is self-describing (ADVICE r11).
+    // route mode (SPARK_GRAFT_SATURATION_MODE, [[Harness.session]])
+    // replaces the round-11 exclusions; SKIP remains as a debugging escape
+    // hatch only, and a non-empty set is LOGGED and recorded in the JSON so
+    // a truncated run is self-describing (ADVICE r11).
     val skip = sys.env.get("SPARK_GRAFT_SKIP")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])

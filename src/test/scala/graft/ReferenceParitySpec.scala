@@ -349,6 +349,12 @@ class ReferenceParitySpec extends SparkSpecBase {
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       assert(ext ne prev)
+      // One function table: the Tables.ensure session and the extensions
+      // session expose the same graft functions.
+      graft.functions.GraftFunctions.sqlFunctions.foreach { case (name, _, _) =>
+        assert(prev.catalog.functionExists(name), name)
+        assert(ext.catalog.functionExists(name), name)
+      }
       import ext.implicits._
       Seq((1L, 2.0)).toDF("a", "b").createOrReplaceTempView("ext_t")
       // Pandas cast names + today() through PLAIN spark.sql — parser
