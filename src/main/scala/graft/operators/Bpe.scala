@@ -177,8 +177,7 @@ object Bpe {
         var j = 0
         while (j + 1 < s.length) {
           val k = (s(j), s(j + 1))
-          val prev = pc.get(k)
-          pc.put(k, (if (prev == null) 0L else prev.longValue()) + c)
+          pc.put(k, pc.getOrDefault(k, 0L) + c)
           j += 1
         }
         wi += 1

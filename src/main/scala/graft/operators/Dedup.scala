@@ -528,7 +528,8 @@ object Dedup {
   }
 
   /** The generational-checkpoint skeleton every persisted index shares
-    * (near-dup, fingerprint, winnowing, substring): pick the next
+    * (near-dup, fingerprint, semantic, winnowing, substring — the tree
+    * [[TombstoneLog]] draws): pick the next
     * generation number, clear any partial directory a crashed save left,
     * write the artifacts, write `params` LAST as the commit marker, then
     * prune generations older than the immediately-previous one (dropping
@@ -693,30 +694,186 @@ object Dedup {
       layers = Seq(docsets, freq))
   }
 
+  // ──────────── the checkpoint log of the persisted dedup indexes ─────────
+
+  /** The takedown tombstone log of one payload kind, and the checkpoint
+    * tree every persisted dedup index family writes — near-dup (nd),
+    * fingerprint (fp), semantic (sem), winnow (wn) and substring (ss):
+    *
+    * {{{
+    * <path>/g<N>/{<artifacts>, kept, params}     generation N, params LAST
+    * <path>/delta/b<id>/{<layers>, ids, kept}    micro-batch WAL, kept LAST
+    * <path>/tomb/t<seq>_b<after>/<leaf>          takedown tombstone
+    * }}}
+    *
+    * Each entry commits with the parquet `_SUCCESS` of its last write:
+    * `params` for a generation ([[saveGenerational]]), `kept` for a delta
+    * ([[appendDelta]]), the payload `<leaf>` for a tombstone — `fps`
+    * (fp: content fingerprints), `ids` (nd/sem/wn: resolved index ids) or
+    * `neg` (ss: a negative window-frequency layer). A tombstone's position
+    * is encoded in its NAME (listing never reads file contents): sequence
+    * number `seq`, and `after`, the newest batch folded into the live index
+    * when the takedown happened. [[restoreSchedule]] is the rule that
+    * replays the three back in order.
+    *
+    * Writes are keyed OVERWRITES at a pre-assigned (seq, after), so a
+    * crash-window replay ([[graft.streaming.TakedownStream]] records the
+    * assignment in its WAL first) rewrites the SAME tombstone at the same
+    * logical position instead of appending a duplicate at a later one,
+    * which could delete content a batch in between legitimately
+    * re-admitted. */
+  private[graft] final class TombstoneLog private (leaf: String,
+      payload: DataFrame => DataFrame) {
+
+    /** Committed tombstones at `path`: (seq, after, payload path), in
+      * sequence order. */
+    def list(spark: org.apache.spark.sql.SparkSession,
+        path: String): Seq[(Long, Long, String)] = {
+      val fs = fsFor(spark, path)
+      val base = new org.apache.hadoop.fs.Path(s"$path/tomb")
+      if (!fs.exists(base)) Nil
+      else fs.listStatus(base).toSeq.filter(_.isDirectory)
+        .map(_.getPath.getName)
+        .collect { case n if n.matches("t\\d+_b-?\\d+") =>
+          val parts = n.drop(1).split("_b")
+          (parts(0).toLong, parts(1).toLong, s"$path/tomb/$n/$leaf")
+        }
+        .filter(t => fs.exists(
+          new org.apache.hadoop.fs.Path(s"${t._3}/_SUCCESS")))
+        .sortBy(_._1)
+    }
+
+    /** Next free sequence number at `path`. */
+    def nextSeq(spark: org.apache.spark.sql.SparkSession,
+        path: String): Long =
+      list(spark, path).map(_._1).maxOption.getOrElse(-1L) + 1
+
+    private def payloadPath(path: String, seq: Long, afterBatch: Long) =
+      s"$path/tomb/t${seq}_b$afterBatch/$leaf"
+
+    /** Land a tombstone at a pre-assigned (seq, after) position. */
+    def writeAt(path: String, rows: DataFrame, seq: Long,
+        afterBatch: Long): Unit =
+      payload(rows).coalesce(1).write.mode("overwrite")
+        .parquet(payloadPath(path, seq, afterBatch))
+
+    /** Land a tombstone at the next free sequence number. */
+    def append(path: String, rows: DataFrame, afterBatch: Long): Unit =
+      writeAt(path, rows, nextSeq(rows.sparkSession, path), afterBatch)
+
+    /** True when the tombstone at (seq, after) has committed. */
+    def committed(spark: org.apache.spark.sql.SparkSession, path: String,
+        seq: Long, afterBatch: Long): Boolean =
+      fsFor(spark, path).exists(new org.apache.hadoop.fs.Path(
+        payloadPath(path, seq, afterBatch) + "/_SUCCESS"))
+
+    /** Drop tombstones with after ≤ `upTo` — called after a generation
+      * save at that batch: the snapshot was taken from an index that
+      * already reflects every takedown up to there, so a restore from it
+      * must NOT re-apply them (a later batch may have legitimately
+      * re-admitted the content). */
+    def clear(spark: org.apache.spark.sql.SparkSession, path: String,
+        upTo: Long): Unit = {
+      val fs = fsFor(spark, path)
+      list(spark, path).filter(_._2 <= upTo).foreach { case (_, _, p) =>
+        fs.delete(new org.apache.hadoop.fs.Path(p).getParent, true)
+      }
+    }
+  }
+
+  private[graft] object TombstoneLog {
+    val Fps = new TombstoneLog("fps", _.select(col("fp")))
+    val Ids = new TombstoneLog("ids",
+      _.select(col("id").cast("long").as("id")))
+    val Neg = new TombstoneLog("neg", _.select(col("h"), col("occ")))
+  }
+
   /** Write one micro-batch's fold to the checkpoint's write-ahead delta
-    * log (`$path/delta/b<batchId>/{sets,prefs,kept}`, kept written LAST as
-    * the commit marker). The delta is batch-sized, so the per-batch
-    * durability cost matches what a state-store commit would have been —
-    * but only for the batch, never the corpus. With the delta on disk
-    * BEFORE any side effect becomes visible, a crash at any later point
-    * replays deterministically: restart = last generation + newer deltas
-    * ([[loadIndexWithDeltas]]), and a re-delivered already-folded batch
-    * sinks its recorded kept-set ([[checkpointKept]]) instead of being
-    * re-probed against an index that already contains it (which would
-    * silently drop every kept row). */
-  private[graft] def appendIndexDelta(path: String, batchId: Long,
-      sets: DataFrame, prefs: DataFrame, ids: DataFrame,
+    * log: the family's named `layers`, then `ids` — the batch's replay
+    * identity ([[batchReplayIds]]), what lets a restart tell a genuine
+    * engine replay from a batch-id collision — then `kept`, LAST, as the
+    * commit marker ([[TombstoneLog]] draws the tree). The delta is
+    * batch-sized, so the per-batch durability cost matches what a
+    * state-store commit would have been — but only for the batch, never
+    * the corpus. With the delta on disk BEFORE any side effect becomes
+    * visible, a crash at any later point replays deterministically:
+    * restart = last generation + newer deltas ([[restoreWithDeltas]]), and
+    * a re-delivered already-folded batch sinks its recorded kept-set
+    * ([[checkpointKept]]) instead of being re-probed against an index that
+    * already contains it (which would silently drop every kept row). */
+  private[graft] def appendDelta(path: String, batchId: Long,
+      layers: Seq[(String, DataFrame)], ids: DataFrame,
       kept: DataFrame): Unit = {
     val d = s"$path/delta/b$batchId"
-    sets.write.mode("overwrite").parquet(s"$d/sets")
-    prefs.write.mode("overwrite").parquet(s"$d/prefs")
-    // The batch's full id list — what lets a restart distinguish a genuine
-    // engine replay of this batch from a batch-id collision (a fresh query
-    // without the engine checkpoint renumbers from 0).
+    layers.foreach { case (leaf, df) =>
+      df.write.mode("overwrite").parquet(s"$d/$leaf")
+    }
     ids.write.mode("overwrite").parquet(s"$d/ids")
     kept.select(col("doc_id").cast("long").as("doc_id"))
       .write.mode("overwrite").parquet(s"$d/kept")
   }
+
+  /** The exactly-once restore rule, as the order of steps that rebuild an
+    * index from its newest generation (saved at batch `genBatch`):
+    * `Right(b)` folds delta b, `Left(t)` applies tombstone t.
+    *
+    * Deltas at or below `genBatch` are already in the generation. Newer
+    * deltas fold in ascending order, and tombstones replay INTERLEAVED at
+    * their recorded position: one tagged after=b applies after delta b
+    * folds and before delta b+1 — so content a later batch legitimately
+    * RE-ADMITTED is not wrongly deleted by an earlier takedown on restore.
+    * Tombstones tagged STRICTLY BEFORE `genBatch` are skipped: a delete
+    * tagged after=b happens between batches b and b+1, so any generation
+    * saved at batch ≥ b+1 was snapshotted from an index that already
+    * reflects it. The post-save prune ([[TombstoneLog.clear]]) normally
+    * removes them, but a crash between the generation commit and the
+    * prune leaves them behind — replaying those AFTER the snapshot would
+    * re-delete content a batch in (b, genBatch] legitimately re-admitted.
+    * Ones tagged == genBatch are kept: they can only have been created
+    * after that batch's fold (and save) completed, so the snapshot
+    * predates them. Tombstones tagged after the last delta apply at the
+    * end, in sequence order. */
+  private[graft] def restoreSchedule(genBatch: Long, deltas: Seq[Long],
+      tombs: Seq[(Long, Long, String)])
+      : Seq[Either[(Long, Long, String), Long]] = {
+    val (steps, rest) = deltas.filter(_ > genBatch).foldLeft(
+        (Vector.empty[Either[(Long, Long, String), Long]],
+          tombs.filter(_._2 >= genBatch))) { case ((out, pending), b) =>
+      val (due, later) = pending.partition(_._2 < b)
+      (out ++ due.map(Left(_)) :+ Right(b), later)
+    }
+    steps ++ rest.map(Left(_))
+  }
+
+  /** Restore an index family's full state from `latest` — its newest
+    * generation and that generation's batch id — plus every newer
+    * write-ahead delta and live tombstone, in [[restoreSchedule]] order.
+    * Returns (index, last durably folded batch id). The family supplies
+    * its delta `leaves` (each read, `prepare`d, persisted and materialized
+    * NOW — a later WAL append must never race a lazy read of these
+    * files), how to `fold` one delta's frames (by leaf) into the index,
+    * and how to apply one tombstone payload (`applyTomb`). */
+  private[graft] def restoreWithDeltas[I](
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      latest: Option[(I, Long)], tombs: TombstoneLog, leaves: Seq[String],
+      prepare: DataFrame => DataFrame = identity)(
+      fold: (I, Map[String, DataFrame]) => I)(
+      applyTomb: (I, DataFrame) => I): Option[(I, Long)] =
+    latest.map { case (gen, genBatch) =>
+      val steps = restoreSchedule(genBatch, indexDeltaBatches(spark, path),
+        tombs.list(spark, path))
+      val idx = steps.foldLeft(gen) {
+        case (acc, Left((_, _, payload))) =>
+          applyTomb(acc, readLayer(spark, payload))
+        case (acc, Right(b)) =>
+          val frames = leaves.map(l => l -> persistSketch(
+            prepare(readLayer(spark, s"$path/delta/b$b/$l"))))
+          frames.foreach(_._2.count())
+          fold(acc, frames.toMap)
+      }
+      (idx, steps.collect { case Right(b) => b }.lastOption
+        .getOrElse(genBatch))
+    }
 
   /** True when a pre-generational flat-layout checkpoint exists at `path`
     * (the legacy saveIndex layout: frames directly under the root). */
@@ -738,34 +895,14 @@ object Dedup {
     case None => batch.select(col(idCol).cast("long").as("doc_id"))
   }
 
-  /** True when the write-ahead delta recorded under `batchId` covers
-    * EXACTLY this batch's documents. A genuine engine replay re-delivers
-    * the same docs; a fresh query restarted without the engine checkpoint
-    * reuses the same batch ids for NEW data — (id, content-fingerprint)
-    * set equality is what tells them apart. Deltas written before the fp
-    * column existed (or a caller without a text column) compare ids only. */
-  private[graft] def deltaMatchesBatch(
-      spark: org.apache.spark.sql.SparkSession, path: String, batchId: Long,
-      batch: DataFrame, idCol: String,
-      textCol: Option[String] = None): Boolean = {
-    val fs = fsFor(spark, path)
-    val idsPath = s"$path/delta/b$batchId/ids"
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$idsPath/_SUCCESS"))) false
-    else {
-      val recorded = readLayer(spark, idsPath)
-      val withFp = textCol.isDefined &&
-        recorded.schema.fieldNames.contains("fp")
-      val rec = if (withFp) recorded.select("doc_id", "fp")
-        else recorded.select("doc_id")
-      val ids = batchReplayIds(batch, idCol, if (withFp) textCol else None)
-      rec.count() == ids.count() &&
-        ids.except(rec).limit(1).collect().isEmpty
-    }
-  }
-
   /** The committed delta id (≥ `fromId`) whose recorded (id, content-fp)
-    * set covers exactly this batch, if any. Scanning UPWARD from the raw
-    * engine id is what makes replay detection survive a batch-id REBASE:
+    * set covers exactly this batch, if any. A genuine engine replay
+    * re-delivers the same docs; a fresh query restarted without the engine
+    * checkpoint reuses the same batch ids for NEW data — set equality is
+    * what tells them apart. Deltas written before the fp column existed
+    * (or a caller without a text column) compare ids only. Scanning
+    * UPWARD from the raw engine id is what makes replay detection survive
+    * a batch-id REBASE:
     * a prior run that restarted without its engine checkpoint recorded
     * this batch's delta under `batchId + offset`, and a later engine
     * replay arrives with the raw id again — only the id-set match, not
@@ -821,48 +958,19 @@ object Dedup {
     }
   }
 
-  /** Restore the full index state: newest generation + every newer delta,
-    * returning (index, last durably folded batch id). Takedown tombstones
-    * replay INTERLEAVED at their recorded positions under the same rules
-    * as the fingerprint family ([[loadFpIndexWithDeltas]]): one tagged
-    * afterBatch=b applies after delta b folds and before delta b+1, and
-    * tombstones tagged STRICTLY BEFORE the snapshot batch are skipped —
-    * the saved generation already reflects them even when the post-save
-    * prune was lost to a crash. */
+  /** Restore the full near-dup index state: newest generation + every
+    * newer delta and tombstone ([[restoreWithDeltas]]), returning (index,
+    * last durably folded batch id). */
   private[graft] def loadIndexWithDeltas(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Option[(NearDupIndex, Long)] =
-    loadLatestGen(spark, path).map { case (gen, _, genBatch) =>
-      val deltas = indexDeltaBatches(spark, path).filter(_ > genBatch)
-      var tombs = ndTombstones(spark, path).filter(_._2 >= genBatch)
-      def applyDue(idx: NearDupIndex, before: Long): NearDupIndex = {
-        val (due, rest) = tombs.partition(_._2 < before)
-        tombs = rest
-        due.foldLeft(idx) { (acc, t) =>
-          val ids = persistSketch(readLayer(spark, t._3))
-          ids.count()
-          NearDupIndex(acc.docsets.join(ids, Seq("id"), "left_anti"),
-            acc.prefixes.join(ids, Seq("id"), "left_anti"),
-            acc.freq, acc.shingleN, acc.threshold, acc.layers :+ ids)
-        }
-      }
-      val folded = deltas.foldLeft(gen) { (acc, b) =>
-        val withTombs = applyDue(acc, b)
-        val sets = persistSketch(
-          readLayer(spark, s"$path/delta/b$b/sets"))
-        val prefs = persistSketch(
-          readLayer(spark, s"$path/delta/b$b/prefs"))
-        // Materialize NOW: a later WAL append must never race a lazy read
-        // of these files.
-        sets.count(); prefs.count()
-        NearDupIndex(withTombs.docsets.union(sets),
-          withTombs.prefixes.union(prefs),
-          withTombs.freq, withTombs.shingleN, withTombs.threshold,
-          layers = withTombs.layers ++ Seq(sets, prefs))
-      }
-      (applyDue(folded, Long.MaxValue),
-        deltas.lastOption.getOrElse(genBatch))
-    }
+    restoreWithDeltas(spark, path,
+      loadLatestGen(spark, path).map { case (idx, _, b) => (idx, b) },
+      TombstoneLog.Ids, Seq("sets", "prefs")) { (acc, d) =>
+      NearDupIndex(acc.docsets.union(d("sets")),
+        acc.prefixes.union(d("prefs")), acc.freq, acc.shingleN,
+        acc.threshold, layers = acc.layers ++ Seq(d("sets"), d("prefs")))
+    }(removeNearDupIds(_, _))
 
   /** Remove `docs`' CONTENT from a near-dup index — the takedown path for
     * the FUZZY family: after a doc is withdrawn, future arrivals that
@@ -919,37 +1027,6 @@ object Dedup {
       docHashSets(docs, idCol, textCol, index.shingleN)
         .select(col("hs")).distinct(),
       Seq("hs"), "left_semi").select(col("id"))
-
-  private[graft] def ndTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(Long, Long, String)] =
-    tombEntries(spark, path, "ids")
-
-  private[graft] def nextNdTombstoneSeq(
-      spark: org.apache.spark.sql.SparkSession, path: String): Long =
-    ndTombstones(spark, path).map(_._1).maxOption.getOrElse(-1L) + 1
-
-  /** Land a near-dup id tombstone at a PRE-ASSIGNED (seq, afterBatch)
-    * position via overwrite ([[writeFpTombstoneAt]] contract for the
-    * fuzzy family — the takedown stream records the assignment AND the
-    * resolved ids in its WAL, so a crash-window replay rewrites the same
-    * tombstone at the same logical position). */
-  private[graft] def writeNdTombstoneAt(path: String, ids: DataFrame,
-      seq: Long, afterBatch: Long): Unit =
-    ids.select(col("id").cast("long").as("id")).coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$path/tomb/t${seq}_b$afterBatch/ids")
-
-  /** Drop nd tombstones with afterBatch ≤ `upTo` — called after a
-    * generation save at that batch ([[clearFpTombstones]] contract). */
-  private[graft] def clearNdTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      upTo: Long): Unit = {
-    val fs = fsFor(spark, path)
-    ndTombstones(spark, path).filter(_._2 <= upTo).foreach { case (_, _, p) =>
-      fs.delete(new org.apache.hadoop.fs.Path(p).getParent, true)
-    }
-  }
 
   /** The kept-set recorded for `batchId`, if the checkpoint still has it
     * (its delta, or the generation saved at exactly that batch). */
@@ -1323,7 +1400,7 @@ object Dedup {
 
   /** [[probeAndExtend]] that also exposes the batch's new sketch layer
     * (sets + prefix keys) — what the streaming caller writes to the
-    * write-ahead delta log ([[appendIndexDelta]]) before any side effect
+    * write-ahead delta log ([[appendDelta]]) before any side effect
     * of the batch becomes visible. */
   private[graft] def probeAndExtendParts(
       index: NearDupIndex,
@@ -2234,18 +2311,6 @@ object Dedup {
         index.nprobe, index.layers :+ ba))
   }
 
-  /** Write one micro-batch's semantic fold to the write-ahead delta log
-    * (`$path/delta/b<id>/{vecs,ids,kept}`, kept LAST as the commit
-    * marker — the shared layout, so the replay helpers work unchanged). */
-  private[graft] def appendSemDelta(path: String, batchId: Long,
-      vecs: DataFrame, ids: DataFrame, kept: DataFrame): Unit = {
-    val d = s"$path/delta/b$batchId"
-    vecs.write.mode("overwrite").parquet(s"$d/vecs")
-    ids.write.mode("overwrite").parquet(s"$d/ids")
-    kept.select(col("doc_id").cast("long").as("doc_id"))
-      .write.mode("overwrite").parquet(s"$d/kept")
-  }
-
   /** Persist a [[SemIndex]] generation ([[saveIndex]] crash-safety
     * contract: params LAST as the commit marker, one prior generation
     * retained). The assigned vectors are written hive-partitioned BY LIST,
@@ -2291,40 +2356,17 @@ object Dedup {
         p.getAs[Long]("batch_id"))
     }
 
-  /** Restore the full semantic-index state: newest generation + every
-    * newer write-ahead delta, returning (index, last durably folded batch
-    * id) — the [[loadIndexWithDeltas]] of the semantic stream. */
+  /** Restore the full semantic-index state ([[restoreWithDeltas]]):
+    * newest generation + every newer delta and tombstone, returning
+    * (index, last durably folded batch id). */
   private[graft] def loadSemIndexWithDeltas(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Option[(SemIndex, Long)] =
-    loadLatestSemGen(spark, path).map { case (gen, genBatch) =>
-      val deltas = indexDeltaBatches(spark, path).filter(_ > genBatch)
-      // Id takedown tombstones replay interleaved at recorded positions,
-      // stale ones (before the snapshot) skipped — the
-      // [[loadFpIndexWithDeltas]] rules on the embedding family.
-      var tombs = semTombstones(spark, path).filter(_._2 >= genBatch)
-      def applyDue(idx: SemIndex, before: Long): SemIndex = {
-        val (due, rest) = tombs.partition(_._2 < before)
-        tombs = rest
-        due.foldLeft(idx) { (acc, t) =>
-          val ids = persistSketch(readLayer(spark, t._3))
-          ids.count()
-          acc.copy(assigned = removeSemAssignedRows(acc.assigned, ids),
-            layers = acc.layers :+ ids)
-        }
-      }
-      val idx = deltas.foldLeft(gen) { (acc, b) =>
-        val withTombs = applyDue(acc, b)
-        val vecs = persistSketch(withSemIdentityCols(
-          readLayer(spark, s"$path/delta/b$b/vecs")))
-        // Materialize NOW: a later WAL append must never race a lazy read.
-        vecs.count()
-        withTombs.copy(
-          assigned = withTombs.assigned.unionByName(vecs),
-          layers = withTombs.layers :+ vecs)
-      }
-      (applyDue(idx, Long.MaxValue), deltas.lastOption.getOrElse(genBatch))
-    }
+    restoreWithDeltas(spark, path, loadLatestSemGen(spark, path),
+      TombstoneLog.Ids, Seq("vecs"), withSemIdentityCols) { (acc, d) =>
+      acc.copy(assigned = acc.assigned.unionByName(d("vecs")),
+        layers = acc.layers :+ d("vecs"))
+    }(removeSemIds)
 
   /** Remove already-resolved ids from a semantic index — the embedding
     * family's takedown ([[removeNearDupIds]] contract): the withdrawn
@@ -2365,23 +2407,6 @@ object Dedup {
         coalesce(col("id") === col("promoted_id"), lit(false)))
       .drop("promoted_id")
   }
-
-  // The semantic family's id tombstones share the nd family's layout and
-  // payload (a one-column `id` parquet under tomb/t<seq>_b<after>/ids) —
-  // different checkpoint roots keep them apart; these aliases keep call
-  // sites self-describing.
-  private[graft] def semTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(Long, Long, String)] = ndTombstones(spark, path)
-  private[graft] def nextSemTombstoneSeq(
-      spark: org.apache.spark.sql.SparkSession, path: String): Long =
-    nextNdTombstoneSeq(spark, path)
-  private[graft] def writeSemTombstoneAt(path: String, ids: DataFrame,
-      seq: Long, afterBatch: Long): Unit =
-    writeNdTombstoneAt(path, ids, seq, afterBatch)
-  private[graft] def clearSemTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      upTo: Long): Unit = clearNdTombstones(spark, path, upTo)
 
   /** REBUILD the frozen spherical quantizer from the index's OWN assigned
     * vectors — the list-imbalance signal's ACTION for the semantic family
@@ -2663,47 +2688,18 @@ object Dedup {
         hasIdentityRows = identityRows), batchId)
     }
 
-  /** Restore the full substring-index state: newest generation + every
-    * newer write-ahead delta as LAYERS (the probe sums them; compaction
-    * merges them). Returns (index, last durably folded batch id). */
+  /** Restore the full substring-index state ([[restoreWithDeltas]]):
+    * newest generation + every newer delta as LAYERS (the probe sums them;
+    * compaction merges them) and every takedown's negative layer. Returns
+    * (index, last durably folded batch id). */
   private[graft] def loadSsIndexWithDeltas(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Option[(SubstringIndex, Long)] =
-    loadLatestSsGen(spark, path).map { case (gen, genBatch) =>
-      val deltas = indexDeltaBatches(spark, path).filter(_ > genBatch)
-      // Takedown neg-layers interleave at recorded positions with the
-      // stale-skip rule ([[loadFpIndexWithDeltas]]); position matters
-      // less for pure counts than for sets, but keeping the one rule
-      // keeps every family's restore reasoning identical.
-      var tombs = ssTombstones(spark, path).filter(_._2 >= genBatch)
-      def applyDue(idx: SubstringIndex, before: Long): SubstringIndex = {
-        val (due, rest) = tombs.partition(_._2 < before)
-        tombs = rest
-        due.foldLeft(idx) { (acc, t) =>
-          applySubstringNeg(acc, readLayer(spark, t._3))
-        }
-      }
-      val folded = deltas.foldLeft(gen) { (acc0, b) =>
-        val acc = applyDue(acc0, b)
-        val f = persistSketch(readLayer(spark, s"$path/delta/b$b/freq"))
-        f.count() // materialize before any later WAL append
-        acc.copy(freq = acc.freq.union(f), layers = acc.layers :+ f)
-      }
-      (applyDue(folded, Long.MaxValue),
-        deltas.lastOption.getOrElse(genBatch))
-    }
-
-  /** Write one micro-batch's window-frequency fold to the write-ahead
-    * delta log (`$path/delta/b<id>/{freq,ids,kept}`, kept LAST as the
-    * commit marker — the shared replay helpers apply). */
-  private[graft] def appendSsDelta(path: String, batchId: Long,
-      freq: DataFrame, ids: DataFrame, kept: DataFrame): Unit = {
-    val d = s"$path/delta/b$batchId"
-    freq.write.mode("overwrite").parquet(s"$d/freq")
-    ids.write.mode("overwrite").parquet(s"$d/ids")
-    kept.select(col("doc_id").cast("long").as("doc_id"))
-      .write.mode("overwrite").parquet(s"$d/kept")
-  }
+    restoreWithDeltas(spark, path, loadLatestSsGen(spark, path),
+      TombstoneLog.Neg, Seq("freq")) { (acc, d) =>
+      acc.copy(freq = acc.freq.union(d("freq")),
+        layers = acc.layers :+ d("freq"))
+    }(applySubstringNeg)
 
   /** The streaming probe step for the substring gate: per-batch dup-window
     * stats against corpus-plus-batch counts ([[probeSubstringDups]]), the
@@ -2826,27 +2822,6 @@ object Dedup {
     n.count()
     index.copy(freq = index.freq.select("h", "occ").union(n),
       layers = index.layers :+ n)
-  }
-
-  private[graft] def ssTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(Long, Long, String)] =
-    tombEntries(spark, path, "neg")
-  private[graft] def nextSsTombstoneSeq(
-      spark: org.apache.spark.sql.SparkSession, path: String): Long =
-    ssTombstones(spark, path).map(_._1).maxOption.getOrElse(-1L) + 1
-  private[graft] def writeSsTombstoneAt(path: String, neg: DataFrame,
-      seq: Long, afterBatch: Long): Unit =
-    neg.select(col("h"), col("occ")).coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$path/tomb/t${seq}_b$afterBatch/neg")
-  private[graft] def clearSsTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      upTo: Long): Unit = {
-    val fs = fsFor(spark, path)
-    ssTombstones(spark, path).filter(_._2 <= upTo).foreach { case (_, _, p) =>
-      fs.delete(new org.apache.hadoop.fs.Path(p).getParent, true)
-    }
   }
 
   /** Flatten a layered [[SubstringIndex]] into one merged resident frame
@@ -3034,64 +3009,20 @@ object Dedup {
         batchId)
     }
 
-  /** Restore the full fingerprint-index state: newest generation + every
-    * newer write-ahead delta, returning (index, last durably folded batch
-    * id) — the [[loadIndexWithDeltas]] of the exact-dedup stream. */
+  /** Restore the full fingerprint-index state ([[restoreWithDeltas]]):
+    * newest generation + every newer delta and tombstone, returning
+    * (index, last durably folded batch id). */
   private[graft] def loadFpIndexWithDeltas(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Option[(FingerprintIndex, Long)] =
-    loadLatestFpGen(spark, path).map { case (gen, genBatch) =>
-      val deltas = indexDeltaBatches(spark, path).filter(_ > genBatch)
-      // Content tombstones replay INTERLEAVED with the WAL at their
-      // recorded position: one tagged afterBatch=b applies after delta b
-      // folds and before delta b+1 — so content a later batch legitimately
-      // RE-ADMITTED is not wrongly deleted by an earlier takedown on
-      // restore (ordering spec-pinned in IncrementalDedupSpec).
-      // Tombstones tagged STRICTLY BEFORE the snapshot batch are skipped:
-      // a delete tagged afterBatch=b happens between batches b and b+1, so
-      // any generation saved at batch ≥ b+1 was snapshotted from an index
-      // that already reflects it. The post-save prune (clearFpTombstones)
-      // normally removes them, but a crash between the generation commit
-      // and the prune leaves them behind — replaying those AFTER the
-      // snapshot would re-delete content a batch in (b, genBatch]
-      // legitimately re-admitted. Ones tagged == genBatch are kept: they
-      // can only have been created after that batch's fold (and save)
-      // completed, so the snapshot predates them.
-      var tombs = fpTombstones(spark, path).filter(_._2 >= genBatch)
-      def applyDue(idx: FingerprintIndex, before: Long): FingerprintIndex = {
-        val (due, rest) = tombs.partition(_._2 < before)
-        tombs = rest
-        due.foldLeft(idx) { (acc, t) =>
-          val tfps = persistSketch(readLayer(spark, t._3))
-          tfps.count()
-          FingerprintIndex(acc.fps.join(tfps, Seq("fp"), "left_anti"),
-            acc.layers :+ tfps, acc.bloom)
-        }
-      }
-      val folded = deltas.foldLeft(gen) { (acc, b) =>
-        val withTombs = applyDue(acc, b)
-        val fps = persistSketch(
-          readLayer(spark, s"$path/delta/b$b/fps"))
-        // Materialize NOW: a later WAL append must never race a lazy read.
-        fps.count()
-        FingerprintIndex(withTombs.fps.union(fps), withTombs.layers :+ fps)
-      }
-      val idx = applyDue(folded, Long.MaxValue)
-      (idx, deltas.lastOption.getOrElse(genBatch))
+    restoreWithDeltas(spark, path, loadLatestFpGen(spark, path),
+      TombstoneLog.Fps, Seq("fps")) { (acc, d) =>
+      FingerprintIndex(acc.fps.union(d("fps")), acc.layers :+ d("fps"))
+    } { (acc, payload) =>
+      val tfps = persistSketch(payload)
+      tfps.count()
+      removeFps(acc, tfps)
     }
-
-  /** Write one micro-batch's exact-dedup fold to the write-ahead delta log
-    * (`$path/delta/b<id>/{fps,ids,kept}`, kept LAST as the commit marker —
-    * the same layout conventions [[appendIndexDelta]] uses, so the shared
-    * replay helpers work unchanged). */
-  private[graft] def appendFpDelta(path: String, batchId: Long,
-      fps: DataFrame, ids: DataFrame, kept: DataFrame): Unit = {
-    val d = s"$path/delta/b$batchId"
-    fps.write.mode("overwrite").parquet(s"$d/fps")
-    ids.write.mode("overwrite").parquet(s"$d/ids")
-    kept.select(col("doc_id").cast("long").as("doc_id"))
-      .write.mode("overwrite").parquet(s"$d/kept")
-  }
 
   /** The streaming probe step: kept batch rows ([[probeNovelExact]]
     * semantics), the batch's kept-fingerprint layer (persisted and
@@ -3154,79 +3085,16 @@ object Dedup {
     val tomb = persistSketch(
       docs.select(TextOps.fingerprint(col(textCol)).as("fp")).distinct())
     tomb.count()
-    checkpoint.foreach(p => appendFpTombstone(p, tomb, afterBatch))
+    checkpoint.foreach(p => TombstoneLog.Fps.append(p, tomb, afterBatch))
+    removeFps(index, tomb)
+  }
+
+  /** The fp takedown itself: one anti join against an already
+    * materialized tombstone set, which rides along as a layer. */
+  private def removeFps(index: FingerprintIndex,
+      tomb: DataFrame): FingerprintIndex =
     FingerprintIndex(index.fps.join(tomb, Seq("fp"), "left_anti"),
       index.layers :+ tomb, index.bloom)
-  }
-
-  /** Durably append a content tombstone at `path`: directory
-    * `tomb/t<seq>_b<afterBatch>` (position encoded in the NAME so listing
-    * never reads file contents), the fps parquet's `_SUCCESS` as the
-    * commit marker. Returns the sequence number. */
-  private[graft] def appendFpTombstone(path: String, fps: DataFrame,
-      afterBatch: Long): Long = {
-    val seq = nextFpTombstoneSeq(fps.sparkSession, path)
-    writeFpTombstoneAt(path, fps, seq, afterBatch)
-    seq
-  }
-
-  /** Next free tombstone sequence number at `path`. */
-  private[graft] def nextFpTombstoneSeq(
-      spark: org.apache.spark.sql.SparkSession, path: String): Long =
-    fpTombstones(spark, path).map(_._1).maxOption.getOrElse(-1L) + 1
-
-  /** Land a content tombstone at a PRE-ASSIGNED (seq, afterBatch)
-    * position via overwrite — the idempotent takedown leg
-    * ([[graft.streaming.TakedownStream]] records the assignment in its
-    * WAL before writing, so a crash-window replay rewrites the SAME
-    * tombstone at the same logical position instead of appending a
-    * duplicate at a later one, which could delete content a batch in
-    * between legitimately re-admitted). */
-  private[graft] def writeFpTombstoneAt(path: String, fps: DataFrame,
-      seq: Long, afterBatch: Long): Unit =
-    fps.select(col("fp")).coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$path/tomb/t${seq}_b$afterBatch/fps")
-
-  /** Live (committed) tombstones at `path`: (seq, afterBatch, payload
-    * path), sequence order. `leaf` names the payload parquet — "fps" for
-    * the fingerprint family (content fingerprints), "ids" for the
-    * near-dup family (resolved doc ids). */
-  private def tombEntries(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, leaf: String): Seq[(Long, Long, String)] = {
-    val fs = fsFor(spark, path)
-    val base = new org.apache.hadoop.fs.Path(s"$path/tomb")
-    if (!fs.exists(base)) Nil
-    else fs.listStatus(base).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("t\\d+_b-?\\d+") =>
-        val parts = n.drop(1).split("_b")
-        (parts(0).toLong, parts(1).toLong, s"$path/tomb/$n/$leaf")
-      }
-      .filter(t => fs.exists(
-        new org.apache.hadoop.fs.Path(s"${t._3}/_SUCCESS")))
-      .sortBy(_._1)
-  }
-
-  private[graft] def fpTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(Long, Long, String)] =
-    tombEntries(spark, path, "fps")
-
-  /** Drop tombstones with afterBatch ≤ `upTo` — called after a generation
-    * save at that batch: the saved fps were snapshotted from the in-memory
-    * index, which already reflects every delete up to there, so a restore
-    * from that generation must NOT re-apply them (a later batch may have
-    * legitimately re-admitted the content). */
-  private[graft] def clearFpTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      upTo: Long): Unit = {
-    val fs = fsFor(spark, path)
-    fpTombstones(spark, path).filter(_._2 <= upTo).foreach { case (_, _, p) =>
-      fs.delete(new org.apache.hadoop.fs.Path(p).getParent, true)
-    }
-  }
 
   /** Batch rows kept by incremental exact dedup against the index:
     * fingerprint absent from the index (anti join) AND first — minimum
@@ -3535,51 +3403,20 @@ object Dedup {
         layers = index.layers :+ bflat :+ bfreq :+ bOk))
   }
 
-  /** Write one micro-batch's winnow fold to the write-ahead delta log
-    * (`$path/delta/b<id>/{fps,freq,ids,kept}`, kept LAST — shared replay
-    * helpers apply). */
-  private[graft] def appendWnDelta(path: String, batchId: Long,
-      fps: DataFrame, freq: DataFrame, ids: DataFrame,
-      kept: DataFrame): Unit = {
-    val d = s"$path/delta/b$batchId"
-    fps.write.mode("overwrite").parquet(s"$d/fps")
-    freq.write.mode("overwrite").parquet(s"$d/freq")
-    ids.write.mode("overwrite").parquet(s"$d/ids")
-    kept.select(col("doc_id").cast("long").as("doc_id"))
-      .write.mode("overwrite").parquet(s"$d/kept")
-  }
-
-  /** Restore the full winnow-index state: newest generation + every newer
-    * write-ahead delta as layers. Returns (index, last folded batch). */
+  /** Restore the full winnow-index state ([[restoreWithDeltas]]): newest
+    * generation + every newer delta as layers. A tombstone's negative freq
+    * layer is recomputed from the index AS OF the tombstone's position
+    * (the same postings [[removeWinnowIds]] counted live), so the
+    * subtraction replays exactly. Returns (index, last folded batch). */
   private[graft] def loadWnIndexWithDeltas(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Option[(WinnowIndex, Long)] =
-    loadLatestWnGen(spark, path).map { case (idx0, genBatch) =>
-      val deltas = indexDeltaBatches(spark, path).filter(_ > genBatch)
-      // Takedown tombstones interleave at recorded positions with the
-      // stale-skip rule ([[loadFpIndexWithDeltas]]). The negative freq
-      // layer is recomputed from the index AS OF the tombstone's position
-      // (the same postings [[removeWinnowIds]] counted live), so the
-      // subtraction replays exactly.
-      var tombs = wnTombstones(spark, path).filter(_._2 >= genBatch)
-      def applyDue(idx: WinnowIndex, before: Long): WinnowIndex = {
-        val (due, rest) = tombs.partition(_._2 < before)
-        tombs = rest
-        due.foldLeft(idx) { (acc, t) =>
-          removeWinnowIds(acc, readLayer(spark, t._3))
-        }
-      }
-      val folded = deltas.foldLeft(idx0) { (acc0, b) =>
-        val acc = applyDue(acc0, b)
-        val fl = persistSketch(readLayer(spark, s"$path/delta/b$b/fps"))
-        val fr = persistSketch(readLayer(spark, s"$path/delta/b$b/freq"))
-        fl.count(); fr.count() // materialize before any later WAL append
-        acc.copy(fps = acc.fps.union(fl), freq = acc.freq.union(fr),
-          freqLayered = true, layers = acc.layers ++ Seq(fl, fr))
-      }
-      (applyDue(folded, Long.MaxValue),
-        deltas.lastOption.getOrElse(genBatch))
-    }
+    restoreWithDeltas(spark, path, loadLatestWnGen(spark, path),
+      TombstoneLog.Ids, Seq("fps", "freq")) { (acc, d) =>
+      acc.copy(fps = acc.fps.union(d("fps")),
+        freq = acc.freq.union(d("freq")), freqLayered = true,
+        layers = acc.layers ++ Seq(d("fps"), d("freq")))
+    }(removeWinnowIds)
 
   /** Remove ids' postings from a winnow index — the takedown path for the
     * winnowing family: the withdrawn docs' fingerprints leave the posting
@@ -3639,19 +3476,6 @@ object Dedup {
     matched.join(totals, "id").where(col("tot") === col("wn"))
       .select("id").distinct()
   }
-
-  private[graft] def wnTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(Long, Long, String)] = ndTombstones(spark, path)
-  private[graft] def nextWnTombstoneSeq(
-      spark: org.apache.spark.sql.SparkSession, path: String): Long =
-    nextNdTombstoneSeq(spark, path)
-  private[graft] def writeWnTombstoneAt(path: String, ids: DataFrame,
-      seq: Long, afterBatch: Long): Unit =
-    writeNdTombstoneAt(path, ids, seq, afterBatch)
-  private[graft] def clearWnTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      upTo: Long): Unit = clearNdTombstones(spark, path, upTo)
 
   /** Flatten a layered [[WinnowIndex]]: postings localCheckpoint, freq
     * merged ([[compactIndex]] contract for `releaseOld`). */

@@ -281,21 +281,9 @@ object Pipeline {
         shingleN = 2, threshold = 0.6)
     }
 
-  private val wnIndexes = scala.collection.concurrent.TrieMap.empty[String,
-    (java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession],
-      Dedup.WinnowIndex)]
-  private def wnIndexFor(s: org.apache.spark.sql.SparkSession, dir: String,
-      corpus: => org.apache.spark.sql.DataFrame): Dedup.WinnowIndex =
-    cachedIdx(wnIndexes, s, dir) {
-      val path = tempIndexDir("graft_wn_idx")
-      Dedup.saveWinnowIndex(
-        Dedup.buildWinnowIndex(corpus, "doc_id", "text",
-          k = 16, w = 30, maxFreq = 100), path)
-      Dedup.loadWinnowIndex(s, path)
-    }
-
-  /** d13's parity index: same save/load path as [[wnIndexFor]] but with a
-    * cap that never binds — probe ≡ one-shot holds exactly only then (the
+  /** d13's parity index, saved and reloaded through the checkpoint layout
+    * ([[Dedup.saveWinnowIndex]], [[Dedup.loadWinnowIndex]]) with a cap
+    * that never binds — probe ≡ one-shot holds exactly only then (the
     * incremental path caps on CORPUS frequency, the one-shot on all-docs
     * frequency; a binding cap makes them legitimately diverge). */
   private val wnParityIndexes = scala.collection.concurrent.TrieMap.empty[

@@ -357,7 +357,6 @@ object Ingest {
   private def columnarQuarantined(spark: SparkSession, path: String,
       format: String): QuarantinedFiles = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val files = listDataFiles(spark, path)
     val conf = new SerConf(spark.sparkContext.hadoopConfiguration)
     val fmt = format

@@ -1581,7 +1581,7 @@ object Sink {
   private def writeBucketSpec(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, table: String, provider: String,
       nb: Int, bCols: Seq[String], sCols: Seq[String], schemaDdl: String,
-      loc: String, pCols: Seq[String] = Nil): Unit = {
+      loc: String, pCols: Seq[String]): Unit = {
     val body = (Seq("graft-bucketspec v1", s"table $table",
       s"provider $provider", s"numBuckets $nb", s"location $loc") ++
       bCols.map("bucketCol " + _) ++ sCols.map("sortCol " + _) ++

@@ -3,11 +3,15 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** The arrival-loop skeleton shared by every index-backed streaming dedup
-  * (near-dup prefix-filter index in [[NearDupStream]], exact fingerprint
-  * index in [[FpDedupStream]]): per micro-batch probe → write-ahead delta →
-  * sink → adopt, with engine-replay recognition, batch-id rebase for
-  * checkpoint-less restarts, periodic compaction + generational save, and
+/** The arrival-loop skeleton shared by the five index-backed streaming
+  * dedups — near-dup prefix-filter index ([[NearDupStream]]), exact
+  * fingerprint index ([[FpDedupStream]]), semantic IVF index
+  * ([[SemDedupStream]]), winnow posting index ([[WinnowStream]]) and
+  * substring window-count index ([[SubstringStream]]); their shared
+  * checkpoint tree is drawn on `operators.Dedup.TombstoneLog`. Per
+  * micro-batch: probe → write-ahead delta → sink → adopt, with
+  * engine-replay recognition, batch-id rebase for checkpoint-less
+  * restarts, periodic compaction + generational save, and
   * one-compaction-late release of superseded layers. The index-specific
   * operations arrive as an [[DedupLoop.Ops]]; the crash/replay logic —
   * the part that took a kill -9 test to pin down — lives HERE, once. */

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
@@ -21,7 +20,8 @@ import graft.operators.Dedup.FingerprintIndex
   * stream history) and it is the first (min id) within its micro-batch.
   * The micro-batch loop — WAL-before-side-effects, engine-replay
   * recognition, batch-id rebase, compaction cadence, layer-release
-  * grace — is [[DedupLoop]], shared with [[NearDupStream]]; only the
+  * grace — is [[DedupLoop]], shared with [[NearDupStream]],
+  * [[SemDedupStream]], [[WinnowStream]] and [[SubstringStream]]; only the
   * fingerprint-index operations live here. */
 object FpDedupStream {
 
@@ -59,7 +59,7 @@ object FpDedupStream {
         : (DataFrame, FingerprintIndex) = {
       val (keptIds, kfps, extended) =
         Dedup.probeAndExtendFpParts(idx, batch, idCol, textCol)
-      checkpoint.foreach(p => Dedup.appendFpDelta(p, walId, kfps,
+      checkpoint.foreach(p => Dedup.appendDelta(p, walId, Seq("fps" -> kfps),
         replayIds(batch), keptIds))
       (keptIds, extended)
     }
@@ -76,10 +76,9 @@ object FpDedupStream {
       // saveFingerprintIndex directly.
       Dedup.saveFingerprintIndex(idx, path, batchId = walId,
         kept = Some(kept), maxBloomItems = 0L)
-      // The snapshot just saved already reflects every delete up to this
-      // batch — prune the applied tombstones so a restore from it cannot
-      // re-delete content a later batch re-admits.
-      Dedup.clearFpTombstones(idx.fps.sparkSession, path, upTo = walId)
+      // Prune the tombstones this snapshot already reflects
+      // ([[Dedup.TombstoneLog]] checkpoint rules).
+      Dedup.TombstoneLog.Fps.clear(idx.fps.sparkSession, path, upTo = walId)
     }
   }
 

@@ -107,8 +107,8 @@ object NearDupStream {
       val (keptIds, psets, ppref, extended) =
         Dedup.probeAndExtendParts(idx, batch, idCol, textCol)
       checkpoint.foreach(p =>
-        Dedup.appendIndexDelta(p, walId, psets, ppref, replayIds(batch),
-          keptIds))
+        Dedup.appendDelta(p, walId, Seq("sets" -> psets, "prefs" -> ppref),
+          replayIds(batch), keptIds))
       (keptIds, extended)
     }
     def layers(idx: NearDupIndex): Seq[DataFrame] = idx.layers
@@ -166,11 +166,10 @@ object NearDupStream {
     def save(idx: NearDupIndex, path: String, walId: Long,
         kept: DataFrame): Unit = {
       Dedup.saveIndex(idx, path, batchId = walId, kept = Some(kept))
-      // The snapshot just saved already reflects every takedown up to
-      // this batch — prune the applied tombstones ([[FpDedupStream]]'s
-      // FpOps.save contract; restore additionally skips stale ones if a
-      // crash lands between the save and this prune).
-      Dedup.clearNdTombstones(idx.docsets.sparkSession, path, upTo = walId)
+      // Prune the tombstones this snapshot already reflects
+      // ([[Dedup.TombstoneLog]] checkpoint rules).
+      Dedup.TombstoneLog.Ids.clear(idx.docsets.sparkSession, path,
+        upTo = walId)
     }
   }
 
@@ -187,11 +186,8 @@ object NearDupStream {
     state.withExclusive {
       val (next, doomed) =
         Dedup.deleteNearDupContent(state.index, docs, idCol, textCol)
-      checkpointPath.foreach { p =>
-        val spark = docs.sparkSession
-        Dedup.writeNdTombstoneAt(p, doomed,
-          Dedup.nextNdTombstoneSeq(spark, p), state.lastFoldedBatch)
-      }
+      checkpointPath.foreach(p =>
+        Dedup.TombstoneLog.Ids.append(p, doomed, state.lastFoldedBatch))
       state.adopt(next)
     }
 

@@ -728,7 +728,7 @@ object PackStream {
             r.getLong(3))).toSeq
       }
       val oldRanges = ranges(manifests, firstPack)
-      val oldTouched = oldRanges.filter { case (sh, _, lo, hi) => hi > lo }
+      val oldTouched = oldRanges.filter { case (_, _, lo, hi) => hi > lo }
         .map { case (sh, b, _, _) => (b, sh) }
       // Each shard's boundary-batch `lo`: rewritten packs (reflow output
       // AND carried prefix packs of the boundary dir) all have ids >= it,

@@ -74,8 +74,8 @@ object SemDedupStream {
         checkpoint: Option[String], walId: Long): (DataFrame, SemIndex) = {
       val (keptIds, vecsLayer, extended) =
         Dedup.probeAndExtendSemParts(idx, batch, idCol, textCol)
-      checkpoint.foreach(p => Dedup.appendSemDelta(p, walId, vecsLayer,
-        replayIds(batch), keptIds))
+      checkpoint.foreach(p => Dedup.appendDelta(p, walId,
+        Seq("vecs" -> vecsLayer), replayIds(batch), keptIds))
       (keptIds, extended)
     }
     def layers(idx: SemIndex): Seq[DataFrame] = idx.layers
@@ -153,11 +153,9 @@ object SemDedupStream {
     def save(idx: SemIndex, path: String, walId: Long,
         kept: DataFrame): Unit = {
       Dedup.saveSemIndex(idx, path, batchId = walId, kept = Some(kept))
-      // Snapshot reflects every takedown up to this batch; prune applied
-      // tombstones ([[FpDedupStream]]'s FpOps.save contract — restore
-      // additionally skips stale ones if a crash lands between the save
-      // and this prune).
-      Dedup.clearSemTombstones(idx.assigned.sparkSession, path,
+      // Prune the tombstones this snapshot already reflects
+      // ([[Dedup.TombstoneLog]] checkpoint rules).
+      Dedup.TombstoneLog.Ids.clear(idx.assigned.sparkSession, path,
         upTo = walId)
     }
   }
@@ -175,11 +173,8 @@ object SemDedupStream {
     state.withExclusive {
       val doomed = ids.select(
         org.apache.spark.sql.functions.col(idCol).cast("long").as("id"))
-      checkpointPath.foreach { p =>
-        val spark = ids.sparkSession
-        Dedup.writeSemTombstoneAt(p, doomed,
-          Dedup.nextSemTombstoneSeq(spark, p), state.lastFoldedBatch)
-      }
+      checkpointPath.foreach(p =>
+        Dedup.TombstoneLog.Ids.append(p, doomed, state.lastFoldedBatch))
       state.adopt(Dedup.removeSemIds(state.index, doomed))
     }
 

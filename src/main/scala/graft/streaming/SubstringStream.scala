@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
@@ -59,8 +58,8 @@ object SubstringStream {
         : (DataFrame, SubstringIndex) = {
       val (keptIds, bfreq, extended) = Dedup.probeAndExtendSsParts(
         idx, batch, idCol, textCol, minOccurrences, maxDupRatio)
-      checkpoint.foreach(p => Dedup.appendSsDelta(p, walId, bfreq,
-        replayIds(batch), keptIds))
+      checkpoint.foreach(p => Dedup.appendDelta(p, walId,
+        Seq("freq" -> bfreq), replayIds(batch), keptIds))
       (keptIds, extended)
     }
     def layers(idx: SubstringIndex): Seq[DataFrame] = idx.layers
@@ -70,9 +69,9 @@ object SubstringStream {
         kept: DataFrame): Unit = {
       Dedup.saveSubstringIndex(idx, path, batchId = walId,
         kept = Some(kept))
-      // Snapshot reflects every takedown up to this batch; prune applied
-      // tombstones ([[FpDedupStream]]'s FpOps.save contract).
-      Dedup.clearSsTombstones(idx.freq.sparkSession, path, upTo = walId)
+      // Prune the tombstones this snapshot already reflects
+      // ([[Dedup.TombstoneLog]] checkpoint rules).
+      Dedup.TombstoneLog.Neg.clear(idx.freq.sparkSession, path, upTo = walId)
     }
   }
 
@@ -128,11 +127,8 @@ object SubstringStream {
           n
         } else Dedup.substringNegFreq(docs, idCol, textCol,
           state.index.windowTokens)
-      checkpointPath.foreach { p =>
-        val spark = docs.sparkSession
-        Dedup.writeSsTombstoneAt(p, neg,
-          Dedup.nextSsTombstoneSeq(spark, p), state.lastFoldedBatch)
-      }
+      checkpointPath.foreach(p =>
+        Dedup.TombstoneLog.Neg.append(p, neg, state.lastFoldedBatch))
       state.adopt(Dedup.applySubstringNeg(state.index, neg))
     }
 

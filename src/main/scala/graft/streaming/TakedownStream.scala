@@ -52,7 +52,7 @@ import graft.operators.{Dedup, Similarity}
   * than it actually happened. The stream therefore assigns each batch its
   * tombstone positions ONCE, records them in its WAL (`params` written
   * last as the commit marker), and applies them via keyed OVERWRITE writes
-  * ([[Dedup.writeFpTombstoneAt]], [[Similarity.writeKeyedTombstone]]) —
+  * ([[Dedup.TombstoneLog]], [[Similarity.writeKeyedTombstone]]) —
   * the replay rewrites the same tombstones at the same positions,
   * byte-identical, and the `applied` marker makes the whole batch
   * skippable once it is down. Kill -9 anywhere between the WAL commit and
@@ -91,8 +91,8 @@ object TakedownStream {
   final class Handle(val path: String)
 
   /** Event-batch WAL layout: `$path/b<id>/events` (the batch's rows),
-    * `$path/b<id>/params` (replay fingerprint + assigned fp tombstone
-    * position; the WAL commit marker), `$path/b<id>/applied` (the
+    * `$path/b<id>/params` (replay fingerprint + assigned tombstone
+    * positions; the WAL commit marker), `$path/b<id>/applied` (the
     * all-side-effects-landed marker). */
   private def bDir(path: String, b: Long) = s"$path/b$b"
 
@@ -204,6 +204,16 @@ object TakedownStream {
       return effectiveId
     }
     val replaying = committed.contains(effectiveId)
+    // The five persisted index families, each with its tombstone log
+    // ([[Dedup.TombstoneLog]]), in the WAL `params` column order
+    // (`<fam>_seq`, `<fam>_after`).
+    val families: Seq[(String, Option[(DedupLoop.IndexState[_], String)],
+        Dedup.TombstoneLog)] = Seq(
+      ("fp", targets.fp, Dedup.TombstoneLog.Fps),
+      ("nd", targets.nd, Dedup.TombstoneLog.Ids),
+      ("sem", targets.sem, Dedup.TombstoneLog.Ids),
+      ("wn", targets.wn, Dedup.TombstoneLog.Ids),
+      ("ss", targets.ss, Dedup.TombstoneLog.Neg))
     // Every present target's lock is held for the WHOLE batch — WAL leg
     // through applied marker, fixed fp→nd→sem→wn→ss order (the same
     // nesting the composed export loop uses, so no cycle). The recorded
@@ -212,19 +222,15 @@ object TakedownStream {
     // concurrent fold + compaction could commit a generation AHEAD of a
     // tombstone tagged behind it, which a post-crash restore would then
     // skip as stale — a silently lost takedown.
-    def lockAll[A](g: => A): A = {
-      def w[B](st: Option[DedupLoop.IndexState[_]])(h: => B): B =
-        st.fold(h)(x => x.withExclusive(h))
-      w(targets.fp.map(_._1))(w(targets.nd.map(_._1))(
-        w(targets.sem.map(_._1))(w(targets.wn.map(_._1))(
-          w(targets.ss.map(_._1))(g)))))
-    }
+    def lockAll[A](g: => A): A =
+      families.flatMap(_._2).foldRight(() => g) { case ((st, _), inner) =>
+        () => st.withExclusive(inner())
+      }()
     lockAll {
     // WAL leg (first attempt only): events first, then params — the
-    // assigned fp tombstone position rides in params so the commit marker
-    // covers it. A replay reuses the recorded assignment.
-    val (fpSeq, fpAfter, ndSeq, ndAfter, semSeq, semAfter,
-        wnSeq, wnAfter, ssSeq, ssAfter, exOn) =
+    // assigned tombstone positions ride in params so the commit marker
+    // covers them. A replay reuses the recorded assignment.
+    val (positions, exOn) =
       if (replaying) {
         val p = spark.read.parquet(s"$dir/params").head()
         // Schema-presence guard: a WAL batch recorded before a family
@@ -233,25 +239,14 @@ object TakedownStream {
         def g(name: String): Long =
           if (p.schema.fieldNames.contains(name)) p.getAs[Long](name)
           else -1L
-        (g("fp_seq"), g("fp_after"), g("nd_seq"), g("nd_after"),
-          g("sem_seq"), g("sem_after"), g("wn_seq"), g("wn_after"),
-          g("ss_seq"), g("ss_after"), g("ex_on"))
+        (families.map { case (fam, _, _) =>
+          fam -> (g(s"${fam}_seq"), g(s"${fam}_after")) }.toMap, g("ex_on"))
       } else {
-        val seq = targets.fp.map(t =>
-          Dedup.nextFpTombstoneSeq(spark, t._2)).getOrElse(-1L)
-        val after = targets.fp.map(_._1.lastFoldedBatch).getOrElse(-1L)
-        val nseq = targets.nd.map(t =>
-          Dedup.nextNdTombstoneSeq(spark, t._2)).getOrElse(-1L)
-        val nafter = targets.nd.map(_._1.lastFoldedBatch).getOrElse(-1L)
-        val sseq = targets.sem.map(t =>
-          Dedup.nextSemTombstoneSeq(spark, t._2)).getOrElse(-1L)
-        val safter = targets.sem.map(_._1.lastFoldedBatch).getOrElse(-1L)
-        val wseq = targets.wn.map(t =>
-          Dedup.nextWnTombstoneSeq(spark, t._2)).getOrElse(-1L)
-        val wafter = targets.wn.map(_._1.lastFoldedBatch).getOrElse(-1L)
-        val xseq = targets.ss.map(t =>
-          Dedup.nextSsTombstoneSeq(spark, t._2)).getOrElse(-1L)
-        val xafter = targets.ss.map(_._1.lastFoldedBatch).getOrElse(-1L)
+        val assigned = families.map { case (fam, target, log) =>
+          fam -> target.fold((-1L, -1L)) { case (state, ckpt) =>
+            (log.nextSeq(spark, ckpt), state.lastFoldedBatch)
+          }
+        }
         // The export leg carries no position (retraction is
         // content-addressed through the lineage manifest), only the
         // was-a-target-registered flag the replay guard needs.
@@ -323,17 +318,17 @@ object TakedownStream {
                 "takedown leg subtracts nothing this batch.")
           }
         }
-        locally {
-          import spark.implicits._
-          Seq((fp._1, fp._2, seq, after, nseq, nafter, sseq, safter,
-              wseq, wafter, xseq, xafter, exon))
-            .toDF("batch_fp", "batch_n", "fp_seq", "fp_after",
-              "nd_seq", "nd_after", "sem_seq", "sem_after",
-              "wn_seq", "wn_after", "ss_seq", "ss_after", "ex_on")
-            .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
-        }
-        (seq, after, nseq, nafter, sseq, safter, wseq, wafter, xseq,
-          xafter, exon)
+        val names = Seq("batch_fp", "batch_n") ++ assigned.flatMap {
+          case (fam, _) => Seq(s"${fam}_seq", s"${fam}_after") } :+ "ex_on"
+        val values = Seq(fp._1, fp._2) ++ assigned.flatMap {
+          case (_, (seq, after)) => Seq(seq, after) } :+ exon
+        spark.createDataFrame(
+            java.util.List.of(org.apache.spark.sql.Row.fromSeq(values)),
+            org.apache.spark.sql.types.StructType(names.map(n =>
+              org.apache.spark.sql.types.StructField(n,
+                org.apache.spark.sql.types.LongType, nullable = false))))
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+        (assigned.toMap, exon)
       }
     // Side effects — each an idempotent keyed overwrite, so this block
     // re-runs safely after a crash anywhere inside it.
@@ -374,104 +369,60 @@ object TakedownStream {
           "batch to apply against the now-registered target.")
       ok
     }
-    targets.fp.foreach { case (state, ckpt) =>
-      val docs = recorded.where(col("family") === "fp")
-        .select(col("cid").as("doc_id"), col("text"))
-      if (!docs.isEmpty && familyEnabled("fp", fpSeq)) state.withExclusive {
-        val tomb = docs
-          .select(graft.operators.TextOps.fingerprint(col("text")).as("fp"))
-          .distinct()
-        // If the tombstone already committed (crash landed between it and
-        // the applied marker, then restart), the live state was restored
-        // THROUGH it at its recorded position — re-shrinking NOW would
-        // apply the delete at a later position than it happened and could
-        // drop a fingerprint an interleaved batch re-admitted. Nor is the
-        // tombstone rewritten: it is byte-identical by design, and the
-        // overwrite's delete-then-write window would let a second crash
-        // strip `_SUCCESS` from an already-committed tombstone — the
-        // restore would then skip it and the withdrawal would be lost.
-        val alreadyDown = fs(spark, ckpt).exists(
-          new org.apache.hadoop.fs.Path(
-            s"$ckpt/tomb/t${fpSeq}_b$fpAfter/fps/_SUCCESS"))
-        if (!alreadyDown) {
-          Dedup.writeFpTombstoneAt(ckpt, tomb, fpSeq, fpAfter)
-          // In-memory shrink of the live stream state (no second append —
-          // the keyed write above is the durable leg).
-          FpDedupStream.delete(state, None, docs, "text")
-        }
+    def famRows(fam: String) = recorded.where(col("family") === fam)
+      .select(col("cid").as("doc_id"), col("text"))
+    def walRows(name: String) = graft.sources.Sink.readOwn(spark,
+      Seq(s"$dir/$name"), quarantine = false)
+    val logs = families.map { case (fam, _, log) => fam -> log }.toMap
+    // One family's tombstone leg: the payload lands at its recorded
+    // position, then the live state shrinks by it (the keyed write is the
+    // durable leg; no second append). If the tombstone already committed
+    // (crash landed between it and the applied marker, then restart), the
+    // live state was restored THROUGH it at its recorded position —
+    // re-shrinking NOW would apply the delete at a later position than it
+    // happened and could drop content an interleaved batch re-admitted.
+    // Nor is the tombstone rewritten: it is byte-identical by design, and
+    // the overwrite's delete-then-write window would let a second crash
+    // strip `_SUCCESS` from an already-committed tombstone — the restore
+    // would then skip it and the withdrawal would be lost.
+    def tombLeg[I](fam: String,
+        target: Option[(DedupLoop.IndexState[I], String)])(
+        payload: DedupLoop.IndexState[I] => DataFrame)(
+        shrink: (DedupLoop.IndexState[I], DataFrame) => Unit): Unit =
+      target.foreach { case (state, ckpt) =>
+        val (seq, after) = positions(fam)
+        if (!famRows(fam).isEmpty && familyEnabled(fam, seq))
+          state.withExclusive {
+            if (!logs(fam).committed(spark, ckpt, seq, after)) {
+              val rows = payload(state)
+              logs(fam).writeAt(ckpt, rows, seq, after)
+              shrink(state, rows)
+            }
+          }
       }
-    }
-    targets.nd.foreach { case (state, ckpt) =>
-      val docs = recorded.where(col("family") === "nd")
-        .select(col("cid").as("doc_id"), col("text"))
-      if (!docs.isEmpty && familyEnabled("nd", ndSeq)) state.withExclusive {
-        val alreadyDown = fs(spark, ckpt).exists(
-          new org.apache.hadoop.fs.Path(
-            s"$ckpt/tomb/t${ndSeq}_b$ndAfter/ids/_SUCCESS"))
-        if (!alreadyDown) {
-          Dedup.writeNdTombstoneAt(ckpt,
-            graft.sources.Sink.readOwn(spark, Seq(s"$dir/nd_ids"),
-              quarantine = false), ndSeq, ndAfter)
-          // In-memory shrink by the RECORDED ids (not content
-          // re-resolution, which would also match docs re-admitted since
-          // the first attempt); the keyed write above is the durable leg.
-          state.adopt(Dedup.removeNearDupIds(state.index,
-            graft.sources.Sink.readOwn(spark, Seq(s"$dir/nd_ids"),
-              quarantine = false)))
-        }
-      }
-    }
-    targets.sem.foreach { case (state, ckpt) =>
-      val ids = recorded.where(col("family") === "sem")
-        .select(col("cid").as("id"))
-      if (!ids.isEmpty && familyEnabled("sem", semSeq)) state.withExclusive {
-        val alreadyDown = fs(spark, ckpt).exists(
-          new org.apache.hadoop.fs.Path(
-            s"$ckpt/tomb/t${semSeq}_b$semAfter/ids/_SUCCESS"))
-        if (!alreadyDown) {
-          Dedup.writeSemTombstoneAt(ckpt, ids, semSeq, semAfter)
-          state.adopt(Dedup.removeSemIds(state.index, ids))
-        }
-      }
-    }
-    targets.wn.foreach { case (state, ckpt) =>
-      val any = recorded.where(col("family") === "wn")
-      if (!any.isEmpty && familyEnabled("wn", wnSeq)) state.withExclusive {
-        val ids = graft.sources.Sink.readOwn(spark, Seq(s"$dir/wn_ids"),
-          quarantine = false)
-        val alreadyDown = fs(spark, ckpt).exists(
-          new org.apache.hadoop.fs.Path(
-            s"$ckpt/tomb/t${wnSeq}_b$wnAfter/ids/_SUCCESS"))
-        if (!alreadyDown) {
-          Dedup.writeWnTombstoneAt(ckpt, ids, wnSeq, wnAfter)
-          state.adopt(Dedup.removeWinnowIds(state.index, ids))
-        }
-      }
-    }
-    targets.ss.foreach { case (state, ckpt) =>
-      val docs = recorded.where(col("family") === "ss")
-        .select(col("cid").as("doc_id"), col("text"))
-      if (!docs.isEmpty && familyEnabled("ss", ssSeq)) state.withExclusive {
-        // The RECORDED content-addressed layer (resolved at WAL time,
-        // like nd_ids/wn_ids). A WAL batch recorded before the upgrade
-        // has no ss_neg file; its original apply was per-arrival, so the
-        // byte-stable replay is the same per-arrival recompute.
-        val neg =
-          if (fs(spark, handle.path).exists(new org.apache.hadoop.fs.Path(
-              s"$dir/ss_neg")))
-            graft.sources.Sink.readOwn(spark, Seq(s"$dir/ss_neg"),
-              quarantine = false)
-          else Dedup.substringNegFreq(docs, "doc_id", "text",
-            state.index.windowTokens)
-        val alreadyDown = fs(spark, ckpt).exists(
-          new org.apache.hadoop.fs.Path(
-            s"$ckpt/tomb/t${ssSeq}_b$ssAfter/neg/_SUCCESS"))
-        if (!alreadyDown) {
-          Dedup.writeSsTombstoneAt(ckpt, neg, ssSeq, ssAfter)
-          state.adopt(Dedup.applySubstringNeg(state.index, neg))
-        }
-      }
-    }
+    tombLeg("fp", targets.fp)(_ => famRows("fp")
+      .select(graft.operators.TextOps.fingerprint(col("text")).as("fp"))
+      .distinct())((state, _) =>
+      FpDedupStream.delete(state, None, famRows("fp"), "text"))
+    // nd/wn shrink by the RECORDED ids, not by content re-resolution,
+    // which would also match docs re-admitted since the first attempt.
+    tombLeg("nd", targets.nd)(_ => walRows("nd_ids"))((state, _) =>
+      state.adopt(Dedup.removeNearDupIds(state.index, walRows("nd_ids"))))
+    tombLeg("sem", targets.sem)(_ =>
+      recorded.where(col("family") === "sem").select(col("cid").as("id")))(
+      (state, ids) => state.adopt(Dedup.removeSemIds(state.index, ids)))
+    tombLeg("wn", targets.wn)(_ => walRows("wn_ids"))((state, ids) =>
+      state.adopt(Dedup.removeWinnowIds(state.index, ids)))
+    // ss: the RECORDED content-addressed layer (resolved at WAL time, like
+    // nd_ids/wn_ids). A WAL batch recorded before the upgrade has no
+    // ss_neg file; its original apply was per-arrival, so the byte-stable
+    // replay is the same per-arrival recompute.
+    tombLeg("ss", targets.ss)(state =>
+      if (fs(spark, handle.path).exists(
+          new org.apache.hadoop.fs.Path(s"$dir/ss_neg"))) walRows("ss_neg")
+      else Dedup.substringNegFreq(famRows("ss"), "doc_id", "text",
+        state.index.windowTokens))((state, neg) =>
+      state.adopt(Dedup.applySubstringNeg(state.index, neg)))
     // The key carries the WAL identity and the batch's event fingerprint:
     // a second takedown WAL (or a recreated one) targeting the same index
     // gets its own keys instead of overwriting earlier tombstones, while

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
@@ -50,8 +49,8 @@ object WinnowStream {
         : (DataFrame, WinnowIndex) = {
       val (keptIds, bflat, bfreq, extended) =
         Dedup.probeAndExtendWnParts(idx, batch, idCol, textCol, minShared)
-      checkpoint.foreach(p => Dedup.appendWnDelta(p, walId, bflat, bfreq,
-        replayIds(batch), keptIds))
+      checkpoint.foreach(p => Dedup.appendDelta(p, walId,
+        Seq("fps" -> bflat, "freq" -> bfreq), replayIds(batch), keptIds))
       (keptIds, extended)
     }
     def layers(idx: WinnowIndex): Seq[DataFrame] = idx.layers
@@ -60,9 +59,9 @@ object WinnowStream {
     def save(idx: WinnowIndex, path: String, walId: Long,
         kept: DataFrame): Unit = {
       Dedup.saveWinnowIndex(idx, path, batchId = walId, kept = Some(kept))
-      // Snapshot reflects every takedown up to this batch; prune applied
-      // tombstones ([[FpDedupStream]]'s FpOps.save contract).
-      Dedup.clearWnTombstones(idx.fps.sparkSession, path, upTo = walId)
+      // Prune the tombstones this snapshot already reflects
+      // ([[Dedup.TombstoneLog]] checkpoint rules).
+      Dedup.TombstoneLog.Ids.clear(idx.fps.sparkSession, path, upTo = walId)
     }
   }
 
@@ -78,11 +77,8 @@ object WinnowStream {
     state.withExclusive {
       val doomed = ids.select(
         org.apache.spark.sql.functions.col(idCol).cast("long").as("id"))
-      checkpointPath.foreach { p =>
-        val spark = ids.sparkSession
-        Dedup.writeWnTombstoneAt(p, doomed,
-          Dedup.nextWnTombstoneSeq(spark, p), state.lastFoldedBatch)
-      }
+      checkpointPath.foreach(p =>
+        Dedup.TombstoneLog.Ids.append(p, doomed, state.lastFoldedBatch))
       state.adopt(Dedup.removeWinnowIds(state.index, doomed))
     }
 

@@ -154,13 +154,27 @@ object VectorKernels {
     s
   }
 
-  /** Σ_j lut(j·ksub + codes(j)), ksub = |lut| / |codes|. */
+  /** Σ_j lut(j·ksub + codes(j)), ksub = |lut| / |codes|. Malformed input
+    * — no codes, a LUT that does not split into |codes| equal subspaces,
+    * or a code outside [0, ksub) — throws IllegalArgumentException naming
+    * the shapes, instead of dividing by zero or reading another
+    * subspace's entries. */
   def pqScore(codes: ArrayData, lut: ArrayData): Double = {
     val m = codes.numElements()
-    val ksub = lut.numElements() / m
+    val n = lut.numElements()
+    if (m == 0 || n % m != 0) throw new IllegalArgumentException(
+      s"pqScore: a LUT of $n entries does not split into $m subspaces")
+    val ksub = n / m
     var s = 0.0
     var j = 0
-    while (j < m) { s += lut.getDouble(j * ksub + codes.getInt(j)); j += 1 }
+    while (j < m) {
+      val c = codes.getInt(j)
+      if (c < 0 || c >= ksub) throw new IllegalArgumentException(
+        s"pqScore: code $c of subspace $j is outside [0, $ksub) " +
+          s"(m = $m, |lut| = $n)")
+      s += lut.getDouble(j * ksub + c)
+      j += 1
+    }
     s
   }
 

@@ -342,7 +342,8 @@ class CrashRestartSpec extends SparkSpecBase {
     // Exactly-once tombstones: TWO fp tombstones (one per withdrawn
     // content — the replayed f2 REWROTE its recorded one instead of
     // appending), three keyed IVF tombstones (one per event batch).
-    val fpTombs = graft.operators.Dedup.fpTombstones(spark, s"$base/idx/fp")
+    val fpTombs = graft.operators.Dedup.TombstoneLog.Fps.list(spark,
+      s"$base/idx/fp")
     assert(fpTombs.size == 2, s"fp tombstones after crash-restart: $fpTombs")
     // Keys carry WAL identity + batch fingerprint (collision hardening);
     // exactly one per event batch — the replayed f2 REWROTE its key.

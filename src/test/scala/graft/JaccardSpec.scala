@@ -60,7 +60,6 @@ class JaccardSpec extends SparkSpecBase {
   }
 
   test("withSketchCache releases every sketch persist when the bracket closes") {
-    import spark.implicits._
     spark.catalog.clearCache()
     val n = Dedup.withSketchCache {
       // Forced-collapse jaccard + minhash + winnowing + simhash: four

@@ -8,9 +8,13 @@ import graft.functions.GraftFunctions
 
 /** Interpreted and codegen evaluation of the four pair-scoring kernels
   * (`graft_dot`, `graft_bitset_common`, `graft_sorted_common`, `pqScore`)
-  * agree bit for bit on edge inputs: null operands, empty arrays,
-  * mismatched lengths, NaN/±Inf elements, `Long.MinValue`/`MaxValue` words,
-  * and sorted sets with no or full overlap. */
+  * and of the six sketch kernels the dedup indexes persist (shingle set,
+  * MinHash, SimHash, winnow, rolling hashes, byte-block hash) agree bit
+  * for bit on edge inputs: null operands, empty arrays, mismatched
+  * lengths, NaN/±Inf elements, `Long.MinValue`/`MaxValue` words, sorted
+  * sets with no or full overlap, inputs shorter than one k-gram, and
+  * surrogate-pair and combining-mark text. Malformed `pqScore` shapes
+  * throw the same error on both paths. */
 class KernelParitySpec extends SparkSpecBase {
 
   /** The two evaluation paths: fully interpreted (no whole-stage codegen,
@@ -113,7 +117,6 @@ class KernelParitySpec extends SparkSpecBase {
       (None, Some(Seq(1.0, 2.0))),
       (Some(Seq(0)), None),
       (Some(Seq(0, 1)), Some(Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0))),
-      (Some(Seq(2, 0)), Some(Seq(0.5, 1.5, 2.5, 3.5, 4.5))), // ksub = 2
       (Some(Seq(1, 1)), Some(Seq(0.0, Double.NaN, 0.0, 1.0))),
       (Some(Seq(0, 0)), Some(Seq(Inf, 0.0, -Inf, 0.0))),
       (Some(Seq(0, 1)), Some(Seq(Inf, 0.0, 0.0, Inf)))
@@ -121,18 +124,91 @@ class KernelParitySpec extends SparkSpecBase {
     assertParity(df, GraftFunctions.pqScore(col("codes"), col("lut")))
   }
 
-  test("pqScore: empty codes divide by zero on both paths") {
+  test("pqScore: malformed shapes throw IllegalArgumentException on both paths") {
     import spark.implicits._
-    val df = Seq((Seq.empty[Int], Seq(1.0))).toDF("codes", "lut")
-    val errs = paths.map { case (mode, wholeStage) =>
-      onPath(mode, wholeStage) {
+    def rootCause(t: Throwable): Throwable =
+      if (t.getCause == null || t.getCause == t) t else rootCause(t.getCause)
+    val malformed = Seq(
+      (Seq.empty[Int], Seq(1.0)),
+      // 5 entries do not split into 2 subspaces, and code 2 is outside
+      // [0, ksub) for the ksub = 2 the old kernel derived.
+      (Seq(2, 0), Seq(0.5, 1.5, 2.5, 3.5, 4.5)),
+      (Seq(0, 2), Seq(1.0, 2.0, 3.0, 4.0)),
+      (Seq(-1), Seq(1.0, 2.0)))
+    for ((codes, lut) <- malformed; (mode, wholeStage) <- paths) {
+      val df = Seq((codes, lut)).toDF("codes", "lut")
+      val e = onPath(mode, wholeStage) {
         intercept[Exception] {
           df.select(GraftFunctions.pqScore(col("codes"), col("lut"))).collect()
         }
       }
+      assert(rootCause(e).isInstanceOf[IllegalArgumentException],
+        s"$mode $codes $lut: $e")
     }
-    def rootCause(t: Throwable): Throwable =
-      if (t.getCause == null || t.getCause == t) t else rootCause(t.getCause)
-    assert(errs.forall(e => rootCause(e).isInstanceOf[ArithmeticException]))
+  }
+
+  // Sketch kernels the persisted dedup indexes store.
+
+  private val (mn, mx) = (Long.MinValue, Long.MaxValue)
+
+  /** Text edge cases: null, empty, shorter than every k-gram, astral-plane
+    * (surrogate-pair) and combining-mark text, and ordinary prose. */
+  private val texts = Seq[Option[String]](
+    None,
+    Some(""),
+    Some("ab"),
+    Some("\uD835\uDD18\uD835\uDD2B\uD835\uDD26 \uD83D\uDE00\uD83D\uDE00 x"),
+    Some("cafe\u0301 noe\u0308l n\u0303o\u0303 e\u0301e\u0301e\u0301"),
+    Some("the quick brown fox jumps over the lazy dog the quick brown fox"))
+
+  test("graft_shingle_hashes: null, empty, short, astral and combining tokens") {
+    import spark.implicits._
+    val df = Seq[Option[Seq[String]]](
+      None,
+      Some(Seq.empty),
+      Some(Seq("one")),
+      Some(Seq("\uD83D\uDE00", "\uD835\uDD18\uD835\uDD2B", "\uD83D\uDE00")),
+      Some(Seq("cafe\u0301", "noe\u0308l", "cafe\u0301", "noe\u0308l")),
+      Some(Seq("a", "b", "c", "d", "a", "b"))
+    ).toDF("tokens")
+    assertParity(df,
+      GraftFunctions.shingleHashes(col("tokens"), 2),
+      GraftFunctions.shingleHashes(col("tokens"), 3))
+  }
+
+  test("graft_minhash and graft_simhash: null, empty, extreme hashes") {
+    import spark.implicits._
+    val df = Seq[Option[Seq[Long]]](
+      None,
+      Some(Seq.empty),
+      Some(Seq(mn)),
+      Some(Seq(mx)),
+      Some(Seq(mn, -1L, 0L, 1L, mx)),
+      Some(Seq(mx, mx, mn, mn)),
+      Some(Seq(1L, 2L, 3L))
+    ).toDF("h")
+    assertParity(df,
+      GraftFunctions.minhashSig(col("h"), 4),
+      GraftFunctions.simhash(col("h")))
+  }
+
+  test("graft_winnow and rolling hashes: null, empty, short, astral, combining") {
+    import spark.implicits._
+    val df = texts.toDF("t")
+    assertParity(df,
+      GraftFunctions.winnow(col("t"), 4, 3),
+      GraftFunctions.winnow(col("t"), 1, 1),
+      GraftFunctions.rollingHashes(col("t"), 4),
+      GraftFunctions.rollingHashes(col("t"), 1))
+  }
+
+  test("graft_byte_block_hash: null, empty, short, astral and extreme bytes") {
+    import spark.implicits._
+    val df = (texts.map(_.map(_.getBytes("UTF-8"))) ++ Seq(
+      Some(Array[Byte](0)),
+      Some(Array.fill[Byte](67)(-1)),
+      Some(Array.tabulate[Byte](256)(i => i.toByte))
+    )).toDF("b")
+    assertParity(df, GraftFunctions.byteBlockHash(col("b")))
   }
 }

@@ -7,7 +7,6 @@ import graft.operators.{Dedup, Multimodal, Similarity, TextOps}
 /** Unit semantics of the pipeline operators on tiny hand-checkable inputs. */
 class OperatorsSpec extends SparkSpecBase {
 
-  import scala.jdk.CollectionConverters._
 
   private lazy val docs = {
     import spark.implicits._
@@ -345,7 +344,6 @@ class OperatorsSpec extends SparkSpecBase {
   }
 
   test("IVF index extension: frozen-quantizer add finds new and old vectors") {
-    import spark.implicits._
     val emb = spark.table("embeddings")
     val corpus = emb.where(col("vec_id") >= 10 && col("vec_id") < 400)
     val arrivals = emb.where(col("vec_id") >= 400)
@@ -794,7 +792,6 @@ class OperatorsSpec extends SparkSpecBase {
   }
 
   test("payloadDedup over perceptual hash: every twin folds into its original") {
-    import spark.implicits._
     val docs = spark.table("documents")
       .where(length(col("text")) >= 64).select("doc_id", "text")
     val twins = docs.select((col("doc_id") + 1000000L).as("doc_id"),
@@ -822,7 +819,6 @@ class OperatorsSpec extends SparkSpecBase {
   }
 
   test("decodeBatched: batch size never changes the output (memory = one batch)") {
-    import spark.implicits._
     val payloads = Multimodal.withPayload(
       spark.table("documents").select("doc_id", "text"), "doc_id", "text")
     def run(bs: Int) = Multimodal.decodeBatched(payloads, batchSize = bs)

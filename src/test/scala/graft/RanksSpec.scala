@@ -40,7 +40,6 @@ class RanksSpec extends SparkSpecBase {
   }
 
   test("degenerate low-cardinality key: giant tie groups stay correct") {
-    import spark.implicits._
     // 3 distinct keys over 200k rows — every tie group dwarfs a partition.
     val df = spark.range(200000)
       .select(col("id"), (col("id") % 3).as("k"))

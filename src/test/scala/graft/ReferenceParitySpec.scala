@@ -379,7 +379,7 @@ class ReferenceParitySpec extends SparkSpecBase {
           "size(graft_minhash(graft_shingle_hashes(array('a','b','c'), 2), 16)), " +
           "size(graft_winnow('abcdefghijklmnopqrstuvwxyz 0123456789', 4, 5))")
         .head()
-      import org.apache.spark.sql.functions.{lit, size => asize, typedlit}
+      import org.apache.spark.sql.functions.{lit, size => asize}
       val viaColumns = Seq(Tuple1(Seq("a", "b", "c"))).toDF("t")
         .select(
           graft.functions.GraftFunctions.simhash(

@@ -800,7 +800,6 @@ class SourcesSpec extends SparkSpecBase {
   test("zordered: multi-column data skipping — a predicate on EITHER " +
       "clustered column prunes most row groups; a single-column sort " +
       "only prunes its own") {
-    import spark.implicits._
     // 256×256 uniform grid: the adversarial case for a single-column
     // sort (the second column spans its full range inside every file).
     val grid = spark.range(256L * 256L)
@@ -928,7 +927,6 @@ class SourcesSpec extends SparkSpecBase {
   test("z-order lifecycle: appends decay the curve; compact re-sorts the " +
       "rewrite on the persisted _clusterspec and recluster re-runs it — " +
       "the either-column scan bound survives maintenance") {
-    import spark.implicits._
     val grid = spark.range(256L * 256L)
       .select((col("id") / 256).cast("long").as("x"),
         (col("id") % 256).cast("long").as("y"))
@@ -1143,7 +1141,6 @@ class SourcesSpec extends SparkSpecBase {
       "curve aligned with parquet's physical order, so date predicates " +
       "prune; clusterDecay reads ~1 fresh, grows with unclustered " +
       "appends, and recovers after recluster") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("zd").toString + "/z"
     // 128 days × 128 values.
     val grid = spark.range(128L * 128L)
@@ -1273,7 +1270,6 @@ class SourcesSpec extends SparkSpecBase {
   test("zorderedPartitioned: directory pruning on the partition column, " +
       "z skipping inside every partition, and compact restores the curve " +
       "per leaf from the ROOT _clusterspec") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("zp").toString + "/t"
     // Two hive partitions, each holding the full 128×128 grid.
     val grid = spark.range(2L * 128L * 128L)

@@ -1144,7 +1144,6 @@ class StreamingSpec extends SparkSpecBase {
 
   test("pack stream: a replayed batch recomputes identical packs and the " +
       "idempotent sink stays exactly-once") {
-    import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.streaming.PackStream
 
@@ -1178,7 +1177,6 @@ class StreamingSpec extends SparkSpecBase {
         .select("shard", "pack_id", "n_tokens", "token_ids"))
     assert(all.where(col("n_tokens") =!= 64).count() == 0)
     // Conservation: landed tokens + carried tokens == ingested tokens.
-    val vmap = typedlit(h.model.vocab)
     val ingested = corpus.where(col("doc_id") < 20)
       .select(size(graft.operators.Bpe.encode(col("text"),
         h.model.merges)).cast("long").as("n"))
@@ -1568,7 +1566,6 @@ class StreamingSpec extends SparkSpecBase {
 
     // Conservation through the whole pipeline: landed + carried tokens ==
     // the encoded tokens of exactly the surviving docs.
-    val vmap = typedlit(h.pack.model.vocab)
     val survivors = Seq(good(10, "gamma"), good(22, "delta"))
       .toDF("doc_id", "text")
     val ingested = survivors.select(
@@ -1710,7 +1707,6 @@ class StreamingSpec extends SparkSpecBase {
     // Ordering: shard 0's first landed pack must OPEN with the batch-0
     // carry (tokens of doc 2's tail), not with the MinValue doc's tokens —
     // the carry sorts first by pack_ord, never by a sentinel id tie.
-    val vmap = typedlit(h.model.vocab)
     val carryHead = spark.read.parquet(s"$dir/state/g1/pending")
       .where(col("shard") === 0L).select(col("pending"))
       .head().getSeq[Long](0)
@@ -1775,12 +1771,12 @@ class StreamingSpec extends SparkSpecBase {
       "vec_id", "embedding", 5).select("cid")
       .collect().map(_.getLong(0)).toSet
     assert(!ivfTop().exists(Set(20L, 40L)), "deleted ids must be masked")
-    val nTombs = Dedup.fpTombstones(spark, fpDir).size
+    val nTombs = Dedup.TombstoneLog.Fps.list(spark, fpDir).size
 
     // Engine replay of the fully-applied batch: a SKIP — no second
     // tombstone at a later position, same admit verdicts.
     assert(TakedownStream.processBatch(td, targets, ev0, 0L) == 0L)
-    assert(Dedup.fpTombstones(spark, fpDir).size == nTombs,
+    assert(Dedup.TombstoneLog.Fps.list(spark, fpDir).size == nTombs,
       "replay must not append a duplicate tombstone")
 
     // Ordering across a crash-window re-apply: the withdrawn content is
@@ -1794,7 +1790,7 @@ class StreamingSpec extends SparkSpecBase {
     marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(marker, true)
     assert(TakedownStream.processBatch(td, targets, ev0, 0L) == 0L)
-    assert(Dedup.fpTombstones(spark, fpDir).size == nTombs,
+    assert(Dedup.TombstoneLog.Fps.list(spark, fpDir).size == nTombs,
       "crash-window re-apply rewrites the same tombstone, not a new one")
     assert(!admits("alpha beta"),
       "re-apply must not delete content a later batch re-admitted")
@@ -2024,7 +2020,6 @@ class StreamingSpec extends SparkSpecBase {
       SlowTest) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
     import graft.streaming.ExportPipeline
 
     def doc(id: Long, seed: String): NdDoc =
@@ -2157,7 +2152,6 @@ class StreamingSpec extends SparkSpecBase {
       "and its lineage rows disappear") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
     import graft.streaming.{ExportPipeline, TakedownStream}
 
     def good(id: Long, seed: String): NdDoc =
@@ -2232,7 +2226,6 @@ class StreamingSpec extends SparkSpecBase {
       "re-post re-enters, all under the composed lock chain", SlowTest) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
     import graft.streaming.{ExportPipeline, TakedownStream}
 
     def good(id: Long, seed: String): NdDoc =
@@ -2338,7 +2331,6 @@ class StreamingSpec extends SparkSpecBase {
       "suppressing variants, replay-stable, restore-parity") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
     import graft.operators.Dedup
     import graft.streaming.{NearDupStream, TakedownStream}
 
@@ -2378,9 +2370,9 @@ class StreamingSpec extends SparkSpecBase {
     assert(!admits(st, variant(92, good(2, "beta"))))
 
     // Replay of the applied batch: skip, no duplicate tombstone.
-    val n = Dedup.ndTombstones(spark, ndDir).size
+    val n = Dedup.TombstoneLog.Ids.list(spark, ndDir).size
     assert(TakedownStream.processBatch(td, targets, ev, 0L) == 0L)
-    assert(Dedup.ndTombstones(spark, ndDir).size == n)
+    assert(Dedup.TombstoneLog.Ids.list(spark, ndDir).size == n)
 
     // Restore parity: a fresh resume replays the tombstone at its
     // recorded position — same verdicts as the live state.
@@ -2405,7 +2397,7 @@ class StreamingSpec extends SparkSpecBase {
       .delete(marker, true)
     val targets2 = TakedownStream.Targets(nd = Some((st2, ndDir)))
     assert(TakedownStream.processBatch(td, targets2, ev, 0L) == 0L)
-    assert(Dedup.ndTombstones(spark, ndDir).size == n,
+    assert(Dedup.TombstoneLog.Ids.list(spark, ndDir).size == n,
       "re-apply rewrites the same tombstone, not a new one")
     assert(!admits(st2, variant(93, good(20, "alpha"))),
       "re-apply must not delete content a later batch re-admitted")
@@ -2455,9 +2447,9 @@ class StreamingSpec extends SparkSpecBase {
     assert(!admits(st, SemDoc(92, Seq(0, 1, 0.1, 0))))   // ~ corpus 2
 
     // Replay of the applied batch: skip, no duplicate tombstone.
-    val n = Dedup.semTombstones(spark, semDir).size
+    val n = Dedup.TombstoneLog.Ids.list(spark, semDir).size
     assert(TakedownStream.processBatch(td, targets, ev, 0L) == 0L)
-    assert(Dedup.semTombstones(spark, semDir).size == n)
+    assert(Dedup.TombstoneLog.Ids.list(spark, semDir).size == n)
 
     // Restore parity: the tombstone replays at its recorded position.
     val st2 = SemDedupStream.resume(spark, semDir, corpus.limit(0),
@@ -2479,7 +2471,7 @@ class StreamingSpec extends SparkSpecBase {
       .delete(marker, true)
     assert(TakedownStream.processBatch(td,
       TakedownStream.Targets(sem = Some((st2, semDir))), ev, 0L) == 0L)
-    assert(Dedup.semTombstones(spark, semDir).size == n,
+    assert(Dedup.TombstoneLog.Ids.list(spark, semDir).size == n,
       "re-apply rewrites the same tombstone, not a new one")
     assert(!admits(st2, SemDoc(93, Seq(1, 0.1, 0, 0))),
       "re-apply must not delete a vector a later batch re-admitted")
@@ -2552,11 +2544,11 @@ class StreamingSpec extends SparkSpecBase {
       .head().getString(1)))
 
     // Replay: skip, no duplicate tombstones.
-    val nw = Dedup.wnTombstones(spark, wnDir).size
-    val ns = Dedup.ssTombstones(spark, ssDir).size
+    val nw = Dedup.TombstoneLog.Ids.list(spark, wnDir).size
+    val ns = Dedup.TombstoneLog.Neg.list(spark, ssDir).size
     assert(TakedownStream.processBatch(td, targets, ev, 0L) == 0L)
-    assert(Dedup.wnTombstones(spark, wnDir).size == nw &&
-      Dedup.ssTombstones(spark, ssDir).size == ns)
+    assert(Dedup.TombstoneLog.Ids.list(spark, wnDir).size == nw &&
+      Dedup.TombstoneLog.Neg.list(spark, ssDir).size == ns)
 
     // Restore parity: tombstones replay at recorded positions.
     val wn2 = WinnowStream.resume(spark, wnDir, corpus.limit(0),
@@ -2684,7 +2676,6 @@ class StreamingSpec extends SparkSpecBase {
       "re-posts; re-withdrawal is a no-op; restore-parity") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
     import graft.operators.Dedup
     import graft.streaming.{SubstringStream, TakedownStream}
 
@@ -2833,7 +2824,7 @@ class StreamingSpec extends SparkSpecBase {
     // Simulate the crash window inside FpOps.save: the generation commits
     // at batch 1 (snapshotting an index that ALREADY reflects the delete
     // and the re-admission), but the process dies before
-    // clearFpTombstones — the applied tombstone survives on disk.
+    // TombstoneLog.clear — the applied tombstone survives on disk.
     Dedup.saveFingerprintIndex(s1.index, dir, batchId = 1L,
       kept = Some(Seq(20L).toDF("doc_id")), maxBloomItems = 0L)
 

@@ -149,7 +149,6 @@ class UnigramSpec extends SparkSpecBase {
       "gone before any payload byte moves, so a crash mid re-save can " +
       "never leave a torn-but-valid model; the happy-path re-save loads " +
       "as the new model") {
-    import spark.implicits._
     val mOld = Unigram.Model(Map("a" -> -0.5, "b" -> -1.5, "ab" -> -2.0),
       maxPieceLen = 2, usage = Seq(("ab", 5L), ("a", 2L)))
     val mNew = Unigram.Model(

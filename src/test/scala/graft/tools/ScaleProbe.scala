@@ -758,7 +758,7 @@ object ScaleProbe {
         .select(col("doc_id"), col("text"))
       val nB = 50
       val dir = java.nio.file.Files.createTempDirectory("sp_endur").toString
-      var t0 = System.nanoTime()
+      val t0 = System.nanoTime()
       val st = graft.streaming.FpDedupStream.resume(spark, dir,
         base.where(pmod(col("doc_id"), lit(nB + 1)) === lit(nB)),
         "doc_id", "text")
@@ -831,7 +831,7 @@ object ScaleProbe {
       val nB = 50
       val dir = java.nio.file.Files.createTempDirectory("sp_ndendur").toString
       val corpus = base.where(pmod(col("doc_id"), lit(nB + 1)) === lit(nB))
-      var t0 = System.nanoTime()
+      val t0 = System.nanoTime()
       val st = graft.streaming.NearDupStream.resume(spark, dir, corpus,
         "doc_id", "text")
       println(f"[scale] ndendure bootstrap " +
@@ -920,7 +920,7 @@ object ScaleProbe {
       val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id").as("doc_id"), col("embedding"))
       val dir = java.nio.file.Files.createTempDirectory("sp_semend").toString
-      var t0 = System.nanoTime()
+      val t0 = System.nanoTime()
       val st = graft.streaming.SemDedupStream.resume(spark, dir, corpus,
         "doc_id", "embedding", eps = 0.95)
       println(f"[scale] semendure bootstrap " +
