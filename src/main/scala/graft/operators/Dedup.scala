@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.VectorKernels
 
 /** Distributed document-deduplication operators.
   *
@@ -181,10 +182,9 @@ object Dedup {
         col("common") / (col("na") + col("nb") - col("common")))
       .select(col("a_id"), col("b_id"), col("jaccard"))
 
-  /** Per-doc state for set-similarity kernels: id, ascending-sorted distinct
-    * 64-bit shingle hashes, set size. */
-  private[operators] case class DocSet(id: Long, hs: Array[Long], n: Long)
-  private[operators] case class Block(blk: Int, items: Array[DocSet])
+  /** A docset payload of [[PairGrid]]: ascending distinct 64-bit shingle
+    * hashes and the set size. */
+  private[operators] case class ShingleSet(hs: Array[Long], n: Long)
 
   /** Exact all-pairs n-gram Jaccard (the ground truth [[minhashLsh]]
     * approximates). Shingles are 64-bit-hashed once; each doc becomes a
@@ -193,14 +193,12 @@ object Dedup {
     * unique-docset count (see below — the quantity actually scored; the
     * count doubles as the sketch-cache materialization pass):
     *
-    *   - `≤ maxAllPairsDocs`: **blocked all-pairs**. Docs hash into B
-    *     blocks; the B(B+1)/2 block pairs become independent tasks, each a
-    *     tight JVM merge-intersection loop over primitive long arrays with
-    *     a size-ratio skip (J ≤ min/max). This is the O(N·B) -replication /
-    *     O(N²/tasks) -compute grid that brute force *should* be on a
-    *     cluster — no O(N²) join rows are ever materialized (a
-    *     nested-loop join at sf0.1 spent ~15 s copying 12.5 M pair rows;
-    *     this path does the same comparisons in < 2 s).
+    *   - `≤ maxAllPairsDocs`: **blocked all-pairs** on the [[PairGrid]]
+    *     (one group), scoring each pair with a size-ratio skip
+    *     (J ≤ min/max) and then the sorted-merge kernel. No O(N²) join
+    *     rows are ever materialized (a nested-loop join at sf0.1 spent
+    *     ~15 s copying 12.5 M pair rows; the grid does the same
+    *     comparisons in < 2 s).
     *   - larger corpora: **prefix-filtered shingle join** (the PPJoin
     *     family): under a global rarest-first shingle order, two docs with
     *     J ≥ t must share one of their first `n − ⌈t·n⌉ + 1` shingles, so
@@ -296,55 +294,20 @@ object Dedup {
       .select(col("a_id"), col("b_id"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** Blocked all-pairs grid over (id, hs, n) docsets: B(B+1)/2 independent
-    * block-pair tasks, each a tight JVM merge-intersection loop with a
-    * size-ratio skip. Emits (a_id, b_id, jaccard ≥ threshold), unrounded. */
-  private def blockedGridPairs(docsets: DataFrame, threshold: Double): DataFrame = {
-    val spark = docsets.sparkSession
-    import spark.implicits._
-    val numBlocks = math.max(2, math.ceil(math.sqrt(
-      4.0 * spark.sparkContext.defaultParallelism)).toInt)
-    val numCombos = numBlocks * (numBlocks + 1) / 2
-    val blocks = docsets
-      .select(pmod(hash(col("id")), lit(numBlocks)).cast("int").as("blk"),
-        struct(col("id"), col("hs"), col("n")).as("ds"))
-      .groupBy("blk").agg(collect_list(col("ds")).as("items"))
-      .as[Block]
-    val t = threshold
-    blocks.alias("L")
-      .joinWith(blocks.alias("R"), col("L.blk") <= col("R.blk"))
-      .repartition(numCombos)
-      .flatMap { case (lb, rb) =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-        val same = lb.blk == rb.blk
-        var i = 0
-        while (i < lb.items.length) {
-          val a = lb.items(i)
-          val x = a.hs
-          var j = if (same) i + 1 else 0
-          while (j < rb.items.length) {
-            val b = rb.items(j)
-            // J ≤ min/max: skip hopeless pairs before the merge.
-            if (math.min(a.n, b.n) >= t * math.max(a.n, b.n)) {
-              val y = b.hs
-              var p = 0; var q = 0; var c = 0L
-              while (p < x.length && q < y.length) {
-                val u = x(p); val v = y(q)
-                if (u == v) { c += 1; p += 1; q += 1 }
-                else if (u < v) p += 1
-                else q += 1
-              }
-              val jac = c.toDouble / (a.n + b.n - c)
-              if (jac >= t) out += ((math.min(a.id, b.id),
-                math.max(a.id, b.id), jac))
-            }
-            j += 1
-          }
-          i += 1
-        }
-        out
-      }.toDF("a_id", "b_id", "jaccard")
-  }
+  /** All docset pairs with jaccard ≥ threshold on the [[PairGrid]] (one
+    * group of ⌈√(4·par)⌉ blocks, at least 2). Emits (a_id, b_id, jaccard),
+    * unrounded. */
+  private def blockedGridPairs(docsets: DataFrame, threshold: Double): DataFrame =
+    PairGrid.pairs[ShingleSet](
+        docsets.select(lit(0L).as("grp"), col("id"), struct(col("hs"), col("n")).as("p")),
+        Map(0L -> PairGrid.minBlocks(docsets.sparkSession.sparkContext.defaultParallelism)),
+        threshold, "jaccard") { (a, b) =>
+      // J ≤ min/max: skip hopeless pairs before the merge (NaN never passes).
+      if (math.min(a.n, b.n) >= threshold * math.max(a.n, b.n)) {
+        val c = VectorKernels.sortedCommon(a.hs, b.hs)
+        c.toDouble / (a.n + b.n - c)
+      } else Double.NaN
+    }
 
   /** Prefix-filtered shingle join (PPJoin family) over (id, hs, n) docsets:
     * under a global rarest-first shingle order, two docs with J ≥ t must
@@ -1649,24 +1612,14 @@ object Dedup {
           // surfaces exactly once (same-block pairs keep the id tiebreak;
           // cross-block orientation is arbitrary, so least/greatest
           // restores a_id < b_id — the join path's exact ordering).
-          // Block count per hot bucket = the listPairsBlocked sizing: the
-          // per-task work bound (bsize/blockRows) PLUS a parallelism
-          // floor by each bucket's share of the hot pair work
-          // (nb ≈ bsize·√(8·par/Σ bsize²) puts ~4·par combos on the
-          // buckets that own the work) — a fixed row bound alone lets ONE
-          // 30k-row bucket run as a 2-block/3-combo grid on a 32-core
-          // box (measured: m6's sf1 byte-hash buckets). Cold buckets
-          // need no floor: they are many independent join keys already.
-          val par = sig.sparkSession.sparkContext.defaultParallelism
-          val hotWork = hot.iterator.map { case (_, s) => s.toDouble * s }.sum
-          val parScale =
-            if (hotWork > 0) math.sqrt(8.0 * par / hotWork) else 0.0
-          // floor on the par term, as in listPairsBlocked: ceil would
-          // double-split every bucket in the 1.x band when hot buckets
-          // are numerous enough to parallelize by key count alone.
-          val nbOf = hot.map { case (k, s) =>
-            k -> math.max(math.ceil(s.toDouble / blockRows),
-              math.floor(s * parScale)).toInt.max(1) }.toMap
+          // Block count per hot bucket: PairGrid.blocksPerGroup over the
+          // hot buckets (its scaladoc has the rule) — a fixed row bound
+          // alone lets ONE 30k-row bucket run as a 2-block/3-combo grid
+          // on a 32-core box (measured: m6's sf1 byte-hash buckets). Cold
+          // buckets need no floor: they are many independent join keys
+          // already.
+          val nbOf = PairGrid.blocksPerGroup(hot, blockRows,
+            sig.sparkSession.sparkContext.defaultParallelism)
           val cold = live.where(!key.isin(hot.map(_._1): _*))
           val hotRaw = live.where(key.isin(hot.map(_._1): _*))
             .withColumn("nb", element_at(typedlit(nbOf), key))
@@ -1890,12 +1843,11 @@ object Dedup {
       .where(col("n_shared") >= minShared)
   }
 
-  /** Embedding near-dedup: exact pairs with cosine ≥ threshold, computed on
-    * the blocked all-pairs grid ([[Similarity.cosinePairsBlocked]]) — the
-    * corpus-wide shape: B(B+1)/2 co-located block-pair tasks, bounded
-    * per-task memory, no BroadcastNestedLoopJoin. (Exactness is the
-    * operator's contract; for approximate-but-subquadratic near-dup use
-    * [[Similarity.lshTopK]]'s bucketing.) */
+  /** Embedding near-dedup: exact pairs with cosine ≥ threshold,
+    * [[Similarity.cosinePairsBlocked]] on the [[PairGrid]] (see there for
+    * the shape). (Exactness is the operator's contract; for
+    * approximate-but-subquadratic near-dup use [[Similarity.lshTopK]]'s
+    * bucketing.) */
   def embedding(
       emb: DataFrame,
       idCol: String,

@@ -6,7 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.sql.graft.VectorKernels
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
 
 import graft.functions.GraftFunctions
 
@@ -164,264 +165,38 @@ object Similarity {
       .select(col("a_id"), col("b_id"), round(col("cos"), 4).as("cos_sim"))
   }
 
-  private[operators] case class VecRow[I](id: I, v: Array[Double], nrm: Double)
+  /** A vector payload of [[PairGrid]]: the doubles and their norm. */
+  private[operators] case class Vec(v: Array[Double], nrm: Double)
 
-  /** Exact all-pairs cosine ≥ threshold as a **blocked grid** (the shape
-    * exact all-pairs should take on a cluster — same pattern as
-    * [[Dedup.exactJaccard]]'s all-pairs path): vectors hash into B blocks,
-    * the B(B+1)/2 block pairs become independent co-located tasks, and each
-    * task runs a tight JVM dot-product loop over primitive arrays. Work is
-    * inherently O(n²) (that is the operator's contract — it is the exact
-    * ground truth LSH/IVF approximate), but no O(n²) join rows are ever
-    * materialized, no single task exceeds two blocks of vectors, and the
-    * plan is two broadcast-hash equi-joins (the tiny combo grid against the
-    * block table) — no BroadcastNestedLoopJoin, no CartesianProduct.
-    * B scales with corpus size (`n / targetBlockRows`) so per-task memory
-    * stays bounded as the corpus grows.
-    *
-    * Per-pair arithmetic (sequential IEEE dot, one sqrt per vector) is
-    * identical to [[cosinePairs]], so results hash-match it and the oracle.
-    * Ids keep their source type: integral ids run the long path (numeric
-    * a_id < b_id pair ordering, cast back on output), anything else runs as
-    * string with lexicographic pair ordering. */
+  /** Cosine on the grid: [[VectorKernels.dot]] over the shorter length,
+    * then the single-op divide by the norm product — the arithmetic of
+    * [[cosinePairs]]. A zero norm gives NaN, which no threshold keeps. */
+  private val cosineScore: PairGrid.Score[Vec] = (a, b) =>
+    VectorKernels.dot(a.v, b.v) / (a.nrm * b.nrm)
+
+  /** Exact all-pairs cosine ≥ threshold on the [[PairGrid]] (one group;
+    * shape, orientation and bit-identity with [[cosinePairs]] are stated
+    * there). The block count is `⌈n/targetBlockRows⌉` or the grid's
+    * parallelism minimum, whichever is larger, so per-task memory stays
+    * bounded as the corpus grows. Output: (a_id, b_id, cos_sim rounded to
+    * 4), ids in their source type. */
   def cosinePairsBlocked(
       emb: DataFrame,
       idCol: String,
       vecCol: String,
       threshold: Double,
-      targetBlockRows: Int = 4096): DataFrame =
-    emb.schema(idCol).dataType match {
-      case t @ (ByteType | ShortType | IntegerType | LongType) =>
-        cosinePairsBlockedImpl[Long](emb, col(idCol).cast(LongType), vecCol,
-          threshold, targetBlockRows)
-          .select(col("a_id").cast(t).as("a_id"),
-            col("b_id").cast(t).as("b_id"), col("cos_sim"))
-      case StringType =>
-        cosinePairsBlockedImpl[String](emb, col(idCol), vecCol, threshold,
-          targetBlockRows)(implicitly, Utf8IdOrdering)
-      case _ =>
-        cosinePairsBlockedImpl[String](emb, col(idCol).cast(StringType),
-          vecCol, threshold, targetBlockRows)(implicitly, Utf8IdOrdering)
-    }
-
-  /** String-id pair orientation must match [[cosinePairs]]' `x.id < y.id`,
-    * which Spark evaluates as a BINARY (UTF-8 byte) compare. Scala's default
-    * Ordering[String] compares UTF-16 code units — for supplementary-plane
-    * characters the two disagree, which would flip (a_id, b_id) orientation
-    * between the blocked and join paths and break their hash-match
-    * guarantee. */
-  private object Utf8IdOrdering extends Ordering[String] {
-    def compare(a: String, b: String): Int =
-      org.apache.spark.unsafe.types.UTF8String.fromString(a)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-  }
-
-  private def cosinePairsBlockedImpl[I: TypeTag](
-      emb: DataFrame,
-      idExpr: Column,
-      vecCol: String,
-      threshold: Double,
-      targetBlockRows: Int)(implicit ord: Ordering[I]): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    implicit val rowEnc: Encoder[(Int, Int, Array[VecRow[I]], Array[VecRow[I]])] =
-      ExpressionEncoder[(Int, Int, Array[VecRow[I]], Array[VecRow[I]])]()
-    implicit val outEnc: Encoder[(I, I, Double)] =
-      ExpressionEncoder[(I, I, Double)]()
-    val e = emb.select(idExpr.as("id"), toDoubleVec(col(vecCol)).as("v"))
+      targetBlockRows: Int = 4096): DataFrame = {
+    val e = emb.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
       .withColumn("nrm", norm(col("v")))
     val n = e.count()
-    val numBlocks = math.max(2, math.max(
-      math.ceil(math.sqrt(4.0 * spark.sparkContext.defaultParallelism)),
-      math.ceil(n.toDouble / targetBlockRows)).toInt)
-    val numCombos = numBlocks * (numBlocks + 1) / 2
-    val blocks = e
-      .select(pmod(hash(col("id")), lit(numBlocks)).cast("int").as("blk"),
-        struct(col("id"), col("v"), col("nrm")).as("vr"))
-      .groupBy("blk").agg(collect_list(col("vr")).as("items"))
-    val combos = spark
-      .createDataset(for { i <- 0 until numBlocks; j <- i until numBlocks }
-        yield (i, j))
-      .toDF("bi", "bj")
-    val t = threshold
-    broadcast(combos)
-      .join(blocks.select(col("blk").as("bi"), col("items").as("litems")), "bi")
-      .join(blocks.select(col("blk").as("bj"), col("items").as("ritems")), "bj")
-      .select(col("bi"), col("bj"), col("litems"), col("ritems"))
-      .repartition(numCombos)
-      .as[(Int, Int, Array[VecRow[I]], Array[VecRow[I]])]
-      .flatMap { case (bi, bj, litems, ritems) =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(I, I, Double)]
-        val same = bi == bj
-        var i = 0
-        while (i < litems.length) {
-          val a = litems(i)
-          val av = a.v
-          var j = if (same) i + 1 else 0
-          while (j < ritems.length) {
-            val b = ritems(j)
-            val bv = b.v
-            var d = 0.0
-            var p = 0
-            while (p < av.length) { d += av(p) * bv(p); p += 1 }
-            val cos = d / (a.nrm * b.nrm)
-            if (cos >= t) {
-              if (ord.lteq(a.id, b.id)) out += ((a.id, b.id, cos))
-              else out += ((b.id, a.id, cos))
-            }
-            j += 1
-          }
-          i += 1
-        }
-        out
-      }
-      .toDF("a_id", "b_id", "cos")
+    val numBlocks = math.max(
+      PairGrid.minBlocks(emb.sparkSession.sparkContext.defaultParallelism),
+      math.ceil(n.toDouble / targetBlockRows).toInt)
+    PairGrid.pairs[Vec](
+        e.select(lit(0L).as("grp"), col("id"), struct(col("v"), col("nrm")).as("p")),
+        Map(0L -> numBlocks), threshold, "cos")(cosineScore)
       .select(col("a_id"), col("b_id"), round(col("cos"), 4).as("cos_sim"))
   }
-
-  /** All within-list pairs (a_id, b_id, cos ≥ threshold) over an already
-    * list-assigned (id, cv, cn, list) frame, as a **per-list blocked grid**
-    * — the [[cosinePairsBlocked]] kernel applied inside each inverted list.
-    *
-    * This replaces the row-per-pair `list == list && a.id < b.id` self-join
-    * (round 17): a giant list is ONE join key, and a sort-merge/hash join
-    * computes that key's whole |list|²/2 pair grid inside a single task —
-    * zero parallelism, the single-enormous-key skew AQE's skew-join cannot
-    * split (guide §2.5). The nlist=1 exact-reference arm of
-    * d15b_semantic_invariants is the worst case: the full n²/2 grid ran on
-    * one core (measured 171 s at native sf1). Here each list is hashed into
-    * B_l blocks (B_l grows with the list so per-task memory stays bounded,
-    * plus a parallelism floor for the largest lists), the B_l(B_l+1)/2
-    * block pairs become independent tasks, and each task runs the same
-    * tight sequential-IEEE dot loop as [[cosinePairsBlockedImpl]] — so
-    * emitted pairs and cosine values are bit-identical to the join path
-    * (DotProduct accumulates in index order; the division and the
-    * `cn_a · cn_b` product are single IEEE ops).
-    *
-    * The per-list sizing aggregate collects one (list, count) row per list
-    * to the driver — quantizer-sized (nlist ≤ √n by [[ivfCosinePairs]]'s
-    * default), the same driver-state class as the centroids themselves.
-    *
-    * Duplicate pairs from nprobe multi-assignment (same pair sharing
-    * several lists) are emitted once per shared list, exactly like the
-    * join path — callers keep their `groupBy(a_id, b_id)` dedup. */
-  private def listPairsBlockedImpl[I: TypeTag](
-      coded: DataFrame,
-      idExpr: Column,
-      threshold: Double,
-      targetBlockRows: Int)(implicit ord: Ordering[I]): DataFrame = {
-    val spark = coded.sparkSession
-    import spark.implicits._
-    implicit val rowEnc: Encoder[(Int, Int, Array[VecRow[I]], Array[VecRow[I]])] =
-      ExpressionEncoder[(Int, Int, Array[VecRow[I]], Array[VecRow[I]])]()
-    implicit val outEnc: Encoder[(I, I, Double)] =
-      ExpressionEncoder[(I, I, Double)]()
-    val c = coded.select(col("list").cast("long").as("list"),
-      idExpr.as("id"), col("cv").as("v"), col("cn").as("nrm"))
-    val par = spark.sparkContext.defaultParallelism
-    val sizes = c.groupBy("list").agg(count(lit(1)).as("cnt")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    if (sizes.isEmpty)
-      return spark.emptyDataset[(I, I, Double)].toDF("a_id", "b_id", "cos")
-    // Block count per list: bounded per-task rows (the memory bound), plus
-    // a parallelism floor sized by each list's share of the TOTAL pair
-    // work (Σ cnt²): splitting list l into B_l blocks yields ~B_l²/2
-    // combos, so B_l ≈ cnt_l·√(8·par/totalWork) makes the grid's combo
-    // count ≈ 4·par overall, concentrated on the lists that own the work —
-    // a single giant list (nlist=1) splits across every core while a sea
-    // of small lists stays at one block each (their parallelism is the
-    // list count itself).
-    val totalWork = sizes.iterator.map { case (_, c) => c.toDouble * c }.sum
-    val parScale = if (totalWork > 0) math.sqrt(8.0 * par / totalWork) else 0.0
-    // FLOOR, not ceil, on the parallelism term (round 18): for L
-    // equal-sized lists cnt·parScale = √(8·par/L), so any corpus with
-    // L ∈ (2·par, 8·par) lists read 1.x and ceil split EVERY list in two —
-    // doubling the combo count and replicating every vector through the
-    // pair exchange for parallelism the list count already provides
-    // (measured at native sf1/local[32]: d15's pair stage shuffled 408 MB
-    // at 32 cores vs 317 at 8, scaling ratio 0.46 — slower on MORE
-    // cores). Flooring only trims that 1.x→1 band; a genuinely hot list's
-    // cnt·parScale ≫ 1 splits the same as before, and the memory bound
-    // still applies.
-    val blocksOf: Map[Long, Int] = sizes.map { case (l, cnt) =>
-      l -> math.max(1, math.max(
-        math.ceil(cnt.toDouble / targetBlockRows),
-        math.floor(cnt * parScale)).toInt)
-    }.toMap
-    val combos = spark.createDataset(
-      sizes.flatMap { case (l, _) =>
-        val b = blocksOf(l)
-        for { i <- 0 until b; j <- i until b } yield (l, i, j)
-      }.toSeq)
-      .toDF("list", "bi", "bj")
-    val numCombos = sizes.iterator.map { case (l, _) =>
-      val b = blocksOf(l).toLong; b * (b + 1) / 2
-    }.sum
-    val bOf = typedlit(blocksOf)
-    val blocks = c
-      .select(col("list"),
-        pmod(hash(col("id")), element_at(bOf, col("list"))).cast("int").as("blk"),
-        struct(col("id"), col("v"), col("nrm")).as("vr"))
-      .groupBy("list", "blk").agg(collect_list(col("vr")).as("items"))
-    val t = threshold
-    broadcast(combos)
-      .join(blocks.select(col("list"), col("blk").as("bi"),
-        col("items").as("litems")), Seq("list", "bi"))
-      .join(blocks.select(col("list"), col("blk").as("bj"),
-        col("items").as("ritems")), Seq("list", "bj"))
-      .select(col("bi"), col("bj"), col("litems"), col("ritems"))
-      .repartition(math.min(numCombos, 8L * par).toInt)
-      .as[(Int, Int, Array[VecRow[I]], Array[VecRow[I]])]
-      .flatMap { case (bi, bj, litems, ritems) =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(I, I, Double)]
-        val same = bi == bj
-        var i = 0
-        while (i < litems.length) {
-          val a = litems(i)
-          val av = a.v
-          var j = if (same) i + 1 else 0
-          while (j < ritems.length) {
-            val b = ritems(j)
-            val bv = b.v
-            var d = 0.0
-            var p = 0
-            while (p < av.length) { d += av(p) * bv(p); p += 1 }
-            val cos = d / (a.nrm * b.nrm)
-            if (cos >= t) {
-              if (ord.lteq(a.id, b.id)) out += ((a.id, b.id, cos))
-              else out += ((b.id, a.id, cos))
-            }
-            j += 1
-          }
-          i += 1
-        }
-        out
-      }
-      .toDF("a_id", "b_id", "cos")
-  }
-
-  /** Type-dispatching wrapper for [[listPairsBlockedImpl]] mirroring
-    * [[cosinePairsBlocked]]'s id handling: integral ids pair-order
-    * numerically and cast back; everything else orders as UTF-8 strings —
-    * both identical to the join path's `a.id < b.id` comparison. */
-  private[operators] def listPairsBlocked(
-      coded: DataFrame,
-      idType: DataType,
-      threshold: Double,
-      targetBlockRows: Int = 4096): DataFrame =
-    idType match {
-      case t @ (ByteType | ShortType | IntegerType | LongType) =>
-        listPairsBlockedImpl[Long](coded, col("id").cast(LongType),
-          threshold, targetBlockRows)
-          .select(col("a_id").cast(t).as("a_id"),
-            col("b_id").cast(t).as("b_id"), col("cos"))
-      case StringType =>
-        listPairsBlockedImpl[String](coded, col("id"), threshold,
-          targetBlockRows)(implicitly, Utf8IdOrdering)
-      case _ =>
-        listPairsBlockedImpl[String](coded, col("id").cast(StringType),
-          threshold, targetBlockRows)(implicitly, Utf8IdOrdering)
-    }
 
   /** Deterministic pseudo-random unit-ish hyperplanes (seeded — identical on
     * every executor and every run). */
@@ -1426,16 +1201,18 @@ object Similarity {
     //     side's partitions, shuffles nothing, and beats any blocked grid
     //     at this size (the grid's collect_list + block replication
     //     shuffled 19 MB where the join moved 60 KiB).
-    //   - above the floor: the blocked tight-loop grid (listPairsBlocked).
-    //     A list is ONE join key, so past broadcastability the join plans
-    //     sort-merge and computes each list's whole |list|²/2 grid inside
-    //     a single task — zero parallelism; at nlist=1 (the
-    //     exact-reference arm of d15b) that serialized the entire n²/2
-    //     grid on one core (measured 171 s at native sf1).
-    // Arithmetic per pair is bit-identical on both routes (sequential
-    // IEEE dot / single-op divide — DotProduct's loop), so pairs and
-    // cos_sim hash-match either way (OperatorsSpec pins blocked ≡ grid);
-    // multi-list duplicates dedup through the max aggregate on both.
+    //   - above the floor: the PairGrid with one group per list, sized by
+    //     PairGrid.blocksPerGroup at 4096 rows per block from one
+    //     (list, count) row per list collected from the executors
+    //     (quantizer-sized, like the centroids). A list is ONE join key,
+    //     so past broadcastability the join plans sort-merge and computes
+    //     each list's whole |list|²/2 grid inside a single task — zero
+    //     parallelism; at nlist=1 (the exact-reference arm of d15b) that
+    //     serialized the entire n²/2 grid on one core (measured 171 s at
+    //     native sf1).
+    // Pairs and cos_sim hash-match either way (the PairGrid scaladoc says
+    // why; OperatorsSpec pins blocked ≡ join); multi-list duplicates
+    // dedup through the max aggregate on both.
     val pairFloor = emb.sparkSession.conf
       .get("spark.graft.similarity.pairJoinFloor", "16384").toLong
     val pairs =
@@ -1447,7 +1224,15 @@ object Similarity {
             try_divide(dot(col("a.cv"), col("b.cv")),
               col("a.cn") * col("b.cn")).as("cos"))
           .where(col("cos") >= threshold)
-      else listPairsBlocked(coded, emb.schema(idCol).dataType, threshold)
+      else {
+        val rows = coded.select(col("list").cast("long").as("grp"), col("id"),
+          struct(col("cv").as("v"), col("cn").as("nrm")).as("p"))
+        val sizes = rows.groupBy("grp").agg(count(lit(1))).collect()
+          .map(r => (r.getLong(0), r.getLong(1)))
+        PairGrid.pairs[Vec](rows, PairGrid.blocksPerGroup(sizes.toSeq, 4096,
+          emb.sparkSession.sparkContext.defaultParallelism), threshold, "cos")(
+          cosineScore)
+      }
     pairs.groupBy("a_id", "b_id")
       .agg(round(max(col("cos")), 4).as("cos_sim"))
   }

@@ -406,8 +406,8 @@ object TakedownStream {
       FpDedupStream.delete(state, None, famRows("fp"), "text"))
     // nd/wn shrink by the RECORDED ids, not by content re-resolution,
     // which would also match docs re-admitted since the first attempt.
-    tombLeg("nd", targets.nd)(_ => walRows("nd_ids"))((state, _) =>
-      state.adopt(Dedup.removeNearDupIds(state.index, walRows("nd_ids"))))
+    tombLeg("nd", targets.nd)(_ => walRows("nd_ids"))((state, ids) =>
+      state.adopt(Dedup.removeNearDupIds(state.index, ids)))
     tombLeg("sem", targets.sem)(_ =>
       recorded.where(col("family") === "sem").select(col("cid").as("id")))(
       (state, ids) => state.adopt(Dedup.removeSemIds(state.index, ids)))

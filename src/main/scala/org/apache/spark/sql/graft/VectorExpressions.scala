@@ -125,6 +125,20 @@ object VectorKernels {
     s
   }
 
+  /** [[dot]] over JVM arrays, for [[graft.operators.PairGrid]]'s decoded
+    * payloads: the same sequential loop, so both give the same bits. It is
+    * kept beside the `ArrayData` loop because that one reads through
+    * `Unsafe`, and on decoded vectors (an `UnsafeArrayData` view per item)
+    * it measured about 2.5× slower per pair (BENCH_NOTES "One pair grid
+    * for the exact all-pairs operators"). */
+  def dot(x: Array[Double], y: Array[Double]): Double = {
+    val n = math.min(x.length, y.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x(i) * y(i); i += 1 }
+    s
+  }
+
   /** Σ bit_count(x(w) & y(w)) over the shorter operand's word count. */
   def bitsetCommon(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
@@ -147,6 +161,22 @@ object VectorKernels {
     while (i < nx && j < ny) {
       val u = x.getLong(i)
       val v = y.getLong(j)
+      if (u == v) { s += 1; i += 1; j += 1 }
+      else if (u < v) i += 1
+      else j += 1
+    }
+    s
+  }
+
+  /** [[sortedCommon]] over JVM arrays, for the pair grid (see the
+    * array [[dot]] for why it is kept beside the `ArrayData` loop). */
+  def sortedCommon(x: Array[Long], y: Array[Long]): Long = {
+    var i = 0
+    var j = 0
+    var s = 0L
+    while (i < x.length && j < y.length) {
+      val u = x(i)
+      val v = y(j)
       if (u == v) { s += 1; i += 1; j += 1 }
       else if (u < v) i += 1
       else j += 1

@@ -449,6 +449,56 @@ class OperatorsSpec extends SparkSpecBase {
     assert(sPairs == grid, "string-id pair orientation diverges")
   }
 
+  test("blocked cosine on ragged vectors ≡ the join routes, both orientations") {
+    import spark.implicits._
+    // Lengths 2..5 over 80 vectors, so every grid has block pairs where the
+    // longer vector sits on either side; every route dots over the
+    // shorter length.
+    val emb = (1L to 80L).map { i =>
+      (i, Seq.tabulate(2 + (i % 4).toInt)(k => (1 + (i * 7 + k * 13) % 10).toFloat))
+    }.toDF("vec_id", "embedding")
+    def key(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getLong(1), r.getDouble(2))
+    val join = Similarity.cosinePairs(emb, "vec_id", "embedding", 0.5)
+      .collect().map(key).toSet
+    assert(join.nonEmpty)
+    assert(Similarity.cosinePairsBlocked(emb, "vec_id", "embedding", 0.5)
+      .collect().map(key).toSet == join)
+    def ivf() = Similarity
+      .ivfCosinePairs(emb, "vec_id", "embedding", 0.5, nlist = 1, nprobe = 1)
+      .collect().map(key).toSet
+    val joinRoute = ivf()
+    val key0 = "spark.graft.similarity.pairJoinFloor"
+    spark.conf.set(key0, "0") // 80 rows > 0: the per-list grid
+    val gridRoute = try ivf() finally spark.conf.unset(key0)
+    assert(joinRoute == join)
+    assert(gridRoute == joinRoute)
+  }
+
+  test("exactJaccard: blocked grid ≡ prefix-filter route, with and " +
+      "without identical-set groups") {
+    def rows(corpus: org.apache.spark.sql.DataFrame, maxAllPairsDocs: Long,
+        collapseFloor: Long) =
+      Dedup.exactJaccard(corpus, "doc_id", "text",
+          maxAllPairsDocs = maxAllPairsDocs, collapseFloor = collapseFloor)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // The documents table has identical-set groups (pairs at jaccard 1.0);
+    // dropping the b side of each such pair leaves a corpus with none.
+    val grouped = spark.table("documents")
+    val copies = rows(grouped, 8192, 8192).collect { case (_, b, 1.0) => b }
+    assert(copies.nonEmpty)
+    val distinct = grouped.where(!col("doc_id").isin(copies.toSeq: _*))
+    for ((name, corpus, hasGroups) <- Seq(("grouped", grouped, true),
+        ("distinct", distinct, false)); floor <- Seq(8192L, 0L)) {
+      val grid = rows(corpus, 8192, floor)
+      val prefix = rows(corpus, 0, floor)
+      assert(grid.nonEmpty, s"$name floor=$floor")
+      assert(grid.exists(_._3 == 1.0) == hasGroups, s"$name floor=$floor")
+      assert(grid == prefix, s"$name floor=$floor: " +
+        s"grid-only=${(grid -- prefix).take(3)} prefix-only=${(prefix -- grid).take(3)}")
+    }
+  }
+
   test("lshTopK: dim inferred from the corpus; explicit mismatch throws") {
     import spark.implicits._
     val rnd = new scala.util.Random(3)

@@ -18,36 +18,38 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("global sweep: no query falls back to cartesian/nested-loop joins") {
-    // Cross joins are the operator under test for j5/j6/j7 and the tiny
-    // broadcast combo-grid drivers (blocked cosine/jaccard, s4's 1-row
-    // query-vector broadcast) are cartesian BY DESIGN — bounded fan-out of
-    // a broadcast side, not an O(n²) row blowup.
+    // Cross joins are the operator under test for j5/j6/j7, and s4's 1-row
+    // query-vector broadcast is cartesian BY DESIGN — bounded fan-out of a
+    // broadcast side, not an O(n²) row blowup. (The exact all-pairs grids
+    // join their block pairs on equi keys, so they need no entry.)
     val intentional = Set("j5_cross", "j6_implicit_cross", "j7_self_cross",
-      "d5_dedup_embedding", "d3_dedup_jaccard", "d7_dedup_clusters",
-      "s4_hybrid_search", "x5_leakage_safe_split")
+      "s4_hybrid_search")
     // BNLJ additionally tolerated where the broadcast side is BOUNDED by
-    // design — a scalar subquery result (1×n "join" = a map) or brute ANN's
-    // fixed query batch scored against every corpus row (the operator's
-    // exactness contract).
-    val scalarBroadcast = Set("q4_scalar_subquery", "h6_forecast_revenue",
-      "t13_tfidf_search", "s1_ann_brute", "s5_ann_pq", "s6_ann_pq_index",
+    // design — brute ANN's fixed query batch scored against every corpus
+    // row (the operator's exactness contract).
+    val scalarBroadcast = Set("s1_ann_brute", "s5_ann_pq", "s6_ann_pq_index",
       // Oracle-invariant attestation queries (round-10 upgrades, split
       // into *b companions round 11): their result frame is a cross of
       // SINGLE-ROW aggregates (violation counters) — a 1×1 product, not
       // a row blowup.
       "a14_approx_distinct", "s9_ann_ivf_deleted",
       "s2_ann_lsh", "s3_ann_ivf", "x7b_export_invariants",
-      "s6b_pq_index_parity", "d11b_ivf_pair_invariants",
-      "a19b_approx_percentile_bounds", "t7b_rolling_fp_invariants",
+      "s6b_pq_index_parity", "t7b_rolling_fp_invariants",
       "t18b_bpe_train_invariants", "t22b_unigram_invariants")
+    // Every allowlisted name must still need its entry: one whose plan has
+    // neither operator is stale and fails too.
     val offenders = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(intentional)
       .flatMap { name =>
         val plan = SparkEntry.queries(name)(spark, dir)
           .queryExecution.executedPlan.toString
-        if (plan.contains("CartesianProduct")) Some(s"$name: CartesianProduct")
-        else if (plan.contains("BroadcastNestedLoopJoin") &&
-            !scalarBroadcast(name)) Some(s"$name: BroadcastNestedLoopJoin")
+        val cartesian = plan.contains("CartesianProduct")
+        val bnlj = plan.contains("BroadcastNestedLoopJoin")
+        if ((intentional(name) || scalarBroadcast(name)) && !cartesian && !bnlj)
+          Some(s"$name: allowlisted, but its plan has neither " +
+            "CartesianProduct nor BroadcastNestedLoopJoin")
+        else if (intentional(name)) None
+        else if (cartesian) Some(s"$name: CartesianProduct")
+        else if (bnlj && !scalarBroadcast(name)) Some(s"$name: BroadcastNestedLoopJoin")
         else None
       }
     assert(offenders.isEmpty, offenders.mkString("\n"))
