@@ -30,12 +30,8 @@ class CrashRestartSpec extends SparkSpecBase {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar"
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    // C1 only: most children live ~30 s, too short for C2 to pay back.
-    // Their wall time stays the same and their CPU time halves (the ~80 s
-    // export child: +12% wall, −30% CPU), which leaves cores to the suites
-    // that run beside this one (build.sbt testGrouping).
     val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx2g", "-XX:TieredStopAtLevel=1", "-Dspark.ui.enabled=false",
+      "-Xmx2g", "-Dspark.ui.enabled=false",
       "-cp", System.getProperty("java.class.path"),
       "graft.tools.CrashStreamMain") ++ args
     val pb = new ProcessBuilder(cmd: _*)
