@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo, ExprId, Expression, Literal}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo, ExprId, Expression, Literal, UserDefinedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Max, Min}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -25,21 +26,43 @@ import org.apache.spark.sql.types.{DateType, MetadataBuilder, TimestampNTZType, 
   * (see [[singlePartition]]). The returned DataFrame is lazy; callers
   * choose the action/sink — unlike the reference, which eagerly
   * materializes a pandas frame per query.
+  *
+  * A session's repeated texts reuse their rewritten, analyzed plan (the
+  * plan cache, [[PlanCache]]): a hit skips the pre-pass, parse, analysis and
+  * rewrites, while optimization — and with it `now()`/`today()` — runs on
+  * every call. Each session keeps at most [[PlanCache.MaxEntries]] plans,
+  * least recently used evicted first. An entry is keyed by the SQL text and
+  * the session's set confs (`SQLConf.getAllConfs`: the symmetric-EXCEPT
+  * flag, the broadcast threshold, the time zone analysis bakes into casts,
+  * case sensitivity, ANSI mode, ...). It is served only while every temp
+  * view it references still maps to the same catalog entry, so a view that
+  * is re-registered or dropped, through `Engine` or not, is never served
+  * stale; `registerTempTable`/`removeTempTable` also drop the name's entries
+  * at once. Plans that are not safe to share are never cached: a leaf other
+  * than a `LocalRelation`, `OneRowRelation` or CTE reference (catalog
+  * tables and file scans, also under a temp view, carry their session, and
+  * a cached plan must not keep its session alive), a nondeterministic
+  * expression (`rand()` would replay its seed) or a UDF (a re-registered
+  * UDF would be served stale). [[planCacheStats]] counts each decision.
   */
 object Engine {
 
   /** Bind a DataFrame to a SQL-visible name.
     * Reference: `register_temp_table` (`sql_select_query.py:15-39`). */
-  def registerTempTable(df: DataFrame, name: String): Unit =
+  def registerTempTable(df: DataFrame, name: String): Unit = {
     df.createOrReplaceTempView(name)
+    PlanCache.evict(df.sparkSession, name)
+  }
 
   /** Unbind a previously registered name. Unknown names throw, matching the
     * reference, which propagates the underlying registry's error instead of
     * silently no-opping (`sql_select_query.py:42-61`). */
-  def removeTempTable(spark: SparkSession, name: String): Unit =
+  def removeTempTable(spark: SparkSession, name: String): Unit = {
+    PlanCache.evict(spark, name)
     if (!spark.catalog.dropTempView(name))
       throw new IllegalArgumentException(
         s"Table $name is not registered: cannot remove")
+  }
 
   /** Conf key for the opt-in reference EXCEPT compat mode. */
   val SymmetricExceptKey = "spark.graft.compat.symmetricExcept"
@@ -47,13 +70,131 @@ object Engine {
   /** Parse + plan a SELECT against the registered tables; lazy result.
     * Reference: `query` (`sql_select_query.py:64-96`). The three plan
     * rewrites below each map the analyzed plan to a plan; the result is
-    * wrapped in one Dataset, and only when something changed. */
-  def query(spark: SparkSession, sql: String): DataFrame = {
-    val df = spark.sql(Dialect.rewrite(sql))
-    val analyzed = df.queryExecution.analyzed
-    val plan = namingParity(singlePartition(spark,
-      symmetricExceptCompat(spark, analyzed)))
-    if (plan eq analyzed) df else GraftBridge.ofRows(spark, plan)
+    * wrapped in one Dataset, and only when something changed. A repeated
+    * text is served from the session's [[PlanCache]]. */
+  def query(spark: SparkSession, sql: String): DataFrame =
+    PlanCache.through(spark, sql) {
+      val df = spark.sql(Dialect.rewrite(sql))
+      val analyzed = df.queryExecution.analyzed
+      val plan = namingParity(singlePartition(spark,
+        symmetricExceptCompat(spark, analyzed)))
+      if (plan eq analyzed) df else GraftBridge.ofRows(spark, plan)
+    }
+
+  /** What the session's plan cache decided so far: one outcome per
+    * [[query]] call, and the entries it holds now. */
+  final case class PlanCacheStats(entries: Int, outcomes: Map[String, Long]) {
+    def apply(outcome: String): Long = outcomes.getOrElse(outcome, 0L)
+  }
+
+  def planCacheStats(spark: SparkSession): PlanCacheStats =
+    PlanCache.stats(spark)
+
+  /** The per-session LRU of rewritten, analyzed plans behind [[query]].
+    * Every call has exactly one outcome:
+    *   - `hit`: a valid entry was served;
+    *   - `miss`: the plan was built and stored;
+    *   - `stale view`: an entry was found, but a temp view it references
+    *     now maps to another catalog entry (or none); the plan is rebuilt
+    *     and stored in its place;
+    *   - `non-local leaf`, `nondeterministic`, `udf`: the plan was built
+    *     and not stored (see the object doc of [[Engine]]).
+    *
+    * A hit hands out a copy of the stored tree: `Dataset` adds its id to
+    * the root's `DATASET_ID_TAG`, and a shared root would grow that set by
+    * one on every hit. Thread-safe; a session's state is weakly keyed, so
+    * the cache never keeps a session alive (its entries hold no session:
+    * only local rows and catalog entries). */
+  private[graft] object PlanCache {
+    val MaxEntries = 128
+
+    /** The analyzed plan, and the catalog entry of each temp view (by
+      * name) that its resolution read. */
+    private final case class Entry(plan: LogicalPlan,
+        views: Map[String, CatalogTable])
+
+    private final class State {
+      val entries = new java.util.LinkedHashMap[Any, Entry](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[Any, Entry]): Boolean = size > MaxEntries
+      }
+      val outcomes = scala.collection.mutable.Map[String, Long]()
+      def count(outcome: String): Unit =
+        outcomes(outcome) = outcomes.getOrElse(outcome, 0L) + 1
+    }
+
+    private val states = new PerSession[State]
+
+    /** Serve `sql` from the session's entries, or run `build` (the
+      * uncached path of [[query]]) and store its analyzed plan if it is
+      * safe to share. */
+    def through(spark: SparkSession, sql: String)(build: => DataFrame)
+        : DataFrame = {
+      val key = (sql, GraftBridge.conf(spark).getAllConfs)
+      val st = states.getOrElseUpdate(spark, new State)
+      val found = st.synchronized(Option(st.entries.get(key)))
+      val valid = found.filter(_.views.forall { case (name, desc) =>
+        GraftBridge.tempViewMeta(spark, name).exists(_ eq desc) })
+      valid.fold(miss(spark, st, key, found.isDefined, build)) { e =>
+        st.synchronized(st.count("hit"))
+        GraftBridge.ofRows(spark, e.plan.clone())
+      }
+    }
+
+    /** Run `build` and store its analyzed plan under `key` if it is safe to
+      * share; `stale` tells that an entry was found but rejected. */
+    private def miss(spark: SparkSession, st: State, key: Any, stale: Boolean,
+        build: => DataFrame): DataFrame = {
+      val out = build
+      val analyzed = out.queryExecution.analyzed
+      val nodes = analyzed.collectWithSubqueries { case p => p }
+      val exprs = nodes.flatMap(_.expressions)
+      val bypass =
+        if (nodes.exists {
+          case _: Command => true
+          // A CTE reference reads a definition inside the same plan.
+          case _: LocalRelation | _: OneRowRelation | _: CTERelationRef => false
+          case p => p.children.isEmpty
+        }) Some("non-local leaf")
+        else if (!exprs.forall(_.deterministic)) Some("nondeterministic")
+        else if (exprs.exists(_.exists(_.isInstanceOf[UserDefinedExpression])))
+          Some("udf")
+        else None
+      val entry = if (bypass.isDefined) None else Some(Entry(
+        GraftBridge.withoutDatasetIds(analyzed),
+        tempViews(analyzed).map(v => v.desc.identifier.table -> v.desc).toMap))
+      st.synchronized {
+        if (stale) st.entries.remove(key)
+        entry.foreach(st.entries.put(key, _))
+        st.count(bypass.getOrElse(if (stale) "stale view" else "miss"))
+      }
+      out
+    }
+
+    /** The temp views whose catalog entries resolution read: those in the
+      * plan, subqueries included, but not those inside a view stored as a
+      * plan (a `Dataset` view), whose own references were fixed when it was
+      * registered. A view stored as SQL text is resolved again on every
+      * analysis, so the views it names count too. */
+    private def tempViews(p: LogicalPlan): Seq[View] = p match {
+      case v: View if v.isTempView =>
+        v +: (if (v.desc.viewText.isDefined) tempViews(v.child) else Nil)
+      case _ => (p.children ++ p.subqueries).flatMap(tempViews)
+    }
+
+    /** Drop every entry that references the temp view `name` (case
+      * insensitive: dropping more than needed only costs a miss), so a
+      * replaced frame's rows are not pinned until LRU eviction. */
+    def evict(spark: SparkSession, name: String): Unit =
+      states.get(spark).foreach { st =>
+        st.synchronized(st.entries.values.removeIf(
+          _.views.keys.exists(_.equalsIgnoreCase(name))))
+      }
+
+    def stats(spark: SparkSession): PlanCacheStats = {
+      val st = states.getOrElseUpdate(spark, new State)
+      st.synchronized(PlanCacheStats(st.entries.size, st.outcomes.toMap))
+    }
   }
 
   /** Opt-in porting compat: the reference's `EXCEPT [DISTINCT]` is a
@@ -225,5 +366,22 @@ object Engine {
         .remove("__autoGeneratedAlias").build()
       Alias(a, nm)(explicitMetadata = Some(meta))
     }, plan)
+  }
+}
+
+/** State hung on a session without keeping it alive: entries are weakly
+  * keyed by session identity, so a session that is no longer used (and its
+  * temp views) can be collected. A value must not refer to its session, or
+  * it would keep its own key reachable. */
+private[graft] final class PerSession[V] {
+  private val m = new java.util.WeakHashMap[SparkSession, V]()
+
+  def get(spark: SparkSession): Option[V] = m.synchronized(Option(m.get(spark)))
+
+  def put(spark: SparkSession, v: V): Unit = m.synchronized(m.put(spark, v))
+
+  def getOrElseUpdate(spark: SparkSession, v: => V): V = m.synchronized {
+    val cur = m.get(spark)
+    if (cur != null) cur else { val n = v; m.put(spark, n); n }
   }
 }

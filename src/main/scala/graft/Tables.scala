@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Registers the driver testdata parquet tables (TESTDATA.md) as temp views,
@@ -14,11 +12,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val registered = new ConcurrentHashMap[SparkSession, String]()
+  /** The sfDir each session has registered (weakly keyed: a finished
+    * session and its temp views are not kept alive). */
+  private val registered = new PerSession[String]
 
   def ensure(spark: SparkSession, dir: String): Unit =
-    if (registered.get(spark) != dir) synchronized {
-      if (registered.get(spark) != dir) {
+    if (!registered.get(spark).contains(dir)) synchronized {
+      if (!registered.get(spark).contains(dir)) {
         // Session-level extensions: graft's native SQL functions.
         graft.functions.GraftFunctions.register(spark)
         // events.ts layout varies across testdata generations: older drivers
@@ -56,7 +56,8 @@ object Tables {
     spark.table(name)
   }
 
-  private val counts = new ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
+  private val counts = new PerSession[
+    java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]]
 
   /** Memoized row count of a registered base table: one count job per
     * (session, sfDir, table) — parquet-footer metadata, no scan — then a
@@ -64,7 +65,8 @@ object Tables {
     * adaptive strategy choice never adds a per-query job. */
   def rowCount(spark: SparkSession, dir: String, name: String): Long = {
     ensure(spark, dir)
-    counts.computeIfAbsent((spark, dir, name),
+    counts.getOrElseUpdate(spark, new java.util.concurrent.ConcurrentHashMap())
+      .computeIfAbsent((dir, name),
       _ => java.lang.Long.valueOf(spark.table(name).count())).longValue()
   }
 }

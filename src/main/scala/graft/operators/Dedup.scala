@@ -579,13 +579,8 @@ object Dedup {
     "graft_ndidx_p" + java.lang.Long.toHexString(
       java.lang.Integer.toUnsignedLong(path.hashCode)) + s"_g$gen"
 
-  /** Legacy (pre-generational) flat-layout table name. */
-  private def legacyPrefixTable(path: String): String =
-    "graft_ndidx_p" + java.lang.Long.toHexString(
-      java.lang.Integer.toUnsignedLong(path.hashCode))
-
   /** Load a [[NearDupIndex]] written by [[saveIndex]] — the newest
-    * committed generation (legacy flat layouts still load). Docsets/freq
+    * committed generation; a path without one throws. Docsets/freq
     * come back as MEMORY_AND_DISK persists (registered with the sketch
     * cache like a fresh build). The prefix frame is deliberately NOT
     * cached: it reads through the bucketed table so its HashPartitioning
@@ -596,8 +591,9 @@ object Dedup {
     * layout. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): NearDupIndex =
-    loadLatestGen(spark, path).map(_._1)
-      .getOrElse(legacyLoadIndex(spark, path))
+    loadLatestGen(spark, path).map(_._1).getOrElse(
+      throw new IllegalStateException(
+        s"no committed near-dup index generation at $path"))
 
   /** (index, gen, batch_id) of the newest committed generation, if any. */
   private[graft] def loadLatestGen(spark: org.apache.spark.sql.SparkSession,
@@ -624,38 +620,6 @@ object Dedup {
         params.getAs[Int]("shingle_n"), params.getAs[Double]("threshold"),
         layers = Seq(docsets, freq)), g, batchId)
     }
-
-  private def legacyLoadIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): NearDupIndex = {
-    val params = spark.read.parquet(s"$path/params").head()
-    val tbl = legacyPrefixTable(path)
-    // num_buckets in params is a claim, not a guarantee: a checkpoint
-    // whose prefixes were written as plain parquet (params from a newer
-    // writer over an older artifact, or a partially migrated layout)
-    // would make every later probe throw INVALID_BUCKET_FILE if a
-    // bucketed table were registered over it — verify the files carry
-    // bucket-id suffixes before trusting the claim, exactly as the
-    // winnow freq loader does.
-    // GATE layer: validate footers before any bucketed-table register
-    // ([[loadLatestGen]]'s rationale).
-    graft.sources.Sink.validateOwn(spark, Seq(s"$path/prefixes"))
-    val prefixes =
-      if (spark.catalog.tableExists(tbl)) spark.table(tbl)
-      else if (params.schema.fieldNames.contains("num_buckets") &&
-          hasBucketedFiles(spark, s"$path/prefixes")) {
-        val nb = params.getAs[Int]("num_buckets")
-        spark.sql(
-          s"""create table $tbl (id bigint, h bigint, r bigint, n bigint)
-             |using parquet clustered by (h) sorted by (h) into $nb buckets
-             |location '$path/prefixes'""".stripMargin)
-        spark.table(tbl)
-      } else persistSketch(readLayer(spark, s"$path/prefixes"))
-    val docsets = persistSketch(readLayer(spark, s"$path/docsets"))
-    val freq = persistSketch(readLayer(spark, s"$path/freq"))
-    NearDupIndex(docsets, prefixes, freq,
-      params.getAs[Int]("shingle_n"), params.getAs[Double]("threshold"),
-      layers = Seq(docsets, freq))
-  }
 
   // ──────────── the checkpoint log of the persisted dedup indexes ─────────
 
@@ -839,7 +803,7 @@ object Dedup {
     }
 
   /** True when a pre-generational flat-layout checkpoint exists at `path`
-    * (the legacy saveIndex layout: frames directly under the root). */
+    * (frames directly under the root), which no longer loads. */
   private[graft] def hasLegacyIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
     fsFor(spark, path).exists(

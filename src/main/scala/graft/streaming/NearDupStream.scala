@@ -69,25 +69,13 @@ object NearDupStream {
       case Some((idx, lastBatch)) =>
         new DedupLoop.IndexState(idx, lastBatch)
       case None if Dedup.hasLegacyIndex(spark, path) =>
-        // Pre-generational flat-layout checkpoint: load it rather than
-        // silently rebuilding from `corpus` (which would drop every doc a
-        // prior run folded), then MIGRATE by saving a generation
-        // immediately — from the first batch on, the stream runs with the
-        // full WAL/compaction machinery instead of a second legacy pass.
-        // No batch-id metadata exists in the flat layout, so the one
-        // protection that cannot be recovered is replay recognition for a
-        // batch the PRIOR run sank but whose offsets the engine hadn't
-        // committed: if the engine replays it, it re-probes against an
-        // index that already contains it and emits zero kept rows.
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"NearDupStream: migrating pre-generational checkpoint at " +
-            s"$path — the first batch after migration has no replay " +
-            s"protection (an engine replay of the prior run's last " +
-            s"uncommitted batch will emit zero kept rows).")
-        val legacy = Dedup.loadIndex(spark, path)
-        Dedup.saveIndex(legacy, path)
-        Dedup.releaseIndex(legacy)
-        new DedupLoop.IndexState(Dedup.loadIndex(spark, path))
+        // A pre-generational flat layout carries no batch ids, so it cannot
+        // resume with replay protection; rebuilding from `corpus` would
+        // silently drop every doc a prior run folded.
+        throw new IllegalStateException(
+          s"NearDupStream: $path holds a pre-generational near-dup " +
+            "checkpoint, which no longer loads; rebuild it with " +
+            "Dedup.saveIndex or resume from an empty path")
       case None =>
         val built =
           Dedup.buildNearDupIndex(corpus, idCol, textCol, shingleN, threshold)

@@ -366,13 +366,39 @@ object GraftBridge {
 
   /** Build a DataFrame from a (possibly hand-transformed) logical plan; the
     * plan is re-analyzed, so rules like DeduplicateRelations repair any
-    * duplicated relation subtrees a transform introduced. `Dataset.ofRows`
-    * is private[sql] — this is the sanctioned doorway for graft code. */
+    * duplicated relation subtrees a transform introduced. A plan already
+    * marked analyzed (an analyzed plan, or its `clone()`) is taken as is:
+    * `Analyzer.executeAndCheck` returns it at once. `Dataset.ofRows` is
+    * private[sql] — this is the sanctioned doorway for graft code. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A copy of an analyzed plan without the ids of the Datasets built on
+    * it (`DATASET_ID_TAG`, which `Dataset` adds to its plan's root), so
+    * copies handed to new Datasets start from an empty set. */
+  def withoutDatasetIds(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    val copy = plan.clone()
+    copy.unsetTagValue(org.apache.spark.sql.classic.Dataset.DATASET_ID_TAG)
+    copy
+  }
+
+  /** The ids of the Datasets built on `plan` (its root's `DATASET_ID_TAG`). */
+  def datasetIds(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Set[Long] =
+    plan.getTagValue(org.apache.spark.sql.classic.Dataset.DATASET_ID_TAG)
+      .map(_.toSet).getOrElse(Set.empty)
+
+  /** The catalog entry of the session's temp view `name`, if one is
+    * registered: the `desc` of every `View` that resolution builds for it
+    * until it is replaced or dropped. */
+  def tempViewMeta(spark: org.apache.spark.sql.SparkSession, name: String)
+      : Option[org.apache.spark.sql.catalyst.catalog.CatalogTable] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+      .catalog.getRawTempView(name).map(_.tableMeta)
 
   /** The session's SQL conf (`sessionState` is not on the API session). */
   def conf(spark: org.apache.spark.sql.SparkSession)

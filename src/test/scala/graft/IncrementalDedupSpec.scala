@@ -252,6 +252,19 @@ class IncrementalDedupSpec extends SparkSpecBase {
     Dedup.releaseSketchCaches()
   }
 
+  test("a pre-generational flat checkpoint fails loudly, naming its path") {
+    val dir = java.nio.file.Files.createTempDirectory("ndflat").toString
+    spark.range(1).toDF("shingle_n").write.parquet(s"$dir/params")
+    val corpus = spark.table("documents").limit(0)
+    val err = intercept[IllegalStateException](graft.streaming.NearDupStream
+      .resume(spark, dir, corpus, "doc_id", "text"))
+    assert(err.getMessage.contains(dir))
+    val noGen = intercept[IllegalStateException](Dedup.loadIndex(spark, dir))
+    assert(noGen.getMessage.contains(dir))
+    assert(new java.io.File(dir).list().toSet == Set("params"),
+      "nothing may be rebuilt over the flat checkpoint")
+  }
+
   test("every gate index family fails LOUDLY on a truncated generation " +
       "part (r17: fp / winnow / substring / sem — the nd arm is the test " +
       "below): a silently excluded gate part admits duplicates, so the " +
