@@ -2,12 +2,21 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo, ExprId, Expression, Literal, UserDefinedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Cast, EqualTo, ExprId, Expression, Literal, UserDefinedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Max, Min}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
+import org.apache.spark.sql.execution.{BaseSubqueryExec, ExecSubqueryExpression, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.graft.GraftBridge
-import org.apache.spark.sql.types.{DateType, MetadataBuilder, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DateType, MetadataBuilder, StringType, TimestampNTZType, TimestampType}
+
+import java.lang.ref.WeakReference
+import scala.util.Try
 
 /** Public API mirroring the reference's three-call surface (reference
   * `dataframe_sql/__init__.py:3`, `dataframe_sql/sql_select_query.py:15-96`):
@@ -29,21 +38,27 @@ import org.apache.spark.sql.types.{DateType, MetadataBuilder, TimestampNTZType, 
   *
   * A session's repeated texts reuse their rewritten, analyzed plan (the
   * plan cache, [[PlanCache]]): a hit skips the pre-pass, parse, analysis and
-  * rewrites, while optimization — and with it `now()`/`today()` — runs on
-  * every call. Each session keeps at most [[PlanCache.MaxEntries]] plans,
-  * least recently used evicted first. An entry is keyed by the SQL text and
-  * the session's set confs (`SQLConf.getAllConfs`: the symmetric-EXCEPT
-  * flag, the broadcast threshold, the time zone analysis bakes into casts,
-  * case sensitivity, ANSI mode, ...). It is served only while every temp
-  * view it references still maps to the same catalog entry, so a view that
-  * is re-registered or dropped, through `Engine` or not, is never served
-  * stale; `registerTempTable`/`removeTempTable` also drop the name's entries
-  * at once. Plans that are not safe to share are never cached: a leaf other
+  * rewrites. Where it is safe, hits after the first also reuse one
+  * template's optimized, physical and executed plans, and pay only their
+  * job; a plan with `now()`/`today()` or another value the optimizer fixes
+  * per call, or with an Exchange, is optimized on every call (eligibility
+  * and lifetime: [[PlanCache]]). Each session keeps at most
+  * [[PlanCache.MaxEntries]] plans, least recently used evicted first. An
+  * entry is keyed by the SQL text and the session's set confs
+  * (`SQLConf.getAllConfs`: the symmetric-EXCEPT flag, the broadcast
+  * threshold, the time zone analysis bakes into casts, case sensitivity,
+  * ANSI mode, ...). It is served only while every temp view it references
+  * still maps to the same catalog entry, so a view that is re-registered or
+  * dropped, through `Engine` or not, is never served stale;
+  * `registerTempTable`/`removeTempTable` also drop the name's entries at
+  * once. Plans that are not safe to share are never cached: a leaf other
   * than a `LocalRelation`, `OneRowRelation` or CTE reference (catalog
   * tables and file scans, also under a temp view, carry their session, and
   * a cached plan must not keep its session alive), a nondeterministic
-  * expression (`rand()` would replay its seed) or a UDF (a re-registered
-  * UDF would be served stale). [[planCacheStats]] counts each decision.
+  * expression (`rand()` would replay its seed) or a typed literal of a
+  * special datetime value (`timestamp 'now'`, which the parser fixes), or
+  * a UDF (a re-registered UDF would be served stale). [[planCacheStats]]
+  * counts each decision.
   */
 object Engine {
 
@@ -76,14 +91,20 @@ object Engine {
     PlanCache.through(spark, sql) {
       val df = spark.sql(Dialect.rewrite(sql))
       val analyzed = df.queryExecution.analyzed
-      val plan = namingParity(singlePartition(spark,
-        symmetricExceptCompat(spark, analyzed)))
-      if (plan eq analyzed) df else GraftBridge.ofRows(spark, plan)
+      val symmetric = symmetricExceptCompat(spark, analyzed)
+      val plan = namingParity(singlePartition(spark, symmetric))
+      if (plan eq analyzed) df
+      // The symmetric EXCEPT reads each side twice: only a full analysis
+      // gives the two copies distinct attributes.
+      else if (symmetric ne analyzed) GraftBridge.ofRows(spark, plan)
+      else GraftBridge.ofAnalyzed(spark, plan)
     }
 
   /** What the session's plan cache decided so far: one outcome per
-    * [[query]] call, and the entries it holds now. */
-  final case class PlanCacheStats(entries: Int, outcomes: Map[String, Long]) {
+    * [[query]] call, the entries it holds now, and how many hits were served
+    * `prepared`, over a stored template's executed plan. */
+  final case class PlanCacheStats(entries: Int, outcomes: Map[String, Long],
+      prepared: Long) {
     def apply(outcome: String): Long = outcomes.getOrElse(outcome, 0L)
   }
 
@@ -102,23 +123,58 @@ object Engine {
     *
     * A hit hands out a copy of the stored tree: `Dataset` adds its id to
     * the root's `DATASET_ID_TAG`, and a shared root would grow that set by
-    * one on every hit. Thread-safe; a session's state is weakly keyed, so
-    * the cache never keeps a session alive (its entries hold no session:
-    * only local rows and catalog entries). */
+    * one on every hit.
+    *
+    * Hits of an eligible entry are served prepared: their Datasets share
+    * the optimized, physical and executed plans of a template, so a repeated
+    * read skips optimization, physical planning, code generation and the
+    * building of its RDDs, and pays only its job. An entry is eligible when
+    * its plan reads a temp view, has no expression that the optimizer
+    * replaces with a value of the call (see [[perCall]]), and its executed
+    * plan has nothing that one run would hold for the next or share with a
+    * run beside it (see [[shareable]]). The first hit decides, once per
+    * entry: it plans the template and is served over it.
+    *
+    * A template holds its session, so it is not kept in the weakly keyed
+    * session state (that would keep the session alive): it hangs on the
+    * catalog entry of a temp view the plan reads, under a tag of its own,
+    * and dies with that registration. The cache entry reaches it only
+    * weakly, and drops it when the entry is evicted or replaced.
+    * Thread-safe; a session's state is weakly keyed, so the cache never
+    * keeps a session alive (its entries hold no session: only local rows
+    * and catalog entries). */
   private[graft] object PlanCache {
     val MaxEntries = 128
 
+    private val tagIds = new java.util.concurrent.atomic.AtomicLong
+
     /** The analyzed plan, and the catalog entry of each temp view (by
-      * name) that its resolution read. */
-    private final case class Entry(plan: LogicalPlan,
-        views: Map[String, CatalogTable])
+      * name) that its resolution read. `decided` turns true at the first
+      * hit of a `preparable` entry, which may hang a template on the
+      * registration of the first view under `tag` (and keeps that
+      * registration in `host`, weakly). */
+    private final class Entry(val plan: LogicalPlan,
+        val views: Map[String, CatalogTable], preparable: Boolean) {
+      @volatile var decided: Boolean = !preparable
+      val tag =
+        TreeNodeTag[QueryExecution](s"graft.planTemplate.${tagIds.incrementAndGet()}")
+      @volatile var host = new WeakReference[LogicalPlan](null)
+
+      def template: Option[QueryExecution] =
+        Option(host.get).flatMap(h => h.synchronized(h.getTagValue(tag)))
+
+      def drop(): Unit =
+        Option(host.get).foreach(h => h.synchronized(h.unsetTagValue(tag)))
+    }
 
     private final class State {
       val entries = new java.util.LinkedHashMap[Any, Entry](16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[Any, Entry]): Boolean = size > MaxEntries
+            e: java.util.Map.Entry[Any, Entry]): Boolean =
+          size > MaxEntries && { e.getValue.drop(); true }
       }
       val outcomes = scala.collection.mutable.Map[String, Long]()
+      var prepared = 0L
       def count(outcome: String): Unit =
         outcomes(outcome) = outcomes.getOrElse(outcome, 0L) + 1
     }
@@ -134,17 +190,44 @@ object Engine {
       val st = states.getOrElseUpdate(spark, new State)
       val found = st.synchronized(Option(st.entries.get(key)))
       val valid = found.filter(_.views.forall { case (name, desc) =>
-        GraftBridge.tempViewMeta(spark, name).exists(_ eq desc) })
-      valid.fold(miss(spark, st, key, found.isDefined, build)) { e =>
-        st.synchronized(st.count("hit"))
-        GraftBridge.ofRows(spark, e.plan.clone())
+        GraftBridge.tempView(spark, name).exists(_.tableMeta eq desc) })
+      valid.fold(miss(spark, st, sql, key, found.isDefined, build)) { e =>
+        val template = if (e.decided) e.template else None
+        st.synchronized {
+          st.count("hit")
+          if (template.isDefined) st.prepared += 1
+        }
+        template match {
+          case Some(t) => GraftBridge.reusing(t, e.plan.clone())
+          case None if e.decided => GraftBridge.ofRows(spark, e.plan.clone())
+          case None => decide(spark, e)
+        }
       }
     }
 
+    /** The first hit of a preparable entry: plan the hit's execution now
+      * and keep it as the template, on the registration of the entry's first
+      * view, if its executed plan is [[shareable]]. */
+    private def decide(spark: SparkSession, e: Entry): DataFrame =
+      e.synchronized {
+        val df = GraftBridge.ofRows(spark, e.plan.clone())
+        if (!e.decided) {
+          val qe = df.queryExecution
+          val (name, desc) = e.views.head
+          for (h <- GraftBridge.tempView(spark, name) if (h.tableMeta eq desc) &&
+               Try(shareable(qe.executedPlan)).getOrElse(false)) {
+            h.synchronized(h.setTagValue(e.tag, qe))
+            e.host = new WeakReference(h)
+          }
+          e.decided = true
+        }
+        df
+      }
+
     /** Run `build` and store its analyzed plan under `key` if it is safe to
       * share; `stale` tells that an entry was found but rejected. */
-    private def miss(spark: SparkSession, st: State, key: Any, stale: Boolean,
-        build: => DataFrame): DataFrame = {
+    private def miss(spark: SparkSession, st: State, sql: String, key: Any,
+        stale: Boolean, build: => DataFrame): DataFrame = {
       val out = build
       val analyzed = out.queryExecution.analyzed
       val nodes = analyzed.collectWithSubqueries { case p => p }
@@ -156,20 +239,64 @@ object Engine {
           case _: LocalRelation | _: OneRowRelation | _: CTERelationRef => false
           case p => p.children.isEmpty
         }) Some("non-local leaf")
-        else if (!exprs.forall(_.deterministic)) Some("nondeterministic")
+        else if (!exprs.forall(_.deterministic) ||
+            SpecialDatetimeLiteral.findFirstIn(sql).isDefined) Some("nondeterministic")
         else if (exprs.exists(_.exists(_.isInstanceOf[UserDefinedExpression])))
           Some("udf")
         else None
-      val entry = if (bypass.isDefined) None else Some(Entry(
-        GraftBridge.withoutDatasetIds(analyzed),
-        tempViews(analyzed).map(v => v.desc.identifier.table -> v.desc).toMap))
+      val entry = if (bypass.isDefined) None else {
+        val views =
+          tempViews(analyzed).map(v => v.desc.identifier.table -> v.desc).toMap
+        Some(new Entry(GraftBridge.withoutDatasetIds(analyzed), views,
+          preparable = views.nonEmpty && !exprs.exists(perCall)))
+      }
       st.synchronized {
-        if (stale) st.entries.remove(key)
+        if (stale) Option(st.entries.remove(key)).foreach(_.drop())
         entry.foreach(st.entries.put(key, _))
         st.count(bypass.getOrElse(if (stale) "stale view" else "miss"))
       }
       out
     }
+
+    /** A typed literal of a special datetime value (`timestamp 'now'`,
+      * `date 'today'`): the parser replaces it with the value of the call,
+      * so the analyzed plan would hold the time of the miss. Matched on the
+      * text, where it still shows; a match inside a string literal only
+      * costs a bypass. */
+    private val SpecialDatetimeLiteral =
+      """(?i)\b(date|timestamp(_ntz|_ltz)?)\s*'\s*(now|today|yesterday|tomorrow)\s*'""".r
+
+    /** An expression that the optimizer replaces with a value of the call,
+      * so an optimized plan of it must not be reused: the clock
+      * (`ComputeCurrentTime`: `now()`, `current_date()`, ...), the current
+      * database, catalog and user (`ReplaceCurrentLike`), and a constant
+      * string cast to a date or timestamp, which may be a special value such
+      * as `'now'` (`SpecialDatetimeValues`). */
+    private def perCall(e: Expression): Boolean =
+      e.containsPattern(CURRENT_LIKE) || e.exists {
+        case c: Cast => c.child.foldable && c.child.dataType == StringType &&
+          (c.dataType match {
+            case DateType | TimestampType | TimestampNTZType => true
+            case _ => false
+          })
+        case _ => false
+      }
+
+    /** Whether an executed plan may run again and beside itself with
+      * nothing held from one run to the next: no Exchange (a shuffle's files
+      * or a broadcast would be pinned and shared), no broadcast join and no
+      * subquery. Single-partition plans and zero-job plans qualify. */
+    private def shareable(plan: SparkPlan): Boolean =
+      AqeWalk.find(plan) { p =>
+        p.isInstanceOf[Exchange] || p.isInstanceOf[ReusedExchangeExec] ||
+          p.isInstanceOf[BroadcastHashJoinExec] ||
+          p.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+          p.isInstanceOf[BaseSubqueryExec] ||
+          p.expressions.exists(_.exists(_.isInstanceOf[ExecSubqueryExpression]))
+      }.isEmpty
+
+    /** Walks an executed plan through adaptive plans and query stages. */
+    private object AqeWalk extends AdaptiveSparkPlanHelper
 
     /** The temp views whose catalog entries resolution read: those in the
       * plan, subqueries included, but not those inside a view stored as a
@@ -187,13 +314,16 @@ object Engine {
       * replaced frame's rows are not pinned until LRU eviction. */
     def evict(spark: SparkSession, name: String): Unit =
       states.get(spark).foreach { st =>
-        st.synchronized(st.entries.values.removeIf(
-          _.views.keys.exists(_.equalsIgnoreCase(name))))
+        st.synchronized(st.entries.values.removeIf { e =>
+          val reads = e.views.keys.exists(_.equalsIgnoreCase(name))
+          if (reads) e.drop()
+          reads
+        })
       }
 
     def stats(spark: SparkSession): PlanCacheStats = {
       val st = states.getOrElseUpdate(spark, new State)
-      st.synchronized(PlanCacheStats(st.entries.size, st.outcomes.toMap))
+      st.synchronized(PlanCacheStats(st.entries.size, st.outcomes.toMap, st.prepared))
     }
   }
 

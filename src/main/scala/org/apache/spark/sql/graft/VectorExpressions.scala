@@ -373,8 +373,54 @@ object GraftBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+    org.apache.spark.sql.classic.Dataset.ofRows(classic(spark), plan)
+
+  /** [[ofRows]] for a rewrite of an analyzed plan that is built from
+    * resolved nodes only: the plan is checked (`checkAnalysis`) and taken as
+    * analyzed, without a second run of the analyzer. A rewrite that puts one
+    * subtree into the plan twice needs [[ofRows]]: only the analyzer's
+    * `DeduplicateRelations` gives the copies distinct attributes. */
+  def ofAnalyzed(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame = {
+    classic(spark).sessionState.analyzer.checkAnalysis(plan)
+    plan.setAnalyzed()
+    ofRows(spark, plan)
+  }
+
+  /** A DataFrame of `plan`, a copy of the analyzed plan of `template`,
+    * whose execution takes the template's optimized, physical and executed
+    * plans instead of deriving its own. Analysis and the root that the
+    * Dataset tags with its id are its own. All such DataFrames run the one
+    * executed plan, so it must be safe to run more than once and from
+    * several threads at once (`Engine.PlanCache` decides which are). */
+  def reusing(template: org.apache.spark.sql.execution.QueryExecution,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame = {
+    val qe = new ReusedExecution(template, plan)
+    qe.sparkSession.withActive {
+      qe.assertAnalyzed()
+      new org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row](qe,
+        () => org.apache.spark.sql.catalyst.encoders.RowEncoder
+          .encoderFor(qe.analyzed.schema))
+    }
+  }
+
+  private final class ReusedExecution(
+      template: org.apache.spark.sql.execution.QueryExecution,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      extends org.apache.spark.sql.execution.QueryExecution(
+        template.sparkSession, plan) {
+    override def optimizedPlan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+      template.optimizedPlan
+    override def sparkPlan: org.apache.spark.sql.execution.SparkPlan =
+      template.sparkPlan
+    override def executedPlan: org.apache.spark.sql.execution.SparkPlan =
+      template.executedPlan
+  }
+
+  private def classic(spark: org.apache.spark.sql.SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 
   /** A copy of an analyzed plan without the ids of the Datasets built on
     * it (`DATASET_ID_TAG`, which `Dataset` adds to its plan's root), so
@@ -392,18 +438,17 @@ object GraftBridge {
     plan.getTagValue(org.apache.spark.sql.classic.Dataset.DATASET_ID_TAG)
       .map(_.toSet).getOrElse(Set.empty)
 
-  /** The catalog entry of the session's temp view `name`, if one is
-    * registered: the `desc` of every `View` that resolution builds for it
-    * until it is replaced or dropped. */
-  def tempViewMeta(spark: org.apache.spark.sql.SparkSession, name: String)
-      : Option[org.apache.spark.sql.catalyst.catalog.CatalogTable] =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
-      .catalog.getRawTempView(name).map(_.tableMeta)
+  /** The session's registration of the temp view `name`, if there is one:
+    * it lives until the view is replaced or dropped, and its `tableMeta` is
+    * the `desc` of every `View` that resolution builds for it until then. */
+  def tempView(spark: org.apache.spark.sql.SparkSession, name: String)
+      : Option[org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation] =
+    classic(spark).sessionState.catalog.getRawTempView(name)
 
   /** The session's SQL conf (`sessionState` is not on the API session). */
   def conf(spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.internal.SQLConf =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+    classic(spark).sessionState.conf
 
   /** The value beneath a sort Column (`col.desc` → `col`); identity for
     * plain value Columns. Spark 4 models sort order at the ColumnNode

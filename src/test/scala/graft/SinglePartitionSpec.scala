@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.LocalTableScanExec
@@ -79,20 +76,8 @@ class SinglePartitionSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
   /** Collect `df`, returning its rows and the number of Spark jobs the
     * collect ran. */
-  private def collectCountingJobs(df: DataFrame): (Array[Row], Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val rows = df.collect()
-      ListenerBus.drain(sc)
-      (rows, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def collectCountingJobs(df: DataFrame): (Array[Row], Int) =
+    ListenerBus.countingJobs(spark.sparkContext)(df.collect())
 
   /** Order-insensitive canonical rows; doubles to 12 significant digits,
     * since the two plans may add partial sums in a different order. */
