@@ -33,10 +33,9 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
   * pair. Any other id type runs as its string cast.
   *
   * Scores are bit-identical to the join routes because the callers' pair
-  * kernels are `VectorKernels.dot`/`sortedCommon`, the JVM-array twins of
-  * the loops `graft_dot` and `graft_sorted_common` run (same operands, same
-  * accumulation order; PairGridSpec compares the two forms), and the
-  * divides around them are single IEEE ops on symmetric operands.
+  * kernels are `VectorKernels.dot`/`sortedCommon`, the one loop each that
+  * `graft_dot` and `graft_sorted_common` run too, and the divides around
+  * them are single IEEE ops on symmetric operands.
   */
 private[graft] object PairGrid {
 

@@ -231,7 +231,7 @@ object Similarity {
     // than requested lists would index past the seeded centroids.
     val dim = sample.head.length
     def normalize(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
+      val n = math.sqrt(VectorKernels.dot(v, v))
       if (n == 0) v else v.map(_ / n)
     }
     // Train on the DISTINCT unit vectors (the trainPqCodebooks recipe),
@@ -245,7 +245,13 @@ object Similarity {
     //     over distinct points that is bounded by the true content
     //     diversity instead of the duplication factor (copies move a
     //     centroid's mean nowhere new anyway).
-    val distinct = sample.map(normalize).map(_.toSeq).distinct.map(_.toArray)
+    // Every loop below reads the first `dim` elements of a point, so a
+    // shorter vector is an error and a longer one trains on its prefix.
+    val distinct = sample.map(normalize).map(_.toSeq).distinct.map { u =>
+      require(u.length >= dim, s"centroid training: a sample vector of " +
+        s"${u.length} elements is shorter than the first one's $dim")
+      u.take(dim).toArray
+    }
     val nlist = math.min(nlistRequested, distinct.length)
     // MAX-MIN (farthest-first) seeding over the distinct unit vectors —
     // deterministic (first distinct point, then argmin-of-max-dot with
@@ -268,9 +274,7 @@ object Similarity {
       var worst = 0; var worstDot = Double.PositiveInfinity
       var i = 0
       while (i < distinct.length) {
-        val u = distinct(i)
-        var d = 0.0; var j = 0
-        while (j < dim) { d += u(j) * seeds(s)(j); j += 1 }
+        val d = VectorKernels.dot(distinct(i), seeds(s))
         if (d > bestDot(i)) bestDot(i) = d
         if (bestDot(i) < worstDot) { worstDot = bestDot(i); worst = i }
         i += 1
@@ -280,44 +284,23 @@ object Similarity {
     }
     var cents = seeds
 
-    /** One Lloyd pass; returns per-centroid distinct counts and, for the
-      * balance refinement, each cluster's farthest member index. */
-    def lloyd(): (Array[Int], Array[Int]) = {
+    /** One Lloyd pass: each point joins its nearest centroid, then each
+      * centroid moves to its members' normalized sum. */
+    def lloyd(): Unit = {
       val sums = Array.fill(nlist)(new Array[Double](dim))
       val cnt = new Array[Int](nlist)
-      val farIdx = Array.fill(nlist)(-1)
-      val farDot = Array.fill(nlist)(Double.PositiveInfinity)
-      var p = 0
-      while (p < distinct.length) {
-        val u = distinct(p)
-        var best = 0; var bd = Double.NegativeInfinity
-        var i = 0
-        while (i < nlist) {
-          var d = 0.0; var j = 0
-          while (j < dim) { d += u(j) * cents(i)(j); j += 1 }
-          if (d > bd) { bd = d; best = i }
-          i += 1
-        }
+      distinct.foreach { u =>
+        val best = VectorKernels.nearestCentroid(u, cents)
         var j = 0
         while (j < dim) { sums(best)(j) += u(j); j += 1 }
         cnt(best) += 1
-        if (bd < farDot(best)) { farDot(best) = bd; farIdx(best) = p }
-        p += 1
       }
       cents = Array.tabulate(nlist) { i =>
         if (cnt(i) == 0) cents(i) // empty list keeps its centroid
         else normalize(sums(i))
       }
-      (cnt, farIdx)
     }
-
-    var it = 0
-    var counts: Array[Int] = null
-    var far: Array[Int] = null
-    while (it < maxIter) {
-      val r = lloyd(); counts = r._1; far = r._2
-      it += 1
-    }
+    for (_ <- 0 until maxIter) lloyd()
     // BALANCE REFINEMENT (round 12) — engages ONLY when Lloyd leaves a
     // cluster holding > 4× the average distinct mass, so balanced corpora
     // train exactly as before. Two measured failure modes drove this
@@ -335,24 +318,8 @@ object Similarity {
     // reusing the lightest cluster's slot, with NO global re-Lloyd to
     // undo it. Deterministic and bounded; global assignment is always
     // argmax over the final centroids.
-    def assignAll(): Array[Int] = {
-      val who = new Array[Int](distinct.length)
-      var p = 0
-      while (p < distinct.length) {
-        val u = distinct(p)
-        var best = 0; var bd = Double.NegativeInfinity
-        var i = 0
-        while (i < nlist) {
-          var d = 0.0; var j = 0
-          while (j < dim) { d += u(j) * cents(i)(j); j += 1 }
-          if (d > bd) { bd = d; best = i }
-          i += 1
-        }
-        who(p) = best
-        p += 1
-      }
-      who
-    }
+    def assignAll(): Array[Int] =
+      distinct.map(VectorKernels.nearestCentroid(_, cents))
     var round = 0
     var go = nlist >= 2
     while (round < 16 && go) {
@@ -375,8 +342,7 @@ object Similarity {
         def farFrom(v: Array[Double]): Int = {
           var idx = members.head; var lo = Double.PositiveInfinity
           members.foreach { m =>
-            var d = 0.0; var j = 0
-            while (j < dim) { d += distinct(m)(j) * v(j); j += 1 }
+            val d = VectorKernels.dot(distinct(m), v)
             if (d < lo) { lo = d; idx = m }
           }
           idx
@@ -390,10 +356,11 @@ object Similarity {
           var na = 0; var nb = 0
           members.foreach { m =>
             val u = distinct(m)
-            var da = 0.0; var db = 0.0; var j = 0
-            while (j < dim) { da += u(j) * a(j); db += u(j) * b(j); j += 1 }
-            if (da >= db) { var t = 0; while (t < dim) { sa(t) += u(t); t += 1 }; na += 1 }
-            else { var t = 0; while (t < dim) { sb(t) += u(t); t += 1 }; nb += 1 }
+            if (VectorKernels.dot(u, a) >= VectorKernels.dot(u, b)) {
+              var t = 0; while (t < dim) { sa(t) += u(t); t += 1 }; na += 1
+            } else {
+              var t = 0; while (t < dim) { sb(t) += u(t); t += 1 }; nb += 1
+            }
           }
           if (na > 0) a = normalize(sa)
           if (nb > 0) b = normalize(sb)
@@ -1263,16 +1230,7 @@ object Similarity {
         val sums = Array.fill(ksub)(new Array[Double](d))
         val counts = new Array[Int](ksub)
         subs.foreach { s =>
-          var best = 0
-          var bd = Double.MaxValue
-          var c = 0
-          while (c < ksub) {
-            var acc = 0.0
-            var i = 0
-            while (i < d) { val x = s(i) - cents(c)(i); acc += x * x; i += 1 }
-            if (acc < bd) { bd = acc; best = c }
-            c += 1
-          }
+          val best = VectorKernels.nearestL2(s, cents)
           var i = 0
           while (i < d) { sums(best)(i) += s(i); i += 1 }
           counts(best) += 1

@@ -139,68 +139,6 @@ object SketchKernels {
       k: Int): ArrayData =
     new GenericArrayData(rollingHashArray(text, k))
 
-  /** argmax over centroid dot products; ties break to the lowest index.
-    * Vector shorter than the centroid dim scores only its prefix. */
-  def nearestCentroid(v: ArrayData, m: Array[Array[Double]]): Int = {
-    val n = v.numElements()
-    var best = 0
-    var bestDot = Double.NegativeInfinity
-    var i = 0
-    while (i < m.length) {
-      val c = m(i)
-      val lim = math.min(n, c.length)
-      var d = 0.0
-      var j = 0
-      while (j < lim) { d += v.getDouble(j) * c(j); j += 1 }
-      if (d > bestDot) { bestDot = d; best = i }
-      i += 1
-    }
-    best
-  }
-
-  /** Top-`k` centroid indices by dot product, descending (ties to the
-    * lowest index — consistent with [[nearestCentroid]]): the IVF
-    * MULTI-assignment kernel. One fused nlist × dim loop + an O(nlist · k)
-    * selection per row, no per-row struct arrays or sorts — the difference
-    * between a corpus-side assignment that scales and one that allocates
-    * nlist structs per row. */
-  def nearestCentroids(v: ArrayData, m: Array[Array[Double]],
-      k: Int): ArrayData = {
-    val n = v.numElements()
-    val dots = new Array[Double](m.length)
-    var i = 0
-    while (i < m.length) {
-      val c = m(i)
-      val lim = math.min(n, c.length)
-      var d = 0.0
-      var j = 0
-      while (j < lim) { d += v.getDouble(j) * c(j); j += 1 }
-      dots(i) = d
-      i += 1
-    }
-    val kk = math.min(k, m.length)
-    val out = new Array[Int](kk)
-    val used = new Array[Boolean](m.length)
-    var s = 0
-    while (s < kk) {
-      var best = -1
-      var bd = Double.NegativeInfinity
-      var j = 0
-      while (j < m.length) {
-        // `best < 0` keeps the first unused index even when every dot is
-        // NaN (NaN > x is always false) — an all-NaN row degrades to
-        // lowest-index assignment like nearestCentroid's best=0 init,
-        // instead of crashing on used(-1).
-        if (!used(j) && (best < 0 || dots(j) > bd)) { bd = dots(j); best = j }
-        j += 1
-      }
-      used(best) = true
-      out(s) = best
-      s += 1
-    }
-    new GenericArrayData(out)
-  }
-
   /** 64-bit SimHash over element hashes: bit b set iff more elements have
     * bit b set than clear (+1/−1 vote per element). */
   def simhash64(hs: ArrayData): Long = {
@@ -446,12 +384,12 @@ case class NearestCentroid(child: Expression, cents: Seq[Seq[Double]])
   override def prettyName: String = "graft_nearest_centroid"
 
   override protected def nullSafeEval(t: Any): Any =
-    SketchKernels.nearestCentroid(t.asInstanceOf[ArrayData], matrix)
+    VectorKernels.nearestCentroid(t.asInstanceOf[ArrayData], matrix)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val m = ctx.addReferenceObj("centroidMatrix", matrix, "double[][]")
     defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.SketchKernels.nearestCentroid($c, $m)")
+      s"org.apache.spark.sql.graft.VectorKernels.nearestCentroid($c, $m)")
   }
 
   override protected def withNewChildInternal(nc: Expression): Expression =
@@ -479,12 +417,12 @@ case class NearestCentroids(child: Expression, cents: Seq[Seq[Double]],
   override def prettyName: String = "graft_nearest_centroids"
 
   override protected def nullSafeEval(t: Any): Any =
-    SketchKernels.nearestCentroids(t.asInstanceOf[ArrayData], matrix, k)
+    VectorKernels.nearestCentroids(t.asInstanceOf[ArrayData], matrix, k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val m = ctx.addReferenceObj("centroidMatrix", matrix, "double[][]")
     defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.SketchKernels.nearestCentroids($c, $m, $k)")
+      s"org.apache.spark.sql.graft.VectorKernels.nearestCentroids($c, $m, $k)")
   }
 
   override protected def withNewChildInternal(nc: Expression): Expression =

@@ -8,18 +8,19 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.unsafe.Platform
 
 /** Native Catalyst expression for the vector hot path: dot product over
-  * `array<double>`. A tight loop over `ArrayData` ([[VectorKernels.dot]],
-  * called from whole-stage codegen) — no per-element Catalyst HOF
-  * dispatch, no boxing. Replacing the equivalent `aggregate(zip_with(...))`
-  * higher-order expression cut brute-force all-pairs cosine from ~168 s to
-  * seconds at sf0.1 (2 M pairs × 64 dims). Accumulation order is pinned in
+  * `array<double>`. One tight loop over the arrays' memory
+  * ([[VectorKernels.dot]], called from whole-stage codegen) — no
+  * per-element Catalyst HOF dispatch, no boxing. Replacing the equivalent
+  * `aggregate(zip_with(...))` higher-order expression cut brute-force
+  * all-pairs cosine from ~168 s to seconds at sf0.1 (2 M pairs × 64 dims). Accumulation order is pinned in
   * the kernel: the oracle hash-compare relies on it.
   */
 case class DotProduct(left: Expression, right: Expression)
@@ -105,38 +106,98 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** The one JVM implementation of every vector expression in this file —
-  * static methods, so the interpreted `nullSafeEval` and the codegen
-  * template call the same compiled loop (the NearestCentroid/SketchKernels
-  * pattern). PQ: `cb(j)(c)` is centroid `c` of contiguous subspace `j`;
-  * subspace widths come from the centroids themselves, so a dimension that
-  * doesn't divide evenly just gives the last subspace the remainder. */
+/** The one JVM implementation of every vector kernel: these expressions,
+  * centroid assignment ([[NearestCentroid]], [[NearestCentroids]]), the
+  * quantizer trainers and the pair-grid scores all call these static
+  * methods, so interpreted eval, generated code and the driver run the
+  * same compiled loops.
+  *
+  * One loop per kernel: the dot product, the sorted merge and the squared
+  * distance each have one private loop that reads raw memory,
+  * `Platform.getDouble/getLong(base, offset + 8L * i)`. So one body reads
+  * a JVM array and an `UnsafeArrayData` (its base object, past its header)
+  * in place; any other `ArrayData` (a literal, a `CodegenFallback`
+  * result) is copied out with `toDoubleArray`/`toLongArray` first. The raw
+  * loops check no bounds, so only operand-typed entry points are public
+  * and each takes its lengths from its own operands: the shorter for a dot
+  * or a distance, each operand's own count for the merge; the PQ kernels
+  * check the vector against the codebooks' width first.
+  *
+  * Accumulation is sequential in index order, bit-identical to the naive
+  * loop (and to DuckDB's `list_cosine_similarity` numerator), which the
+  * oracle hash-compare relies on: do not reassociate, unroll or vectorize.
+  *
+  * PQ: `cb(j)(c)` is centroid `c` of contiguous subspace `j`; subspace
+  * widths come from the centroids themselves, so a dimension that doesn't
+  * divide evenly just gives the last subspace the remainder. */
 object VectorKernels {
 
-  /** Σ x(i)·y(i) over the shorter operand's length. Accumulation is
-    * sequential in index order — bit-identical to the naive loop (and to
-    * DuckDB's `list_cosine_similarity` numerator), which the oracle
-    * hash-compare relies on; do not reassociate or unroll it. */
-  def dot(x: ArrayData, y: ArrayData): Double = {
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
-    s
-  }
+  private final val D = Platform.DOUBLE_ARRAY_OFFSET
+  private final val L = Platform.LONG_ARRAY_OFFSET
 
-  /** [[dot]] over JVM arrays, for [[graft.operators.PairGrid]]'s decoded
-    * payloads: the same sequential loop, so both give the same bits. It is
-    * kept beside the `ArrayData` loop because that one reads through
-    * `Unsafe`, and on decoded vectors (an `UnsafeArrayData` view per item)
-    * it measured about 2.5× slower per pair (BENCH_NOTES "One pair grid
-    * for the exact all-pairs operators"). */
-  def dot(x: Array[Double], y: Array[Double]): Double = {
-    val n = math.min(x.length, y.length)
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += x(i) * y(i); i += 1 }
-    s
+  /** Σ x(i)·y(i) over the shorter operand's length. */
+  def dot(x: Array[Double], y: Array[Double]): Double =
+    dotRaw(x, D, y, D, math.min(x.length, y.length))
+
+  def dot(x: ArrayData, y: ArrayData): Double =
+    dotRaw(doubles(x), start(x, D), doubles(y), start(y, D),
+      math.min(x.numElements(), y.numElements()))
+
+  /** |x ∩ y| of two ascending, duplicate-free sets by linear merge. */
+  def sortedCommon(x: Array[Long], y: Array[Long]): Long =
+    mergeRaw(x, L, x.length, y, L, y.length)
+
+  def sortedCommon(x: ArrayData, y: ArrayData): Long =
+    mergeRaw(longs(x), start(x, L), x.numElements(),
+      longs(y), start(y, L), y.numElements())
+
+  /** argmax over centroid dot products; ties break to the lowest index, and
+    * a row whose every dot is NaN gets centroid 0. A vector shorter than
+    * the centroids scores only its prefix. */
+  def nearestCentroid(v: Array[Double], m: Array[Array[Double]]): Int =
+    argmaxDot(v, D, v.length, m)
+
+  def nearestCentroid(v: ArrayData, m: Array[Array[Double]]): Int =
+    argmaxDot(doubles(v), start(v, D), v.numElements(), m)
+
+  /** argmin over squared L2 distances to `m`'s centroids (ties to the lowest
+    * index): the PQ trainer's assignment, the one [[pqEncode]] makes per
+    * subspace. */
+  def nearestL2(v: Array[Double], m: Array[Array[Double]]): Int =
+    argminL2(v, D, v.length, m)
+
+  /** Top-`k` centroid indices by dot product, descending (ties to the
+    * lowest index — consistent with [[nearestCentroid]]): the IVF
+    * MULTI-assignment kernel. One fused nlist × dim loop + an O(nlist · k)
+    * selection per row, no per-row struct arrays or sorts — the difference
+    * between a corpus-side assignment that scales and one that allocates
+    * nlist structs per row. */
+  def nearestCentroids(v: ArrayData, m: Array[Array[Double]],
+      k: Int): ArrayData = {
+    val vb = doubles(v)
+    val vo = start(v, D)
+    val dots = m.map(c => dotRaw(vb, vo, c, D, math.min(v.numElements(), c.length)))
+    val kk = math.min(k, m.length)
+    val out = new Array[Int](kk)
+    val used = new Array[Boolean](m.length)
+    var s = 0
+    while (s < kk) {
+      var best = -1
+      var bd = Double.NegativeInfinity
+      var j = 0
+      while (j < m.length) {
+        // `best < 0` keeps the first unused index even when every dot is
+        // NaN (NaN > x is always false) — an all-NaN row degrades to
+        // lowest-index assignment like nearestCentroid's best=0 init,
+        // instead of crashing on used(-1).
+        if (!used(j) && (best < 0 || dots(j) > bd)) { bd = dots(j); best = j }
+        j += 1
+      }
+      used(best) = true
+      out(s) = best
+      s += 1
+    }
+    new GenericArrayData(out)
   }
 
   /** Σ bit_count(x(w) & y(w)) over the shorter operand's word count. */
@@ -147,39 +208,6 @@ object VectorKernels {
     while (i < n) {
       s += java.lang.Long.bitCount(x.getLong(i) & y.getLong(i))
       i += 1
-    }
-    s
-  }
-
-  /** |x ∩ y| of two ascending, duplicate-free sets by linear merge. */
-  def sortedCommon(x: ArrayData, y: ArrayData): Long = {
-    val nx = x.numElements()
-    val ny = y.numElements()
-    var i = 0
-    var j = 0
-    var s = 0L
-    while (i < nx && j < ny) {
-      val u = x.getLong(i)
-      val v = y.getLong(j)
-      if (u == v) { s += 1; i += 1; j += 1 }
-      else if (u < v) i += 1
-      else j += 1
-    }
-    s
-  }
-
-  /** [[sortedCommon]] over JVM arrays, for the pair grid (see the
-    * array [[dot]] for why it is kept beside the `ArrayData` loop). */
-  def sortedCommon(x: Array[Long], y: Array[Long]): Long = {
-    var i = 0
-    var j = 0
-    var s = 0L
-    while (i < x.length && j < y.length) {
-      val u = x(i)
-      val v = y(j)
-      if (u == v) { s += 1; i += 1; j += 1 }
-      else if (u < v) i += 1
-      else j += 1
     }
     s
   }
@@ -209,62 +237,134 @@ object VectorKernels {
   }
 
   /** PQ encode: per subspace, the index of the L2-nearest centroid of the
-    * corresponding contiguous subvector. */
+    * corresponding contiguous subvector ([[nearestL2]]). */
   def pqEncode(v: ArrayData, cb: Array[Array[Array[Double]]]): ArrayData = {
-    val m = cb.length
-    val codes = new Array[Int](m)
-    var off = 0
-    var j = 0
-    while (j < m) {
-      val cents = cb(j)
-      val d = cents(0).length
-      var best = 0
-      var bestDist = Double.MaxValue
-      var c = 0
-      while (c < cents.length) {
-        val cent = cents(c)
-        var s = 0.0
-        var i = 0
-        while (i < d) {
-          val diff = v.getDouble(off + i) - cent(i)
-          s += diff * diff
-          i += 1
-        }
-        if (s < bestDist) { bestDist = s; best = c }
-        c += 1
-      }
-      codes(j) = best
-      off += d
-      j += 1
-    }
-    new GenericArrayData(codes)
+    checkPqWidth("pqEncode", v, cb)
+    val vb = doubles(v)
+    val vo = start(v, D)
+    var off = 0L
+    new GenericArrayData(cb.map { cents =>
+      val code = argminL2(vb, vo + 8L * off, cents(0).length, cents)
+      off += cents(0).length
+      code
+    })
   }
 
   /** Asymmetric-distance lookup table for a query vector, flattened to
     * m·ksub doubles: lut(j·ksub + c) = q_subvector_j · cb(j)(c). The PQ
     * approximation of q·x is then a sum of m table lookups. */
   def pqLut(q: ArrayData, cb: Array[Array[Array[Double]]]): ArrayData = {
-    val m = cb.length
-    val ksub = cb(0).length
-    val lut = new Array[Double](m * ksub)
-    var off = 0
-    var j = 0
-    while (j < m) {
-      val cents = cb(j)
+    checkPqWidth("pqLut", q, cb)
+    val qb = doubles(q)
+    val qo = start(q, D)
+    var off = 0L
+    new GenericArrayData(cb.flatMap { cents =>
       val d = cents(0).length
-      var c = 0
-      while (c < cents.length) {
-        val cent = cents(c)
-        var s = 0.0
-        var i = 0
-        while (i < d) { s += q.getDouble(off + i) * cent(i); i += 1 }
-        lut(j * ksub + c) = s
-        c += 1
-      }
+      val row = cents.map(c => dotRaw(qb, qo + 8L * off, c, D, math.min(d, c.length)))
       off += d
-      j += 1
+      row
+    })
+  }
+
+  /** Subspace j spans its first centroid's width. A vector narrower than
+    * the summed widths throws IllegalArgumentException naming both, before
+    * any raw read; a wider one encodes its prefix. */
+  private def checkPqWidth(kernel: String, v: ArrayData,
+      cb: Array[Array[Array[Double]]]): Unit = {
+    var width = 0
+    for (cents <- cb) width += cents(0).length
+    if (v.numElements() < width) throw new IllegalArgumentException(
+      s"$kernel: a vector of ${v.numElements()} elements is narrower than " +
+        s"the codebooks' width $width (m = ${cb.length})")
+  }
+
+  /** The shape [[pqEncode]] and [[pqLut]] need: at least one subspace,
+    * each with at least one centroid, all of one width. */
+  private[graft] def requireCodebooks(cb: Seq[Seq[Seq[Double]]]): Unit =
+    require(cb.nonEmpty && cb.forall(s => s.nonEmpty && s.forall(_.length == s.head.length)),
+      s"PQ codebooks must be non-empty with one width per subspace (got " +
+        cb.map(_.map(_.length).distinct.mkString("|")).mkString("[", ",", "]") + ")")
+
+  // Operands as raw memory: an UnsafeArrayData's own bytes, else a copy.
+
+  private def doubles(a: ArrayData): AnyRef = a match {
+    case u: UnsafeArrayData => u.getBaseObject
+    case _ => a.toDoubleArray()
+  }
+
+  private def longs(a: ArrayData): AnyRef = a match {
+    case u: UnsafeArrayData => u.getBaseObject
+    case _ => a.toLongArray()
+  }
+
+  /** Offset of element 0 in what [[doubles]]/[[longs]] returned for `a`. */
+  private def start(a: ArrayData, arrayOffset: Long): Long = a match {
+    case u: UnsafeArrayData => u.getBaseOffset +
+      UnsafeArrayData.calculateHeaderPortionInBytes(u.numElements())
+    case _ => arrayOffset
+  }
+
+  // The loops. Callers pass lengths their operands hold.
+
+  private def dotRaw(xb: AnyRef, xo: Long, yb: AnyRef, yo: Long,
+      n: Int): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      s += Platform.getDouble(xb, xo + 8L * i) * Platform.getDouble(yb, yo + 8L * i)
+      i += 1
     }
-    new GenericArrayData(lut)
+    s
+  }
+
+  private def mergeRaw(xb: AnyRef, xo: Long, nx: Int, yb: AnyRef, yo: Long,
+      ny: Int): Long = {
+    var i = 0
+    var j = 0
+    var s = 0L
+    while (i < nx && j < ny) {
+      val u = Platform.getLong(xb, xo + 8L * i)
+      val v = Platform.getLong(yb, yo + 8L * j)
+      if (u == v) { s += 1; i += 1; j += 1 }
+      else if (u < v) i += 1
+      else j += 1
+    }
+    s
+  }
+
+  private def argmaxDot(vb: AnyRef, vo: Long, n: Int,
+      m: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestDot = Double.NegativeInfinity
+    var i = 0
+    while (i < m.length) {
+      val d = dotRaw(vb, vo, m(i), D, math.min(n, m(i).length))
+      if (d > bestDot) { bestDot = d; best = i }
+      i += 1
+    }
+    best
+  }
+
+  /** The squared-distance loop, inside its argmin. */
+  private def argminL2(vb: AnyRef, vo: Long, n: Int,
+      m: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestDist = Double.MaxValue
+    var c = 0
+    while (c < m.length) {
+      val cent = m(c)
+      val len = math.min(n, cent.length)
+      var s = 0.0
+      var i = 0
+      while (i < len) {
+        val t = Platform.getDouble(vb, vo + 8L * i) - Platform.getDouble(cent, D + 8L * i)
+        s += t * t
+        i += 1
+      }
+      if (s < bestDist) { bestDist = s; best = c }
+      c += 1
+    }
+    best
   }
 }
 
@@ -275,8 +375,7 @@ object VectorKernels {
   * these m small ints (+ one stored norm) instead of the full vector. */
 case class PqEncode(child: Expression, cb: Seq[Seq[Seq[Double]]])
     extends UnaryExpression with ExpectsInputTypes {
-  require(cb.nonEmpty && cb.forall(_.nonEmpty),
-    "PQ codebooks must be non-empty")
+  VectorKernels.requireCodebooks(cb)
 
   @transient private lazy val matrix: Array[Array[Array[Double]]] =
     cb.map(_.map(_.toArray).toArray).toArray
@@ -304,8 +403,7 @@ case class PqEncode(child: Expression, cb: Seq[Seq[Seq[Double]]])
   * QUERY row; corpus rows only do table lookups (PqScore). */
 case class PqLut(child: Expression, cb: Seq[Seq[Seq[Double]]])
     extends UnaryExpression with ExpectsInputTypes {
-  require(cb.nonEmpty && cb.forall(_.nonEmpty),
-    "PQ codebooks must be non-empty")
+  VectorKernels.requireCodebooks(cb)
   // The flat LUT uses a uniform ksub stride and PqScore recovers ksub as
   // lut.length/m — ragged codebooks would index past segment boundaries.
   require(cb.forall(_.length == cb.head.length),

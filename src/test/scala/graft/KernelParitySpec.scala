@@ -2,19 +2,21 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions.{col, expr, rand, typedlit, when}
 
 import graft.functions.GraftFunctions
 
 /** Interpreted and codegen evaluation of the four pair-scoring kernels
-  * (`graft_dot`, `graft_bitset_common`, `graft_sorted_common`, `pqScore`)
-  * and of the six sketch kernels the dedup indexes persist (shingle set,
-  * MinHash, SimHash, winnow, rolling hashes, byte-block hash) agree bit
-  * for bit on edge inputs: null operands, empty arrays, mismatched
-  * lengths, NaN/±Inf elements, `Long.MinValue`/`MaxValue` words, sorted
-  * sets with no or full overlap, inputs shorter than one k-gram, and
-  * surrogate-pair and combining-mark text. Malformed `pqScore` shapes
-  * throw the same error on both paths. */
+  * (`graft_dot`, `graft_bitset_common`, `graft_sorted_common`, `pqScore`),
+  * the centroid and PQ-encoding kernels (`graft_nearest_centroid(s)`,
+  * `graft_pq_encode`, `graft_pq_lut`) and the six sketch kernels the dedup
+  * indexes persist (shingle set, MinHash, SimHash, winnow, rolling hashes,
+  * byte-block hash) agree bit for bit on edge inputs: null operands, null
+  * elements, literal (`GenericArrayData`) operands, empty arrays,
+  * mismatched lengths, NaN/±Inf elements, ties, `Long.MinValue`/`MaxValue`
+  * words, sorted sets with no or full overlap, inputs shorter than one
+  * k-gram, and surrogate-pair and combining-mark text. Malformed `pqScore`,
+  * `pqEncode` and `pqLut` shapes throw the same error on both paths. */
 class KernelParitySpec extends SparkSpecBase {
 
   /** The two evaluation paths: fully interpreted (no whole-stage codegen,
@@ -34,16 +36,20 @@ class KernelParitySpec extends SparkSpecBase {
     try body finally conf.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
-  /** `df.select(cols)` collected on both paths. Doubles compare by bit
-    * pattern, so NaN, ±Inf and -0.0 must match exactly. */
-  private def bothPaths(df: DataFrame, cols: Column*): Seq[Seq[Seq[Any]]] =
+  /** Doubles, also inside arrays, as bit patterns, so NaN, ±Inf and -0.0
+    * must match exactly. */
+  private def exact(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case s: scala.collection.Seq[_] => s.map(exact)
+    case v => v
+  }
+
+  /** `df.select(cols)` collected on both paths, compared by [[exact]]. */
+  private def bothPaths(df: DataFrame, cols: Column*): Seq[Seq[Any]] =
     paths.map { case (mode, wholeStage) =>
       onPath(mode, wholeStage) {
         val q = df.select(cols: _*)
-        val rows = q.collect().toSeq.map(_.toSeq.map {
-          case d: Double => java.lang.Double.doubleToRawLongBits(d)
-          case v => v
-        })
+        val rows = q.collect().toSeq.map(r => exact(r.toSeq))
         val codegen = q.queryExecution.executedPlan
           .find(_.isInstanceOf[WholeStageCodegenExec]).isDefined
         assert(codegen == wholeStage, s"$mode plan")
@@ -126,8 +132,6 @@ class KernelParitySpec extends SparkSpecBase {
 
   test("pqScore: malformed shapes throw IllegalArgumentException on both paths") {
     import spark.implicits._
-    def rootCause(t: Throwable): Throwable =
-      if (t.getCause == null || t.getCause == t) t else rootCause(t.getCause)
     val malformed = Seq(
       (Seq.empty[Int], Seq(1.0)),
       // 5 entries do not split into 2 subspaces, and code 2 is outside
@@ -145,6 +149,84 @@ class KernelParitySpec extends SparkSpecBase {
       assert(rootCause(e).isInstanceOf[IllegalArgumentException],
         s"$mode $codes $lut: $e")
     }
+  }
+
+  private def rootCause(t: Throwable): Throwable =
+    if (t.getCause == null || t.getCause == t) t else rootCause(t.getCause)
+
+  /** Vectors for the centroid and PQ kernels: a null operand, null
+    * elements, empty, NaN and ±Inf elements, and rows whose scores tie. */
+  private val vectors = Seq[Option[Seq[Option[Double]]]](
+    None,
+    Some(Seq(Some(1.0), None, Some(2.0), Some(0.5))),
+    Some(Seq(Some(Double.NaN), Some(1.0), Some(0.0), Some(1.0))),
+    Some(Seq(Some(Inf), Some(-Inf), Some(0.0), Some(1.0))),
+    Some(Seq.fill(4)(Some(Double.NaN))),
+    Some(Seq(Some(1.0), Some(1.0), Some(1.0), Some(1.0))),
+    Some(Seq(Some(0.0), Some(0.0), Some(0.0), Some(0.0))))
+
+  /** `xs` as a literal (`GenericArrayData`) operand. The CASE over a
+    * nondeterministic (always true) condition keeps constant folding from
+    * evaluating the kernel on the driver. */
+  private def literalVector(xs: Option[Double]*): Column =
+    when(rand(1) < 2, typedlit(xs.toSeq))
+
+  test("graft_nearest_centroid(s): nulls, null elements, literals, short and long vectors, NaN/±Inf, ties") {
+    import spark.implicits._
+    // Centroid 2 repeats centroid 0, so every row that prefers 0 ties.
+    val cents = Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0), Seq(1.0, 0.0, 0.0),
+      Seq(0.0, 0.0, -1.0))
+    val df = (vectors ++ Seq(
+      Some(Seq.empty),
+      Some(Seq(Some(0.0), Some(2.0))),
+      Some(Seq(Some(3.0))))).toDF("v")
+    assertParity(df,
+      GraftFunctions.nearestCentroid(col("v"), cents),
+      GraftFunctions.nearestCentroids(col("v"), cents, 2),
+      GraftFunctions.nearestCentroids(col("v"), cents, 9),
+      GraftFunctions.nearestCentroid(literalVector(Some(0.5), None, Some(2.0)), cents),
+      GraftFunctions.nearestCentroids(literalVector(None, Some(0.5)), cents, 3))
+  }
+
+  /** Two subspaces of width 2, three centroids each; centroid 2 of
+    * subspace 0 repeats centroid 0, so ties go to the lower index. */
+  private val codebooks = Seq(
+    Seq(Seq(0.0, 0.0), Seq(1.0, 1.0), Seq(0.0, 0.0)),
+    Seq(Seq(1.0, 0.0), Seq(-1.0, 0.0), Seq(0.0, 2.0)))
+
+  test("graft_pq_encode and graft_pq_lut: nulls, null elements, literals, long vectors, NaN/±Inf, ties") {
+    import spark.implicits._
+    val df = (vectors ++ Seq(
+      Some(Seq(0.5, 0.5, 0.0, 1.0, 7.0, -7.0).map(Some(_))))).toDF("v")
+    assertParity(df,
+      GraftFunctions.pqEncode(col("v"), codebooks),
+      GraftFunctions.pqLut(col("v"), codebooks),
+      GraftFunctions.pqEncode(literalVector(Some(1.0), None, Some(-1.0), Some(0.0)), codebooks),
+      GraftFunctions.pqLut(literalVector(None, Some(1.0), Some(2.0), Some(3.0), Some(4.0)), codebooks))
+  }
+
+  test("graft_pq_encode and graft_pq_lut: short vectors throw IllegalArgumentException on both paths") {
+    import spark.implicits._
+    val wide = Seq(Seq(Seq(1.0, 2.0, 3.0, 4.0), Seq(0.0, 0.0, 0.0, 0.0)),
+      Seq(Seq(4.0, 3.0, 2.0, 1.0), Seq(1.0, 1.0, 1.0, 1.0)))
+    val df = Seq(Seq(1.0, 2.0, 3.0)).toDF("v")
+    val short = literalVector(Some(1.0), Some(2.0), Some(3.0))
+    val cases = Seq(
+      "encode, column" -> GraftFunctions.pqEncode(col("v"), wide),
+      "lut, column" -> GraftFunctions.pqLut(col("v"), wide),
+      "encode, literal" -> GraftFunctions.pqEncode(short, wide),
+      "lut, literal" -> GraftFunctions.pqLut(short, wide))
+    for ((name, c) <- cases; (mode, wholeStage) <- paths) {
+      val e = onPath(mode, wholeStage) {
+        intercept[Exception](df.select(c).collect())
+      }
+      assert(rootCause(e).isInstanceOf[IllegalArgumentException],
+        s"$mode $name: $e")
+    }
+    // A subspace whose centroids differ in width is refused up front.
+    val ragged = Seq(Seq(Seq(1.0, 2.0), Seq(1.0)))
+    intercept[IllegalArgumentException](GraftFunctions.pqEncode(col("v"), ragged))
+    intercept[IllegalArgumentException](GraftFunctions.pqLut(col("v"), ragged))
   }
 
   // Sketch kernels the persisted dedup indexes store.
