@@ -29,10 +29,16 @@ import scala.util.Try
   * symmetric EXCEPT, and the single-partition path for small in-memory
   * frames), so every statement gets Catalyst analysis/optimization
   * (predicate pushdown, column pruning, join selection, AQE) and Tungsten
-  * codegen for free. The single-partition path runs a plan whose leaves
+  * codegen for free. The single-partition path plans a plan whose leaves
   * are all `LocalRelation`s, together at most
-  * `spark.sql.autoBroadcastJoinThreshold`, as one job with no Exchange
-  * (see [[singlePartition]]). The returned DataFrame is lazy; callers
+  * `spark.sql.autoBroadcastJoinThreshold`, in one partition with no
+  * Exchange (see [[singlePartition]]), and its `collect`, `take` and
+  * `toLocalIterator` run no job: the one partition is iterated in the
+  * calling thread (`GraftBridge.ofLocal`). A write, `.rdd` or a frame
+  * derived from it (`count`, `show`, `limit`, ...) still runs one job, and
+  * so does a plain top-k `ORDER BY … LIMIT` over one frame, which keeps
+  * Spark's plan: its `TakeOrderedAndProjectExec` reads the several
+  * partitions of the local scan. The returned DataFrame is lazy; callers
   * choose the action/sink — unlike the reference, which eagerly
   * materializes a pandas frame per query.
   *
@@ -40,8 +46,9 @@ import scala.util.Try
   * plan cache, [[PlanCache]]): a hit skips the pre-pass, parse, analysis and
   * rewrites. Where it is safe, hits after the first also reuse one
   * template's optimized, physical and executed plans, and pay only their
-  * job; a plan with `now()`/`today()` or another value the optimizer fixes
-  * per call, or with an Exchange, is optimized on every call (eligibility
+  * run (no job on collect for a single-partition plan); a plan with
+  * `now()`/`today()` or another value the optimizer fixes per call, or
+  * with an Exchange, is optimized on every call (eligibility
   * and lifetime: [[PlanCache]]). Each session keeps at most
   * [[PlanCache.MaxEntries]] plans, least recently used evicted first. An
   * entry is keyed by the SQL text and the session's set confs
@@ -92,12 +99,14 @@ object Engine {
       val df = spark.sql(Dialect.rewrite(sql))
       val analyzed = df.queryExecution.analyzed
       val symmetric = symmetricExceptCompat(spark, analyzed)
-      val plan = namingParity(singlePartition(spark, symmetric))
+      val single = singlePartition(spark, symmetric)
+      val plan = namingParity(single)
       if (plan eq analyzed) df
       // The symmetric EXCEPT reads each side twice: only a full analysis
       // gives the two copies distinct attributes.
-      else if (symmetric ne analyzed) GraftBridge.ofRows(spark, plan)
-      else GraftBridge.ofAnalyzed(spark, plan)
+      else PlanCache.frame(spark,
+        if (symmetric ne analyzed) plan else GraftBridge.checked(spark, plan),
+        local = single ne symmetric)
     }
 
   /** What the session's plan cache decided so far: one outcome per
@@ -128,11 +137,16 @@ object Engine {
     * Hits of an eligible entry are served prepared: their Datasets share
     * the optimized, physical and executed plans of a template, so a repeated
     * read skips optimization, physical planning, code generation and the
-    * building of its RDDs, and pays only its job. An entry is eligible when
-    * its plan reads a temp view, has no expression that the optimizer
-    * replaces with a value of the call (see [[perCall]]), and its executed
-    * plan has nothing that one run would hold for the next or share with a
-    * run beside it (see [[shareable]]). The first hit decides, once per
+    * building of its RDDs, and pays only its run. A single-partition entry's
+    * template is a local plan ([[frame]]): its prepared hits collect in the
+    * calling thread with no job and no adaptive plan, so threads reading
+    * the same text are not run one at a time by an adaptive plan's lock
+    * (a run that finds the template's local route busy in another thread
+    * runs as a job). An entry is eligible when its plan reads a temp view,
+    * has no expression that the optimizer replaces with a value of the call
+    * (see [[perCall]]), and its executed plan has nothing that one run
+    * would hold for the next or share with a run beside it (see
+    * [[shareable]]). The first hit decides, once per
     * entry: it plans the template and is served over it.
     *
     * A template holds its session, so it is not kept in the weakly keyed
@@ -153,7 +167,7 @@ object Engine {
       * hit of a `preparable` entry, which may hang a template on the
       * registration of the first view under `tag` (and keeps that
       * registration in `host`, weakly). */
-    private final class Entry(val plan: LogicalPlan,
+    private final class Entry(val plan: LogicalPlan, val local: Boolean,
         val views: Map[String, CatalogTable], preparable: Boolean) {
       @volatile var decided: Boolean = !preparable
       val tag =
@@ -199,7 +213,7 @@ object Engine {
         }
         template match {
           case Some(t) => GraftBridge.reusing(t, e.plan.clone())
-          case None if e.decided => GraftBridge.ofRows(spark, e.plan.clone())
+          case None if e.decided => frame(spark, e.plan.clone(), e.local)
           case None => decide(spark, e)
         }
       }
@@ -210,7 +224,7 @@ object Engine {
       * view, if its executed plan is [[shareable]]. */
     private def decide(spark: SparkSession, e: Entry): DataFrame =
       e.synchronized {
-        val df = GraftBridge.ofRows(spark, e.plan.clone())
+        val df = frame(spark, e.plan.clone(), e.local)
         if (!e.decided) {
           val qe = df.queryExecution
           val (name, desc) = e.views.head
@@ -223,6 +237,14 @@ object Engine {
         }
         df
       }
+
+    /** The one doorway from a rewritten plan to its Dataset, for misses,
+      * first hits and unprepared hits alike: a plan that the
+      * single-partition rewrite changed (`local`) collects in the calling
+      * thread (`GraftBridge.ofLocal`), and a template planned from it holds
+      * that local executed plan for its prepared hits. */
+    def frame(spark: SparkSession, plan: LogicalPlan, local: Boolean): DataFrame =
+      if (local) GraftBridge.ofLocal(spark, plan) else GraftBridge.ofRows(spark, plan)
 
     /** Run `build` and store its analyzed plan under `key` if it is safe to
       * share; `stale` tells that an entry was found but rejected. */
@@ -247,7 +269,8 @@ object Engine {
       val entry = if (bypass.isDefined) None else {
         val views =
           tempViews(analyzed).map(v => v.desc.identifier.table -> v.desc).toMap
-        Some(new Entry(GraftBridge.withoutDatasetIds(analyzed), views,
+        Some(new Entry(GraftBridge.withoutDatasetIds(analyzed),
+          GraftBridge.isLocal(out), views,
           preparable = views.nonEmpty && !exprs.exists(perCall)))
       }
       st.synchronized {
@@ -347,7 +370,8 @@ object Engine {
           byName = false, allowMissingCol = false)
     }
 
-  /** Small in-memory plans run as one job, one stage, one task. The
+  /** Small in-memory plans run in one partition: collected with no job
+    * (see [[PlanCache.frame]]), written as one job, one stage, one task. The
     * reference's workload is `query` over registered frames of a few
     * hundred rows, where Spark's fixed costs dominate: a group-by plans a
     * shuffle (two jobs and an AQE re-plan between them) and a join plans a

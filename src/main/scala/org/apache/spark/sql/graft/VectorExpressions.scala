@@ -473,18 +473,34 @@ object GraftBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(classic(spark), plan)
 
-  /** [[ofRows]] for a rewrite of an analyzed plan that is built from
-    * resolved nodes only: the plan is checked (`checkAnalysis`) and taken as
-    * analyzed, without a second run of the analyzer. A rewrite that puts one
-    * subtree into the plan twice needs [[ofRows]]: only the analyzer's
-    * `DeduplicateRelations` gives the copies distinct attributes. */
-  def ofAnalyzed(spark: org.apache.spark.sql.SparkSession,
+  /** A rewrite of an analyzed plan that is built from resolved nodes only,
+    * checked (`checkAnalysis`) and marked analyzed, so that a Dataset of it
+    * takes it as is instead of running the analyzer a second time. A
+    * rewrite that puts one subtree into the plan twice must be analyzed
+    * again: only the analyzer's `DeduplicateRelations` gives the copies
+    * distinct attributes. */
+  def checked(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.DataFrame = {
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
     classic(spark).sessionState.analyzer.checkAnalysis(plan)
     plan.setAnalyzed()
-    ofRows(spark, plan)
+    plan
   }
+
+  /** [[ofRows]] for a plan that runs in one partition with no Exchange
+    * (`Engine.query`'s single-partition plans): its executed plan has no
+    * adaptive (AQE) wrapper, which would have no Exchange to adapt, and its
+    * root is a [[LocalCollectExec]], so `collect`, `take` and
+    * `toLocalIterator` iterate the one partition in the calling thread
+    * instead of running a Spark job. */
+  def ofLocal(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
+    dataset(new LocalExecution(classic(spark), plan))
+
+  /** Whether `df` was built by [[ofLocal]]. */
+  def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.isInstanceOf[LocalExecution]
 
   /** A DataFrame of `plan`, a copy of the analyzed plan of `template`,
     * whose execution takes the template's optimized, physical and executed
@@ -494,14 +510,34 @@ object GraftBridge {
     * several threads at once (`Engine.PlanCache` decides which are). */
   def reusing(template: org.apache.spark.sql.execution.QueryExecution,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.DataFrame = {
-    val qe = new ReusedExecution(template, plan)
+      : org.apache.spark.sql.DataFrame =
+    dataset(new ReusedExecution(template, plan))
+
+  /** What `Dataset.ofRows` does with the QueryExecution it builds. */
+  private def dataset(qe: org.apache.spark.sql.execution.QueryExecution)
+      : org.apache.spark.sql.DataFrame =
     qe.sparkSession.withActive {
       qe.assertAnalyzed()
       new org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row](qe,
         () => org.apache.spark.sql.catalyst.encoders.RowEncoder
           .encoderFor(qe.analyzed.schema))
     }
+
+  private final class LocalExecution(
+      session: org.apache.spark.sql.classic.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      extends org.apache.spark.sql.execution.QueryExecution(session, plan) {
+    override def preparations: Seq[org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.execution.SparkPlan]] =
+      super.preparations.filterNot(
+        _.isInstanceOf[org.apache.spark.sql.execution.adaptive.InsertAdaptiveSparkPlan]) :+
+        LocalRoot
+  }
+
+  private object LocalRoot
+      extends org.apache.spark.sql.catalyst.rules.Rule[org.apache.spark.sql.execution.SparkPlan] {
+    override def apply(plan: org.apache.spark.sql.execution.SparkPlan)
+        : org.apache.spark.sql.execution.SparkPlan = LocalCollectExec(plan)
   }
 
   private final class ReusedExecution(

@@ -9,14 +9,19 @@ import graft.functions.GraftFunctions
 /** Interpreted and codegen evaluation of the four pair-scoring kernels
   * (`graft_dot`, `graft_bitset_common`, `graft_sorted_common`, `pqScore`),
   * the centroid and PQ-encoding kernels (`graft_nearest_centroid(s)`,
-  * `graft_pq_encode`, `graft_pq_lut`) and the six sketch kernels the dedup
+  * `graft_pq_encode`, `graft_pq_lut`), the six sketch kernels the dedup
   * indexes persist (shingle set, MinHash, SimHash, winnow, rolling hashes,
-  * byte-block hash) agree bit for bit on edge inputs: null operands, null
-  * elements, literal (`GenericArrayData`) operands, empty arrays,
-  * mismatched lengths, NaN/±Inf elements, ties, `Long.MinValue`/`MaxValue`
-  * words, sorted sets with no or full overlap, inputs shorter than one
-  * k-gram, and surrogate-pair and combining-mark text. Malformed `pqScore`,
-  * `pqEncode` and `pqLut` shapes throw the same error on both paths. */
+  * byte-block hash), the three tokenizer kernels (`graft_unigram_encode`,
+  * `graft_bpe_merge_pair`, `graft_bpe_encode`), the PII scrub
+  * (`graft_regex_scrub`), the bloom sidecar probe
+  * (`graft_bloom_might_contain`) and the z-order key (`graft_zvalue`) agree
+  * bit for bit on edge inputs: null operands, null elements, literal
+  * (`GenericArrayData`) operands, empty arrays, empty strings, mismatched
+  * lengths, NaN/±Inf elements, ties, `Long.MinValue`/`MaxValue` words,
+  * sorted sets with no or full overlap, inputs shorter than one k-gram,
+  * overlapping matches, values on a boundary, and surrogate-pair and
+  * combining-mark text. Malformed `pqScore`, `pqEncode` and `pqLut` shapes
+  * throw the same error on both paths. */
 class KernelParitySpec extends SparkSpecBase {
 
   /** The two evaluation paths: fully interpreted (no whole-stage codegen,
@@ -292,5 +297,100 @@ class KernelParitySpec extends SparkSpecBase {
       Some(Array.tabulate[Byte](256)(i => i.toByte))
     )).toDF("b")
     assertParity(df, GraftFunctions.byteBlockHash(col("b")))
+  }
+
+  // Tokenizer, scrub, bloom-probe and z-order kernels.
+
+  /** Word lists: null, empty, an empty word, astral-plane and
+    * combining-mark words, and words some pieces or merges cover, some
+    * only in part and one not at all. */
+  private val wordLists = Seq[Option[Seq[String]]](
+    None,
+    Some(Seq.empty),
+    Some(Seq("")),
+    Some(Seq("\uD83D\uDE00\uD83D\uDE00\uD83D\uDE00", "\uD835\uDD18x")),
+    Some(Seq("cafe\u0301", "noe\u0308l", "e\u0301e\u0301")),
+    Some(Seq("lower", "newest", "widest", "low", "zzz")))
+
+  test("graft_unigram_encode: null, empty, empty word, astral, combining, unknown pieces, ties") {
+    import spark.implicits._
+    // "lowe"+"r" and "low"+"er" tie at -2.5; "😀😀" and "😀"+"😀" tie at -2.0.
+    val pieces = Map("lo" -> -1.0, "low" -> -1.5, "lowe" -> -1.0, "er" -> -1.0,
+      "r" -> -1.5, "e" -> -3.0, "w" -> -3.0, "n" -> -3.0, "est" -> -1.1,
+      "\u0301" -> -0.5, "\uD83D\uDE00" -> -1.0, "\uD83D\uDE00\uD83D\uDE00" -> -2.0)
+    assertParity(wordLists.toDF("w"),
+      GraftFunctions.unigramEncodeWords(col("w"), pieces, 4),
+      GraftFunctions.unigramEncodeWords(col("w"), pieces, 1),
+      GraftFunctions.unigramEncodeWords(col("w"), Map.empty, 3),
+      GraftFunctions.unigramEncodeWords(when(rand(1) < 2, typedlit(Seq("lower", ""))), pieces, 4))
+  }
+
+  test("graft_bpe_merge_pair and graft_bpe_encode: null, empty, overlapping pairs, astral, combining") {
+    import spark.implicits._
+    val symbols = Seq[Option[Seq[String]]](
+      None,
+      Some(Seq.empty),
+      Some(Seq("a")),
+      Some(Seq("a", "a", "a")),
+      Some(Seq("a", "a", "a", "a")),
+      Some(Seq("\uD83D\uDE00", "a", "\uD83D\uDE00", "a")),
+      Some(Seq("", "a", "", "a")))
+    assertParity(symbols.toDF("s"),
+      GraftFunctions.bpeMergePair(col("s"), "a", "a"),
+      GraftFunctions.bpeMergePair(col("s"), "\uD83D\uDE00", "a"),
+      GraftFunctions.bpeMergePair(col("s"), "", "a"),
+      GraftFunctions.bpeMergePair(when(rand(1) < 2, typedlit(Seq("a", "a", "a"))), "a", "a"))
+    val merges = Seq("l" -> "o", "lo" -> "w", "e" -> "s", "es" -> "t", "est" -> "</w>",
+      "\uD83D\uDE00" -> "\uD83D\uDE00", "e" -> "\u0301", "low" -> "e", "lowe" -> "r")
+    assertParity(wordLists.toDF("w"),
+      GraftFunctions.bpeEncodeWords(col("w"), merges),
+      GraftFunctions.bpeEncodeWords(col("w"), Seq.empty),
+      GraftFunctions.bpeEncodeWords(when(rand(1) < 2, typedlit(Seq("lower", ""))), merges))
+  }
+
+  test("graft_regex_scrub: null, empty, no match, adjacent and overlapping matches, $ and \\ in tags") {
+    import spark.implicits._
+    val df = (texts ++ Seq(
+      Some("mail a@b.co,c@d.org; ip 10.0.0.1 card 4111111111111111 +1 (555) 010-9999"),
+      Some("aaaaa"))).toDF("t")
+    assertParity(df,
+      GraftFunctions.regexScrub(col("t"), graft.operators.TextOps.piiPatterns),
+      GraftFunctions.regexScrub(col("t"), Seq("aa" -> "$1\\", "a" -> "<A>", "^" -> "^", "x*" -> "-")))
+  }
+
+  test("graft_bloom_might_contain: null, empty, astral, combining, members and non-members") {
+    import spark.implicits._
+    val members = org.apache.spark.util.sketch.BloomFilter.create(64, 0.01)
+    Seq("", "ab", "cafe\u0301 noe\u0308l n\u0303o\u0303 e\u0301e\u0301e\u0301").foreach(members.putString)
+    val empty = org.apache.spark.util.sketch.BloomFilter.create(64, 0.01)
+    val df = (texts ++ Seq(Some("a"), Some("ab "))).toDF("t")
+    val Seq(interpreted, codegen) = bothPaths(df,
+      GraftFunctions.bloomMightContain(col("t"), members),
+      GraftFunctions.bloomMightContain(col("t"), empty))
+    assert(interpreted == codegen)
+    // Members are always found; the empty filter finds nothing.
+    val rows = interpreted.map(_.asInstanceOf[Seq[Any]])
+    assert(rows.take(3) == Seq(Seq(null, null), Seq(true, false), Seq(true, false)))
+    assert(rows.tail.forall(_(1) == false))
+  }
+
+  test("graft_zvalue: null, null elements, NaN/±Inf, values on and between boundaries, literals") {
+    import spark.implicits._
+    val df = Seq[Option[Seq[Option[Double]]]](
+      None,
+      Some(Seq(None, None, None)),
+      Some(Seq(Some(Double.NaN), Some(Inf), Some(-Inf))),
+      Some(Seq(Some(0.0), Some(-0.0), Some(1.0))),
+      Some(Seq(Some(0.5), Some(2.5), Some(1e308))),
+      Some(Seq(Some(-1e308), None, Some(3.0))),
+      Some(Seq(Some(2.0), Some(-1.0), Some(Double.MinPositiveValue)))).toDF("v")
+    // The third dimension repeats a cut point.
+    val bounds = Seq(Seq(0.0, 1.0, 2.0), Seq(-1.0, 0.0, 2.5), Seq(1.0, 1.0, 3.0))
+    assertParity(df,
+      GraftFunctions.zValue(col("v"), bounds, 2),
+      GraftFunctions.zValue(col("v"), bounds, 21),
+      GraftFunctions.zValue(col("v"), bounds.take(1), 63),
+      GraftFunctions.zValue(col("v"), Seq(Seq.empty, Seq.empty, Seq.empty), 1),
+      GraftFunctions.zValue(literalVector(Some(0.5), None, Some(3.0)), bounds, 2))
   }
 }

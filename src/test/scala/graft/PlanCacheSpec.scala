@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.graft.GraftBridge
 
@@ -340,6 +340,9 @@ class PlanCacheSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     threads.foreach(_.join())
     assert(good.get == 800)
     assert(prepared(s) == 800L)
+    // No adaptive plan, and so no lock that runs the hits one at a time.
+    val template = Engine.query(s, q).queryExecution.executedPlan
+    assert(template.find(_.isInstanceOf[AdaptiveSparkPlanExec]).isEmpty, template.toString)
   }
 
   test("a prepared hit runs as many jobs as an unprepared one") {
@@ -400,7 +403,9 @@ class PlanCacheSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       // Spark's adaptive-execution pools start a thread per task until they
       // are full, and a new thread inherits the active session of the
       // thread that starts it, so the first sessions that run adaptive
-      // plans in a JVM stay reachable while those threads live.
+      // plans in a JVM stay reachable while those threads live. The
+      // in-memory group-by below collects with no adaptive plan, but the
+      // file-backed read of `region` would still plan one.
       s.conf.set("spark.sql.adaptive.enabled", "false")
       Tables.ensure(s, sfDir)
       Engine.registerTempTable(frame(s, 1 -> "a", 2 -> "b"), "t")

@@ -3,17 +3,24 @@ package graft
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
-import org.apache.spark.sql.execution.LocalTableScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.graft.LocalCollectExec
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import scala.jdk.CollectionConverters._
 
 /** `Engine.query`'s single-partition path for small in-memory frames:
   * FIXTURES-shaped tables (forest_fires 518 rows, the digimon lists 249 and
   * 387) registered from in-memory rows. Every distribution-requiring read
   * must return the rows the same SQL returns over a parquet copy of the
-  * same tables (which the path skips), plan no Exchange and run exactly one
-  * job; project/filter reads stay zero-job local scans; frames over
-  * `spark.sql.autoBroadcastJoinThreshold` keep Spark's own plan.
+  * same tables (which the path skips), plan no Exchange and collect with no
+  * job (its one partition is iterated in the calling thread), while a
+  * `noop` write of the same frame still runs exactly one job;
+  * project/filter reads stay zero-job local scans; a plain top-k read
+  * keeps its one job; frames over `spark.sql.autoBroadcastJoinThreshold`
+  * keep Spark's own plan.
   */
 class SinglePartitionSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
@@ -86,9 +93,27 @@ class SinglePartitionSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     case v => String.valueOf(v)
   }.mkString("|")).toSeq.sorted
 
-  private def exchanges(df: DataFrame) = collect(df.queryExecution.executedPlan) {
+  private def exchanges(plan: SparkPlan) = collect(plan) {
     case e: ShuffleExchangeLike => e
     case e: BroadcastExchangeLike => e
+  }
+
+  /** Write `df` to the `noop` sink, returning the write's executed plan and
+    * the number of Spark jobs it ran. */
+  private def noopWrite(df: DataFrame): (SparkPlan, Int) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val (_, jobs) = ListenerBus.countingJobs(spark.sparkContext)(
+        df.write.format("noop").mode("overwrite").save())
+      assert(plans.size == 1)
+      (plans.peek, jobs)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   private val distributed = Seq(
@@ -113,15 +138,30 @@ class SinglePartitionSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     "order by without limit" -> "select X, Y, temp from forest_fires order by temp desc, X, Y")
 
   distributed.foreach { case (name, sql) =>
+    // The rows are the local collect's; the one job is the noop write's,
+    // the route of every action but the collecting ones.
     test(s"$name: bypass rows, no Exchange, one job") {
       val expected = withTables(parquet = true)(sorted(Engine.query(spark, sql).collect()))
       withTables(parquet = false) {
-        val df = Engine.query(spark, sql)
-        val (rows, jobs) = collectCountingJobs(df)
+        val rows = Engine.query(spark, sql).collect()
         assert(sorted(rows) == expected)
         assert(rows.nonEmpty)
-        assert(exchanges(df).isEmpty, df.queryExecution.executedPlan.toString)
-        assert(jobs == 1, df.queryExecution.executedPlan.toString)
+        val (plan, jobs) = noopWrite(Engine.query(spark, sql))
+        assert(exchanges(plan).isEmpty, plan.toString)
+        assert(jobs == 1, plan.toString)
+      }
+    }
+
+    test(s"$name: collect runs no job and no adaptive plan") {
+      withTables(parquet = false) {
+        val df = Engine.query(spark, sql)
+        val (rows, jobs) = collectCountingJobs(df)
+        assert(rows.nonEmpty)
+        val plan = df.queryExecution.executedPlan
+        assert(exchanges(plan).isEmpty, plan.toString)
+        assert(plan.isInstanceOf[LocalCollectExec], plan.toString)
+        assert(plan.find(_.isInstanceOf[AdaptiveSparkPlanExec]).isEmpty, plan.toString)
+        assert(jobs == 0, plan.toString)
       }
     }
   }
@@ -150,7 +190,22 @@ class SinglePartitionSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val expected = withTables(parquet = true)(chain())
     val got = withTables(parquet = false)(chain())
     assert(got.map(_._1) == expected.map(_._1))
-    assert(got.map(_._2) == Seq(1, 1))
+    assert(got.map(_._2) == Seq(0, 0))
+  }
+
+  test("toLocalIterator and the root's executeTake run no job either") {
+    withTables(parquet = false) {
+      val sql = distributed.head._2
+      val all = sorted(Engine.query(spark, sql).collect())
+      val df = Engine.query(spark, sql)
+      val (iterated, jobs) = ListenerBus.countingJobs(spark.sparkContext)(
+        df.toLocalIterator().asScala.toArray)
+      assert(sorted(iterated) == all && jobs == 0)
+      val plan = df.queryExecution.executedPlan
+      val (taken, takeJobs) = ListenerBus.countingJobs(spark.sparkContext)(plan.executeTake(3))
+      assert(taken.length == 3 && takeJobs == 0)
+      assert(plan.executeTake(0).isEmpty)
+    }
   }
 
   test("projection and filter still plan a bare local scan and run no job") {
@@ -178,6 +233,21 @@ class SinglePartitionSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("a top-k over an aggregate reads its one partition and collects with no job") {
+    val sql = "select month, count(*) as n from forest_fires group by month " +
+      "order by n desc, month limit 3"
+    val expected = withTables(parquet = true)(Engine.query(spark, sql).collect().toSeq)
+    withTables(parquet = false) {
+      val df = Engine.query(spark, sql)
+      val (rows, jobs) = collectCountingJobs(df)
+      val plan = df.queryExecution.executedPlan
+      assert(rows.toSeq == expected)
+      assert(plan.isInstanceOf[LocalCollectExec], plan.toString)
+      assert(plan.toString.contains("TakeOrderedAndProject"), plan.toString)
+      assert(jobs == 0, plan.toString)
+    }
+  }
+
   test("frames over autoBroadcastJoinThreshold, or a threshold of -1, keep Spark's plan") {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val sql = distributed.head._2
@@ -193,7 +263,9 @@ class SinglePartitionSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
             plain.queryExecution.analyzed.canonicalized)
           assert(df.queryExecution.analyzed.collectFirst { case r: Repartition => r }.isEmpty)
           df.collect()
-          assert(exchanges(df).nonEmpty, df.queryExecution.executedPlan.toString)
+          val plan = df.queryExecution.executedPlan
+          assert(exchanges(plan).nonEmpty, plan.toString)
+          assert(!plan.isInstanceOf[LocalCollectExec], plan.toString)
         } finally before match {
           case Some(v) => spark.conf.set(key, v)
           case None => spark.conf.unset(key)
