@@ -32,15 +32,13 @@ import scala.util.Try
   * codegen for free. The single-partition path plans a plan whose leaves
   * are all `LocalRelation`s, together at most
   * `spark.sql.autoBroadcastJoinThreshold`, in one partition with no
-  * Exchange (see [[singlePartition]]), and its `collect`, `take` and
-  * `toLocalIterator` run no job: the one partition is iterated in the
-  * calling thread (`GraftBridge.ofLocal`). A write, `.rdd` or a frame
-  * derived from it (`count`, `show`, `limit`, ...) still runs one job, and
-  * so does a plain top-k `ORDER BY … LIMIT` over one frame, which keeps
-  * Spark's plan: its `TakeOrderedAndProjectExec` reads the several
-  * partitions of the local scan. The returned DataFrame is lazy; callers
-  * choose the action/sink — unlike the reference, which eagerly
-  * materializes a pandas frame per query.
+  * Exchange (see [[singlePartition]]), a top-k `ORDER BY … LIMIT`
+  * included, and its `collect`, `take` and `toLocalIterator` run no job:
+  * the one partition is iterated in the calling thread
+  * (`GraftBridge.ofLocal`). A write, `.rdd` or a frame derived from it
+  * (`count`, `show`, `limit`, ...) still runs one job. The returned
+  * DataFrame is lazy; callers choose the action/sink — unlike the
+  * reference, which eagerly materializes a pandas frame per query.
   *
   * A session's repeated texts reuse their rewritten, analyzed plan (the
   * plan cache, [[PlanCache]]): a hit skips the pre-pass, parse, analysis and
@@ -392,24 +390,21 @@ object Engine {
     *     joins, which the optimizer pushes below the left leaf's
     *     `Repartition`, so they would still broadcast.
     *
+    * A top-k `ORDER BY … LIMIT` counts too: over the one partition its
+    * `TakeOrderedAndProjectExec` collects in the calling thread, where over
+    * the local scan's several partitions it runs a job.
+    *
     * Everything else keeps Spark's plan: pure project/filter/limit plans
-    * (which `ConvertToLocalRelation` already runs with zero jobs), top-k
-    * `ORDER BY … LIMIT` (one job already), file-backed, cached, streaming
-    * and mixed plans, and plans that carry their own hints. */
+    * (which `ConvertToLocalRelation` already runs with zero jobs),
+    * file-backed, cached, streaming and mixed plans, and plans that carry
+    * their own hints. */
   private def singlePartition(spark: SparkSession,
       plan: LogicalPlan): LogicalPlan = {
     val nodes = plan.collectWithSubqueries { case p => p }
     val leaves = nodes.filter(_.children.isEmpty)
-    // ORDER BY + LIMIT plans as TakeOrderedAndProject, which needs no
-    // distribution: one job either way, so the rewrite would only add cost.
-    val topK = nodes.collect {
-      case LocalLimit(_, s: Sort) => s
-      case LocalLimit(_, Project(_, s: Sort)) => s
-    }
     val needsDistribution = nodes.exists {
       case _: Aggregate | _: Window | _: Join | _: Distinct | _: Deduplicate |
-          _: Union | _: Except | _: Intersect => true
-      case s: Sort => !topK.exists(_ eq s)
+          _: Union | _: Except | _: Intersect | _: Sort => true
       case _ => false
     }
     val small = leaves.forall(_.isInstanceOf[LocalRelation]) &&

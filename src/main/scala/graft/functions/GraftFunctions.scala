@@ -125,14 +125,6 @@ object GraftFunctions {
   def byteBlockHash(content: Column): Column =
     GraftBridge.column(ByteBlockHash(GraftBridge.expression(content)))
 
-  /** Bloom-filter membership test of a string column against a baked
-    * filter (false = definitely absent) — the probe-side sidecar kernel. */
-  def bloomMightContain(c: Column,
-      bf: org.apache.spark.util.sketch.BloomFilter): Column =
-    GraftBridge.column(
-      org.apache.spark.sql.graft.BloomMightContain(
-        GraftBridge.expression(c), bf))
-
   /** Index of the centroid (rows of `cents`) with the highest dot product
     * against an array<double> column — fused codegen'd argmax. */
   def nearestCentroid(v: Column, cents: Seq[Seq[Double]]): Column =

@@ -1136,8 +1136,7 @@ object Dedup {
     * 16.8M xor+popcount comparisons per block pair, sub-second a task;
     * NOT a core-count constant — it bounds per-task work and per-row
     * replication (a bucket's rows are replicated ~(nb+1)/2× per side).
-    * `2147483647` (Int.MaxValue) disables the split AND the bucket
-    * census, restoring the plain one-key-per-bucket self-join. */
+    * `2147483647` (Int.MaxValue) disables the split. */
   val HammingBlockRowsKey = "spark.graft.dedup.hammingBlockRows"
 
   /** Evaluate the pre-flight guard over a derived prefix frame: false when
@@ -1525,85 +1524,78 @@ object Dedup {
             col("x.id") < col("y.id"))
         .select(col("x.id").as("a_id"), col("y.id").as("b_id"),
           bit_count(col("x.sim").bitwiseXOR(col("y.sim"))).as("hamming"))
-    val pairs =
-      if (blockRows == Int.MaxValue && maxBucket == Int.MaxValue) {
-        // Census disabled and uncapped: the plain one-key-per-bucket
-        // self-join (the pre-round-17 shape).
-        plainJoin(raw)
-      } else {
-        // Bucket census for BOTH skew controls — the opt-in cap
-        // ([[simhashFold]] engages it on saturation: drop degenerate
-        // chunk buckets before the quadratic self-join) and the
-        // hot-bucket SPLIT (round 17, guide §2.5: a surviving bucket past
-        // `blockRows` rows is a single join key owning a bsize²/2 pair
-        // grid in ONE task — the single enormous key AQE's skew join
-        // cannot split).
-        //
-        // Round 18: the census is COLLECTED driver-side instead of
-        // broadcast-joined back. The round-17 shape paid the broadcast
-        // build plus a DOUBLE scan of the sized frame (cold filter +
-        // hot filter feeding a union) on EVERY call — measured 2–4.4×
-        // on healthy corpora where no bucket is hot at all (QProf sf0.1:
-        // d18 15.0→3.4 s, d4 3.2→1.8, m9 2.5→1.0, m6 1.1→0.6 with the
-        // census disabled). Only buckets ABOVE a threshold leave the
-        // executors (bounded by 4·n/min(blockRows, maxBucket) rows —
-        // the census itself is ≤ 4·65536 groups by construction), and
-        // the common healthy case short-circuits to the plain join with
-        // ONE extra aggregation job over the persisted 16-byte sketch.
-        // Hot/dropped membership tests compile to InSet filters on the
-        // packed (c, chunk) key; the pair set is IDENTICAL to the
-        // round-17 broadcast-join shape on every route (OperatorsSpec
-        // pins split ≡ plain).
-        val key = col("c").cast("long") * lit(65536L) + col("chunk")
-        val floor = math.min(blockRows.toLong, maxBucket.toLong)
-        val special = raw.groupBy("c", "chunk")
-          .agg(count(lit(1)).as("bsize"))
-          .where(col("bsize") > floor)
-          .select((col("c").cast("long") * lit(65536L) + col("chunk"))
-            .as("k"), col("bsize"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        val dropped = special.collect {
-          case (k, s) if s > maxBucket => k }.toSeq
-        val hot = special.collect {
-          case (k, s) if s <= maxBucket && s > blockRows => (k, s) }.toSeq
-        val live =
-          if (dropped.isEmpty) raw else raw.where(!key.isin(dropped: _*))
-        if (hot.isEmpty) plainJoin(live)
-        else {
-          // Triangle split: a row in block p joins as the LEFT leg of keys
-          // (p, t ≥ p) and the RIGHT leg of keys (s ≤ p, p), so blocks
-          // p ≤ q meet at exactly key (p, q) — every within-bucket pair
-          // surfaces exactly once (same-block pairs keep the id tiebreak;
-          // cross-block orientation is arbitrary, so least/greatest
-          // restores a_id < b_id — the join path's exact ordering).
-          // Block count per hot bucket: PairGrid.blocksPerGroup over the
-          // hot buckets (its scaladoc has the rule) — a fixed row bound
-          // alone lets ONE 30k-row bucket run as a 2-block/3-combo grid
-          // on a 32-core box (measured: m6's sf1 byte-hash buckets). Cold
-          // buckets need no floor: they are many independent join keys
-          // already.
-          val nbOf = PairGrid.blocksPerGroup(hot, blockRows,
-            sig.sparkSession.sparkContext.defaultParallelism)
-          val cold = live.where(!key.isin(hot.map(_._1): _*))
-          val hotRaw = live.where(key.isin(hot.map(_._1): _*))
-            .withColumn("nb", element_at(typedlit(nbOf), key))
-            .withColumn("blk", pmod(hash(col("id")), col("nb")).cast("int"))
-          val xs = hotRaw
-            .withColumn("bj", explode(sequence(col("blk"), col("nb") - lit(1))))
-            .withColumnRenamed("blk", "bi")
-          val ys = hotRaw
-            .withColumn("bi", explode(sequence(lit(0), col("blk"))))
-            .withColumnRenamed("blk", "bj")
-          val hotPairs = xs.as("x").join(ys.as("y"),
-              col("x.c") === col("y.c") && col("x.chunk") === col("y.chunk") &&
-                col("x.bi") === col("y.bi") && col("x.bj") === col("y.bj") &&
-                (col("x.bi") < col("x.bj") || col("x.id") < col("y.id")))
-            .select(least(col("x.id"), col("y.id")).as("a_id"),
-              greatest(col("x.id"), col("y.id")).as("b_id"),
-              bit_count(col("x.sim").bitwiseXOR(col("y.sim"))).as("hamming"))
-          plainJoin(cold).unionByName(hotPairs)
-        }
-      }
+    // Bucket census for BOTH skew controls — the opt-in cap
+    // ([[simhashFold]] engages it on saturation: drop degenerate
+    // chunk buckets before the quadratic self-join) and the
+    // hot-bucket SPLIT (round 17, guide §2.5: a surviving bucket past
+    // `blockRows` rows is a single join key owning a bsize²/2 pair
+    // grid in ONE task — the single enormous key AQE's skew join
+    // cannot split).
+    //
+    // Round 18: the census is COLLECTED driver-side instead of
+    // broadcast-joined back. The round-17 shape paid the broadcast
+    // build plus a DOUBLE scan of the sized frame (cold filter +
+    // hot filter feeding a union) on EVERY call — measured 2–4.4×
+    // on healthy corpora where no bucket is hot at all (QProf sf0.1:
+    // d18 15.0→3.4 s, d4 3.2→1.8, m9 2.5→1.0, m6 1.1→0.6 with the
+    // census disabled). Only buckets ABOVE a threshold leave the
+    // executors (bounded by 4·n/min(blockRows, maxBucket) rows —
+    // the census itself is ≤ 4·65536 groups by construction), and
+    // the common healthy case short-circuits to the plain join with
+    // ONE extra aggregation job over the persisted 16-byte sketch.
+    // Hot/dropped membership tests compile to InSet filters on the
+    // packed (c, chunk) key; the pair set is IDENTICAL to the
+    // round-17 broadcast-join shape on every route (OperatorsSpec
+    // pins split ≡ plain).
+    val key = col("c").cast("long") * lit(65536L) + col("chunk")
+    val floor = math.min(blockRows.toLong, maxBucket.toLong)
+    val special = raw.groupBy("c", "chunk")
+      .agg(count(lit(1)).as("bsize"))
+      .where(col("bsize") > floor)
+      .select((col("c").cast("long") * lit(65536L) + col("chunk"))
+        .as("k"), col("bsize"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val dropped = special.collect {
+      case (k, s) if s > maxBucket => k }.toSeq
+    val hot = special.collect {
+      case (k, s) if s <= maxBucket && s > blockRows => (k, s) }.toSeq
+    val live =
+      if (dropped.isEmpty) raw else raw.where(!key.isin(dropped: _*))
+    val pairs = if (hot.isEmpty) plainJoin(live)
+    else {
+      // Triangle split: a row in block p joins as the LEFT leg of keys
+      // (p, t ≥ p) and the RIGHT leg of keys (s ≤ p, p), so blocks
+      // p ≤ q meet at exactly key (p, q) — every within-bucket pair
+      // surfaces exactly once (same-block pairs keep the id tiebreak;
+      // cross-block orientation is arbitrary, so least/greatest
+      // restores a_id < b_id — the join path's exact ordering).
+      // Block count per hot bucket: PairGrid.blocksPerGroup over the
+      // hot buckets (its scaladoc has the rule) — a fixed row bound
+      // alone lets ONE 30k-row bucket run as a 2-block/3-combo grid
+      // on a 32-core box (measured: m6's sf1 byte-hash buckets). Cold
+      // buckets need no floor: they are many independent join keys
+      // already.
+      val nbOf = PairGrid.blocksPerGroup(hot, blockRows,
+        sig.sparkSession.sparkContext.defaultParallelism)
+      val cold = live.where(!key.isin(hot.map(_._1): _*))
+      val hotRaw = live.where(key.isin(hot.map(_._1): _*))
+        .withColumn("nb", element_at(typedlit(nbOf), key))
+        .withColumn("blk", pmod(hash(col("id")), col("nb")).cast("int"))
+      val xs = hotRaw
+        .withColumn("bj", explode(sequence(col("blk"), col("nb") - lit(1))))
+        .withColumnRenamed("blk", "bi")
+      val ys = hotRaw
+        .withColumn("bi", explode(sequence(lit(0), col("blk"))))
+        .withColumnRenamed("blk", "bj")
+      val hotPairs = xs.as("x").join(ys.as("y"),
+          col("x.c") === col("y.c") && col("x.chunk") === col("y.chunk") &&
+            col("x.bi") === col("y.bi") && col("x.bj") === col("y.bj") &&
+            (col("x.bi") < col("x.bj") || col("x.id") < col("y.id")))
+        .select(least(col("x.id"), col("y.id")).as("a_id"),
+          greatest(col("x.id"), col("y.id")).as("b_id"),
+          bit_count(col("x.sim").bitwiseXOR(col("y.sim"))).as("hamming"))
+      plainJoin(cold).unionByName(hotPairs)
+    }
 
     pairs
       .distinct()
@@ -2814,21 +2806,9 @@ object Dedup {
     * per distinct document), not corpus-sized, and the only thing an
     * incremental exact-dedup service needs to hold between batches.
     * `layers` tracks the persisted frames this index references (same
-    * release contract as [[NearDupIndex.layers]]).
-    *
-    * `bloom` is the optional probe sidecar, valid ONLY for exactly the
-    * fingerprint set it was built over (a save-time generation): false is
-    * a guarantee of absence, so the probe skips the index anti-join for
-    * definitely-novel fingerprints — at 100 TB arrival rates most batch
-    * content is novel, and those rows never touch the bucket files at
-    * all. Every operation that grows `fps` clears it (a stale filter's
-    * false "definitely novel" would readmit a duplicate). Min-max zone
-    * maps are NOT the right sidecar here: md5 fingerprints are uniform,
-    * so range pruning carries zero selectivity — membership is the only
-    * structure the key space has. */
+    * release contract as [[NearDupIndex.layers]]). */
   final case class FingerprintIndex private[operators] (fps: DataFrame,
-      private[graft] layers: Seq[DataFrame] = Nil,
-      bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None)
+      private[graft] layers: Seq[DataFrame] = Nil)
 
   /** One corpus scan → distinct fingerprint set. Map-side partial
     * aggregation makes the distinct shuffle proportional to distinct
@@ -2855,8 +2835,7 @@ object Dedup {
     * the join key — the batch side (batch-sized) is the only Exchange. */
   def saveFingerprintIndex(index: FingerprintIndex, path: String,
       numBuckets: Int = 32, batchId: Long = -1L,
-      kept: Option[DataFrame] = None,
-      maxBloomItems: Long = 16000000L): Unit = {
+      kept: Option[DataFrame] = None): Unit = {
     val spark = index.fps.sparkSession
     import spark.implicits._
     saveGenerational(spark, path,
@@ -2866,33 +2845,15 @@ object Dedup {
         fpTable(path, gen), s"$gdir/fps", "fp", numBuckets, "fp")
       kept.foreach(_.select(col("doc_id").cast("long").as("doc_id"))
         .write.mode("overwrite").parquet(s"$gdir/kept"))
-      // Bloom sidecar over this generation's exact fingerprint set, sized
-      // by its true cardinality (the count reads the just-written bucketed
-      // files — content-sized). Skipped above `maxBloomItems`: the default
-      // cap (~19 MB at 1% fpp) keeps the filter cheap to ship with the
-      // probe stage's task closure; an operator with billions of distinct
-      // fps raises the cap or shards the index rather than silently
-      // paying an unbounded driver build. `maxBloomItems <= 0` disables.
-      val n = spark.table(fpTable(path, gen)).count()
-      if (n > 0 && maxBloomItems > 0 && n <= maxBloomItems) {
-        // fpp 1e-4 (~19 bits/item, ~2.4 MB/M fps), not the usual 1%: the
-        // split only eliminates the index scan when the maybe-seen side is
-        // EMPTY (AQE empty-relation propagation) — at 1% a 512-doc novel
-        // micro-batch has ~5 expected false positives and always pays the
-        // join; at 1e-4 it is empty ~95% of the time.
-        val bf = spark.table(fpTable(path, gen))
-          .stat.bloomFilter("fp", n, 0.0001)
-        val out = fsFor(spark, path).create(
-          new org.apache.hadoop.fs.Path(s"$gdir/bloom"))
-        try bf.writeTo(out) finally out.close()
-      }
     }
   }
 
   /** Load the newest committed [[FingerprintIndex]] generation at `path`,
     * re-registering the bucketed table if this session didn't write it. The
     * frame is deliberately NOT cached: it reads through the bucketed scan so
-    * its HashPartitioning reaches the probe's anti-join planner. */
+    * its HashPartitioning reaches the probe's anti-join planner. Any other
+    * file in `g<N>/` (older builds wrote a probe filter there) is ignored,
+    * and generation pruning deletes it with its directory. */
   def loadFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): FingerprintIndex =
     loadLatestFpGen(spark, path).map(_._1).getOrElse(
@@ -2908,20 +2869,11 @@ object Dedup {
         if (p.schema.fieldNames.contains("batch_id"))
           p.getAs[Long]("batch_id")
         else -1L
-      val bloomPath = new org.apache.hadoop.fs.Path(s"$gdir/bloom")
-      val fs = fsFor(spark, path)
-      val bloom =
-        if (fs.exists(bloomPath)) {
-          val in = fs.open(bloomPath)
-          try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-          finally in.close()
-        } else None
       // GATE layer behind a bucketed catalog table: validate footers at
       // load ([[loadLatestGen]]'s rationale).
       graft.sources.Sink.validateOwn(spark, Seq(s"$gdir/fps"))
       (FingerprintIndex(reRegisterBucketed(spark, fpTable(path, g),
-        "fp string", "fp", p.getAs[Int]("num_buckets"), s"$gdir/fps"),
-        bloom = bloom),
+        "fp string", "fp", p.getAs[Int]("num_buckets"), s"$gdir/fps")),
         batchId)
     }
 
@@ -2981,10 +2933,7 @@ object Dedup {
     * the same content must be ADMITTED again, so its fingerprint has to
     * leave the "seen ever" set. Functional — returns a new index, the
     * input (and any cached resident copy) is untouched; the tombstone set
-    * is one anti join over the fp-partitioned index, takedown-sized. The
-    * bloom sidecar stays: deletes only shrink the set, so bloom-false
-    * still guarantees absence, and a deleted fp tests "maybe" and falls
-    * through to the anti join — which now admits it. */
+    * is one anti join over the fp-partitioned index, takedown-sized. */
   def deleteFpContent(index: FingerprintIndex, docs: DataFrame,
       textCol: String): FingerprintIndex =
     deleteFpContentLogged(index, docs, textCol, None, -1L)
@@ -3010,7 +2959,7 @@ object Dedup {
   private def removeFps(index: FingerprintIndex,
       tomb: DataFrame): FingerprintIndex =
     FingerprintIndex(index.fps.join(tomb, Seq("fp"), "left_anti"),
-      index.layers :+ tomb, index.bloom)
+      index.layers :+ tomb)
 
   /** Batch rows kept by incremental exact dedup against the index:
     * fingerprint absent from the index (anti join) AND first — minimum
@@ -3018,59 +2967,16 @@ object Dedup {
     * window, batch-sized). Returns the batch's columns. Kept-set is
     * deterministic, so it oracle-checks as plain SQL. */
   def probeNovelExact(index: FingerprintIndex, batch: DataFrame,
-      idCol: String, textCol: String, bloomSplit: Boolean = false)
-      : DataFrame = {
+      idCol: String, textCol: String): DataFrame =
     // Working columns are __graft-prefixed so a batch that already carries
     // an "fp"/"rn" column of its own passes through untouched.
-    val indexFps = index.fps.select(col("fp").as("__graft_fp"))
-    val novel = index.bloom match {
-      case Some(bf) if bloomSplit =>
-        // Sidecar split: bloom-false rows are DEFINITELY novel (no false
-        // negatives) and skip the index join; only the maybe-seen
-        // remainder — true dups plus the ~1% fpp — reaches the anti join.
-        // Output set is identical to the plain anti join.
-        //
-        // OPT-IN, because measurement contradicted the intuition
-        // (ScaleProbe d12bloom, 5M-fp index, 40× fixture): for BULK
-        // probes the bucketed anti join scans the index side exactly once
-        // regardless of batch novelty, so shrinking the batch side saves
-        // almost nothing while the split adds a cache pass and a union
-        // (4.4 s vs 3.7 s on a 200k all-novel batch). For a 512-doc
-        // micro-batch the split does what it promises — the maybe-side
-        // stage is empty at the sidecar's 1e-4 fpp and AQE's
-        // empty-relation propagation skips the join and the index scan —
-        // but on warm local parquet that scan costs ~0.3 s, so measured
-        // time is parity (0.59 vs 0.55 s). The split pays where the
-        // avoided scan is expensive: a cold or object-store index with
-        // thousands of bucket files, probed by small arrival batches —
-        // exactly the 100 TB serving regime this sidecar exists for.
-        // Bulk backfills should leave it off.
-        // The fingerprinted batch is persisted first: both branches read
-        // it, and recomputing the normalize+md5 projection per branch
-        // costs more than the join the split saves (measured 2× at the
-        // 40× probe). Sketch-cache release contract applies.
-        val bfp = persistSketch(batch.withColumn("__graft_fp",
-          TextOps.fingerprint(col(textCol))))
-        val might = graft.functions.GraftFunctions.bloomMightContain(
-          col("__graft_fp"), bf)
-        // NULL fingerprints (null text) route to the definitely-novel
-        // branch: the membership test is null-intolerant (evaluates to
-        // NULL, failing BOTH where branches), while the plain anti join
-        // KEEPS null-key rows — coalesce preserves the
-        // same-output-set contract across the flag.
-        bfp.where(coalesce(!might, lit(true))).unionByName(
-          bfp.where(coalesce(might, lit(false)))
-            .join(indexFps, Seq("__graft_fp"), "left_anti"))
-      case _ =>
-        batch.withColumn("__graft_fp", TextOps.fingerprint(col(textCol)))
-          .join(indexFps, Seq("__graft_fp"), "left_anti")
-    }
-    novel
+    batch.withColumn("__graft_fp", TextOps.fingerprint(col(textCol)))
+      .join(index.fps.select(col("fp").as("__graft_fp")), Seq("__graft_fp"),
+        "left_anti")
       .withColumn("__graft_rn", row_number().over(
         Window.partitionBy("__graft_fp").orderBy(col(idCol))))
       .where(col("__graft_rn") === 1)
       .drop("__graft_rn", "__graft_fp")
-  }
 
   /** Fold a kept batch into the index. A plain union stays distinct by
     * construction: [[probeNovelExact]]'s anti join guarantees kept
@@ -3080,11 +2986,8 @@ object Dedup {
     * near-dup index. */
   def extendFingerprintIndex(index: FingerprintIndex, keptBatch: DataFrame,
       textCol: String): FingerprintIndex =
-    // bloom cleared: it covers the pre-extension set only, and a stale
-    // filter's false "definitely novel" would readmit a duplicate.
     index.copy(fps = index.fps.select("fp").union(
-      keptBatch.select(TextOps.fingerprint(col(textCol)).as("fp"))),
-      bloom = None)
+      keptBatch.select(TextOps.fingerprint(col(textCol)).as("fp"))))
 
   // ───────────────────────── winnowing index ─────────────────────────────
 

@@ -40,13 +40,6 @@ object TextOps {
           i => concat_ws(" ", (1 to n).map(k => element_at(t, i + k)): _*))))
       .otherwise(array().cast("array<string>"))
 
-  /** MinHash signature of a shingle set: k independent hash functions
-    * h_j(s) = xxhash64(s, j), each taking the min over the set. One pass per
-    * row, no shuffle — signatures of a 100 TB corpus compute map-side. */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      j => array_min(transform(shingles, s => xxhash64(s, j))))
-
   /** 64-bit SimHash over the distinct tokens: per bit, sum +1/-1 weighted by
     * each token hash's bit, then keep the sign. Pure expression (SQL
     * higher-order functions), evaluated per row.
@@ -72,8 +65,6 @@ object TextOps {
     * oracle-comparable unrounded. */
   val stopwords: Seq[String] =
     Seq("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
-
-  def tokenCount(text: Column): Column = size(tokens(text)).cast("bigint")
 
   def stopwordCount(text: Column): Column =
     size(filter(tokens(text), t => t.isin(stopwords.map(x => x: Any): _*)))

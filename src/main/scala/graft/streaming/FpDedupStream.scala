@@ -43,8 +43,7 @@ object FpDedupStream {
         new DedupLoop.IndexState(idx, lastBatch)
       case None =>
         val built = Dedup.buildFingerprintIndex(corpus, idCol, textCol)
-        // No bloom sidecar at bootstrap either — see FpOps.save.
-        Dedup.saveFingerprintIndex(built, path, maxBloomItems = 0L)
+        Dedup.saveFingerprintIndex(built, path)
         // The bootstrap copy is superseded by the reloaded table-backed
         // artifact: release it so the long-lived stream holds ONE resident
         // fingerprint set, not two ([[NearDupStream.resume]] contract).
@@ -68,14 +67,7 @@ object FpDedupStream {
       Dedup.compactFpIndex(idx, releaseOld = false)
     def save(idx: FingerprintIndex, path: String, walId: Long,
         kept: DataFrame): Unit = {
-      // maxBloomItems = 0: the stream's probe never opts into the bloom
-      // split (its in-memory index drops the filter on the next extend
-      // anyway), so building a sidecar every compaction would be two
-      // extra index scans + a driver-resident filter for nothing. A
-      // serving process that wants the sidecar re-saves via
-      // saveFingerprintIndex directly.
-      Dedup.saveFingerprintIndex(idx, path, batchId = walId,
-        kept = Some(kept), maxBloomItems = 0L)
+      Dedup.saveFingerprintIndex(idx, path, batchId = walId, kept = Some(kept))
       // Prune the tombstones this snapshot already reflects
       // ([[Dedup.TombstoneLog]] checkpoint rules).
       Dedup.TombstoneLog.Fps.clear(idx.fps.sparkSession, path, upTo = walId)

@@ -163,13 +163,6 @@ object SketchKernels {
     sim
   }
 
-  /** Bloom membership of a UTF8String — binary-bytes hashing, identical
-    * to `putString`'s (putString == putBinary(utf8 bytes)), without the
-    * per-row java.lang.String allocation. */
-  def bloomMightContain(s: org.apache.spark.unsafe.types.UTF8String,
-      bf: org.apache.spark.util.sketch.BloomFilter): Boolean =
-    bf.mightContainBinary(s.getBytes)
-
   /** 64-bit average-hash over byte blocks: the payload splits into 64
     * equal-ish slices; bit b is set iff slice b's mean byte value exceeds
     * the global mean. Locality-sensitive in the byte domain — a local edit
@@ -338,38 +331,6 @@ case class ByteBlockHash(child: Expression)
   * object), so corpus-side IVF list assignment is one fused
   * nlist × dim multiply-add loop per row — no per-row struct/array
   * allocation, no interpreted dispatch. */
-/** string → bloom-filter membership (boolean) against a baked
-  * `org.apache.spark.util.sketch.BloomFilter` — the probe-side sidecar
-  * test: false means DEFINITELY absent (no false negatives), so a probe
-  * can skip the index anti-join for the definitely-novel majority and
-  * join only the maybe-seen remainder. The filter rides the codegen
-  * references array (same broadcast-with-the-closure mechanism as the
-  * centroid matrices); membership hashes via `mightContainBinary` on the
-  * UTF-8 bytes, identical to `putString`'s hashing, so build and probe
-  * agree byte-for-byte. */
-case class BloomMightContain(child: Expression,
-    bloom: org.apache.spark.util.sketch.BloomFilter)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_bloom_might_contain"
-
-  override protected def nullSafeEval(t: Any): Any =
-    SketchKernels.bloomMightContain(
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], bloom)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bf = ctx.addReferenceObj("bloomFilter", bloom,
-      "org.apache.spark.util.sketch.BloomFilter")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.SketchKernels.bloomMightContain($c, $bf)")
-  }
-
-  override protected def withNewChildInternal(nc: Expression): Expression =
-    copy(child = nc)
-}
-
 case class NearestCentroid(child: Expression, cents: Seq[Seq[Double]])
     extends UnaryExpression with ExpectsInputTypes {
   require(cents.nonEmpty && cents.forall(_.length == cents.head.length),

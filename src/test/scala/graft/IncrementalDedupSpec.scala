@@ -456,6 +456,13 @@ class IncrementalDedupSpec extends SparkSpecBase {
 
     val dir = java.nio.file.Files.createTempDirectory("fpidx").toString
     Dedup.saveFingerprintIndex(built, dir)
+    // Older builds also wrote a bloom filter over the generation's
+    // fingerprints to g<N>/bloom; the loader must read past such a file.
+    val legacy = java.nio.file.Paths.get(dir, "g0", "bloom")
+    val out = java.nio.file.Files.newOutputStream(legacy)
+    try built.fps.stat.bloomFilter("fp", built.fps.count(), 0.0001)
+      .writeTo(out)
+    finally out.close()
     Dedup.releaseSketchCaches()
     val loaded = Dedup.loadFingerprintIndex(spark, dir)
     val replay = Dedup.probeNovelExact(loaded, batch, "doc_id", "text")
@@ -470,6 +477,14 @@ class IncrementalDedupSpec extends SparkSpecBase {
     val extended = Dedup.extendFingerprintIndex(loaded,
       Dedup.probeNovelExact(loaded, batch, "doc_id", "text"), "text")
     assert(Dedup.probeNovelExact(extended, batch, "doc_id", "text").isEmpty)
+
+    // One prior generation is retained, so g0 (legacy file included) goes
+    // at the save that writes g2.
+    Dedup.saveFingerprintIndex(built, dir)
+    assert(java.nio.file.Files.exists(legacy))
+    Dedup.saveFingerprintIndex(built, dir)
+    assert(!java.nio.file.Files.exists(legacy.getParent),
+      "pruning must delete g0 together with its legacy bloom file")
     Dedup.releaseSketchCaches()
   }
 
@@ -514,46 +529,6 @@ class IncrementalDedupSpec extends SparkSpecBase {
       spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
       Dedup.releaseSketchCaches()
     }
-  }
-
-  test("fingerprint index bloom sidecar: loaded filter splits the probe, same kept-set") {
-    val docs = spark.table("documents")
-    val corpus = docs.where(col("doc_id") % 5 =!= 0).select("doc_id", "text")
-    val batch = docs.where(col("doc_id") % 5 === 0).select("doc_id", "text")
-      .union(docs.where(col("doc_id") % 25 === 1)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-    val built = Dedup.buildFingerprintIndex(corpus, "doc_id", "text")
-    val noBloom = Dedup.probeNovelExact(built, batch, "doc_id", "text")
-      .collect().map(_.getAs[Long]("doc_id")).toSet
-
-    val dir = java.nio.file.Files.createTempDirectory("fpbloom").toString
-    Dedup.saveFingerprintIndex(built, dir)
-    Dedup.releaseSketchCaches()
-    val loaded = Dedup.loadFingerprintIndex(spark, dir)
-    assert(loaded.bloom.isDefined, "save must write the bloom sidecar")
-    val probe = Dedup.probeNovelExact(loaded, batch, "doc_id", "text",
-      bloomSplit = true)
-    assert(probe.queryExecution.executedPlan.toString
-        .contains("graft_bloom_might_contain"),
-      "bloom-split probe must plan the sidecar split")
-    assert(probe.collect().map(_.getAs[Long]("doc_id")).toSet == noBloom,
-      "sidecar split must keep exactly the plain anti-join's set")
-    // Default (bulk) probe ignores the sidecar — the split is opt-in.
-    assert(!Dedup.probeNovelExact(loaded, batch, "doc_id", "text")
-      .queryExecution.executedPlan.toString
-      .contains("graft_bloom_might_contain"))
-
-    // Extension invalidates the filter (it covers the pre-extension set).
-    val extended = Dedup.extendFingerprintIndex(loaded,
-      Dedup.probeNovelExact(loaded, batch, "doc_id", "text"), "text")
-    assert(extended.bloom.isEmpty, "extend must clear the stale bloom")
-
-    // Cap 0 disables the sidecar entirely.
-    val dir2 = java.nio.file.Files.createTempDirectory("fpnobloom").toString
-    Dedup.saveFingerprintIndex(built, dir2, maxBloomItems = 0L)
-    Dedup.releaseSketchCaches()
-    assert(Dedup.loadFingerprintIndex(spark, dir2).bloom.isEmpty)
-    Dedup.releaseSketchCaches()
   }
 
   test("winnow index: saved + reloaded probe matches one-shot winnowing cross-pairs") {

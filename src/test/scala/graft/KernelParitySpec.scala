@@ -13,9 +13,8 @@ import graft.functions.GraftFunctions
   * indexes persist (shingle set, MinHash, SimHash, winnow, rolling hashes,
   * byte-block hash), the three tokenizer kernels (`graft_unigram_encode`,
   * `graft_bpe_merge_pair`, `graft_bpe_encode`), the PII scrub
-  * (`graft_regex_scrub`), the bloom sidecar probe
-  * (`graft_bloom_might_contain`) and the z-order key (`graft_zvalue`) agree
-  * bit for bit on edge inputs: null operands, null elements, literal
+  * (`graft_regex_scrub`) and the z-order key (`graft_zvalue`) agree bit for
+  * bit on edge inputs: null operands, null elements, literal
   * (`GenericArrayData`) operands, empty arrays, empty strings, mismatched
   * lengths, NaN/±Inf elements, ties, `Long.MinValue`/`MaxValue` words,
   * sorted sets with no or full overlap, inputs shorter than one k-gram,
@@ -299,7 +298,7 @@ class KernelParitySpec extends SparkSpecBase {
     assertParity(df, GraftFunctions.byteBlockHash(col("b")))
   }
 
-  // Tokenizer, scrub, bloom-probe and z-order kernels.
+  // Tokenizer, scrub and z-order kernels.
 
   /** Word lists: null, empty, an empty word, astral-plane and
     * combining-mark words, and words some pieces or merges cover, some
@@ -356,22 +355,6 @@ class KernelParitySpec extends SparkSpecBase {
     assertParity(df,
       GraftFunctions.regexScrub(col("t"), graft.operators.TextOps.piiPatterns),
       GraftFunctions.regexScrub(col("t"), Seq("aa" -> "$1\\", "a" -> "<A>", "^" -> "^", "x*" -> "-")))
-  }
-
-  test("graft_bloom_might_contain: null, empty, astral, combining, members and non-members") {
-    import spark.implicits._
-    val members = org.apache.spark.util.sketch.BloomFilter.create(64, 0.01)
-    Seq("", "ab", "cafe\u0301 noe\u0308l n\u0303o\u0303 e\u0301e\u0301e\u0301").foreach(members.putString)
-    val empty = org.apache.spark.util.sketch.BloomFilter.create(64, 0.01)
-    val df = (texts ++ Seq(Some("a"), Some("ab "))).toDF("t")
-    val Seq(interpreted, codegen) = bothPaths(df,
-      GraftFunctions.bloomMightContain(col("t"), members),
-      GraftFunctions.bloomMightContain(col("t"), empty))
-    assert(interpreted == codegen)
-    // Members are always found; the empty filter finds nothing.
-    val rows = interpreted.map(_.asInstanceOf[Seq[Any]])
-    assert(rows.take(3) == Seq(Seq(null, null), Seq(true, false), Seq(true, false)))
-    assert(rows.tail.forall(_(1) == false))
   }
 
   test("graft_zvalue: null, null elements, NaN/±Inf, values on and between boundaries, literals") {

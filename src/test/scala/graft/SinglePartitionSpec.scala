@@ -18,9 +18,9 @@ import scala.jdk.CollectionConverters._
   * same tables (which the path skips), plan no Exchange and collect with no
   * job (its one partition is iterated in the calling thread), while a
   * `noop` write of the same frame still runs exactly one job;
-  * project/filter reads stay zero-job local scans; a plain top-k read
-  * keeps its one job; frames over `spark.sql.autoBroadcastJoinThreshold`
-  * keep Spark's own plan.
+  * project/filter reads stay zero-job local scans, and a plain top-k read
+  * takes the single-partition path too; frames over
+  * `spark.sql.autoBroadcastJoinThreshold` keep Spark's own plan.
   */
 class SinglePartitionSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
@@ -222,14 +222,22 @@ class SinglePartitionSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("order by + limit keeps its TakeOrderedAndProject plan") {
+  test("order by + limit reads its one partition and collects with no job") {
+    // k ties (two values over ~345 rows) and is null on a third of them;
+    // DC is unique, so the order is total and the limit crosses from the
+    // null rows into the k = 1 ties.
+    val sql = "select X, Y, DC, temp, nullif(X % 3, 0) as k from forest_fires " +
+      "order by k nulls first, DC desc limit 200"
+    val expected = withTables(parquet = true)(Engine.query(spark, sql).collect().toSeq)
     withTables(parquet = false) {
-      val df = Engine.query(spark, "select X, Y, DC, temp from forest_fires " +
-        "order by DC desc, temp desc, X, Y limit 10")
+      val df = Engine.query(spark, sql)
       val (rows, jobs) = collectCountingJobs(df)
-      assert(rows.length == 10 && jobs == 1)
-      assert(df.queryExecution.analyzed.collectFirst { case r: Repartition => r }.isEmpty)
-      assert(df.queryExecution.executedPlan.toString.contains("TakeOrderedAndProject"))
+      val plan = df.queryExecution.executedPlan
+      assert(rows.toSeq == expected && rows.length == 200)
+      assert(rows.head.isNullAt(4) && !rows.last.isNullAt(4))
+      assert(df.queryExecution.analyzed.collectFirst { case r: Repartition => r }.nonEmpty)
+      assert(plan.toString.contains("TakeOrderedAndProject"), plan.toString)
+      assert(jobs == 0, plan.toString)
     }
   }
 

@@ -2826,7 +2826,7 @@ class StreamingSpec extends SparkSpecBase {
     // and the re-admission), but the process dies before
     // TombstoneLog.clear — the applied tombstone survives on disk.
     Dedup.saveFingerprintIndex(s1.index, dir, batchId = 1L,
-      kept = Some(Seq(20L).toDF("doc_id")), maxBloomItems = 0L)
+      kept = Some(Seq(20L).toDF("doc_id")))
 
     // Restore: the stale tombstone (afterBatch=0 < snapshot batch 1) must
     // be SKIPPED — replaying it after the snapshot would delete the

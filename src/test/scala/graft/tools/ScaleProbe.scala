@@ -121,51 +121,6 @@ object ScaleProbe {
     time("d12_dedup_fp_index pass2 (probe only)") {
       graft.SparkEntry.queries("d12_dedup_fp_index")(spark, sfDir)
     }
-    if (wanted("d12bloom")) {
-      // Bloom-sidecar isolation: replication never grows DISTINCT content
-      // (the gate's index stays sketch-small however big rep is), so the
-      // sidecar's target regime — a multi-million-fp index probed by a
-      // mostly-novel batch — needs content-distinct synthesis: suffix the
-      // text with a per-copy tag. Same probe both times; only the sidecar
-      // differs.
-      import graft.operators.{Dedup => D}
-      val bigCorpus = docs.crossJoin(
-          spark.range(25).select(col("id").as("__c")))
-        .select(
-          (col("doc_id") * 100 + col("__c")).as("doc_id"),
-          concat_ws(" ", col("text"), col("doc_id"), col("__c")).as("text"))
-      val novelBatch = docs.select(col("doc_id"),
-        concat_ws(" ", col("text"), lit("novel-arrival"), col("doc_id"))
-          .as("text"))
-      val built = D.buildFingerprintIndex(bigCorpus, "doc_id", "text")
-      val dB = java.nio.file.Files.createTempDirectory("spfpb").toString
-      val dN = java.nio.file.Files.createTempDirectory("spfpn").toString
-      time("d12bloom save with sidecar (5M fps)") {
-        D.saveFingerprintIndex(built, dB); spark.emptyDataFrame }
-      D.saveFingerprintIndex(built, dN, maxBloomItems = 0)
-      D.releaseSketchCaches()
-      val withB = D.loadFingerprintIndex(spark, dB)
-      val noB = D.loadFingerprintIndex(spark, dN)
-      println(s"[scale] d12bloom sidecar loaded: ${withB.bloom.isDefined}")
-      // Bulk regime (the measurement that made the split OPT-IN: the
-      // bucketed anti join scans the index once either way, so the split
-      // only adds a cache pass + union here).
-      time("d12bloom probe 200k all-novel batch, NO sidecar") {
-        D.probeNovelExact(noB, novelBatch, "doc_id", "text") }
-      time("d12bloom probe 200k all-novel batch, bloom split") {
-        D.probeNovelExact(withB, novelBatch, "doc_id", "text",
-          bloomSplit = true) }
-      // Micro-batch regime (the split's target): a small arrival batch
-      // against the 5M-fp index — the maybe-side shuffle stage collapses
-      // and AQE's empty-relation propagation skips the index scan.
-      val microBatch = novelBatch.limit(512)
-      time("d12bloom probe 512-doc batch, NO sidecar") {
-        D.probeNovelExact(noB, microBatch, "doc_id", "text") }
-      time("d12bloom probe 512-doc batch, bloom split") {
-        D.probeNovelExact(withB, microBatch, "doc_id", "text",
-          bloomSplit = true) }
-      D.releaseSketchCaches()
-    }
     time("d13_dedup_winnow_index pass1 (build+save+load+probe)") {
       graft.SparkEntry.queries("d13_dedup_winnow_index")(spark, sfDir)
     }
